@@ -318,14 +318,22 @@ def write_sidecar(out: dict, path: str | None = None) -> None:
     round-over-round comparison was lost to a truncated stdout capture.
     The printed one-line contract is unchanged; the same JSON is ALSO
     written to bench_last.json next to this script so a tail cut can
-    never null the comparison again. Best-effort: a read-only checkout
-    must not fail the bench."""
+    never null the comparison again. The JSON goes to a temp file in the
+    same dir first and is then renamed over the target, so a reader (or
+    a killed run) never sees a half-written file. Best-effort: a
+    read-only checkout must not fail the bench."""
+    path = path or os.path.join(REPO_ROOT, "bench_last.json")
+    tmp = f"{path}.{os.getpid()}.tmp"
     try:
-        with open(path or os.path.join(REPO_ROOT, "bench_last.json"), "w") as f:
+        with open(tmp, "w") as f:
             json.dump(out, f)
             f.write("\n")
+        os.replace(tmp, path)
     except OSError:
-        pass
+        try:
+            os.remove(tmp)
+        except OSError:
+            pass
 
 
 def main() -> None:

@@ -159,7 +159,7 @@ def drain_update_mode(spark) -> None:
 def _delta_stream(spark, cdf: bool) -> None:
     from sparkstreamingtwitter_presidential_spark.queries.lakehouse import (
         _cdf_staged_delta,
-        _dml_staged_delta,
+        _staged_delta,
     )
     from sparkstreamingtwitter_presidential_spark.io import load_table
     from sparkstreamingtwitter_presidential_spark.sources.delta import write_delta
@@ -177,7 +177,7 @@ def _delta_stream(spark, cdf: bool) -> None:
             for m in range(3):
                 write_delta(ev.filter(f"event_id % 3 = {m}"), table, mode="append")
 
-        table = _dml_staged_delta(spark, SF_DIR, "stream_src", build)
+        table = _staged_delta(spark, SF_DIR, "stream_src", build)
     register_delta_stream(spark)
     scratch = tempfile.mkdtemp(prefix="ssp_r16_prof_")
     out = os.path.join(scratch, "out")

@@ -1,4 +1,4 @@
-"""Table loading and temp-view registration for the fixture tables.
+"""Table loading for the fixture tables.
 
 The driver materializes a TPC-H-ish star schema plus stream/LLM tables as
 parquet under ``/root/testdata/sf{0.001,0.01,0.1}/`` (TESTDATA.md). This
@@ -8,8 +8,8 @@ paths.
 Scan-path policy (the 100 TB part): always ``spark.read.parquet`` with no
 schema inference — Catalyst then gets vectorized columnar reads, column
 pruning into ``ReadSchema`` and predicate pushdown into ``PushedFilters``
-for free. Views are plain temp views over the scans (no materialization),
-so every SQL query still prunes/pushes down through them.
+for free. SQL queries that register a scan as a temp view still prune
+and push down through it.
 """
 
 from __future__ import annotations
@@ -49,13 +49,16 @@ def scan_cache_key(path: str) -> tuple | None:
     For a plain file: (path, mtime_ns, size). For a *directory* table the
     directory's own stat is not enough — its mtime changes on entry
     create/delete/rename but NOT on an in-place overwrite of an existing
-    part file — so the key additionally folds in the entry count and the
-    newest child mtime (one extra listdir; children are stat'd non-
-    recursively, which covers parquet dirs whose data files are direct
-    children — every fixture layout here). Any rewrite, append, or
-    in-place part-file overwrite therefore misses. Returns None
-    (uncacheable) when the path is not statable — the plain read then
-    raises its own error.
+    part file — so the key additionally folds in the entry count, the
+    newest child mtime and the total child size (one extra listdir;
+    children are stat'd non-recursively, which covers parquet dirs whose
+    data files are direct children — every fixture layout here). Any
+    rewrite, append, or in-place part-file overwrite therefore misses,
+    including one that preserves mtimes (``cp -p``, ``rsync -t``) but
+    changes a size. Remaining gap: an overwrite that keeps every child's
+    mtime AND size still hits the stale memo. Returns None (uncacheable)
+    when the path is not statable — the plain read then raises its own
+    error.
     """
     try:
         st = os.stat(path)
@@ -65,17 +68,16 @@ def scan_cache_key(path: str) -> tuple | None:
     if os.path.isdir(path):
         try:
             with os.scandir(path) as it:
-                n = 0
-                newest = 0
+                n = newest = total = 0
                 for entry in it:
                     n += 1
                     try:
-                        m = entry.stat().st_mtime_ns
+                        est = entry.stat()
                     except OSError:
                         return None
-                    if m > newest:
-                        newest = m
-            key = key + (n, newest)
+                    newest = max(newest, est.st_mtime_ns)
+                    total += est.st_size
+            key = key + (n, newest, total)
         except OSError:
             return None
     return key
@@ -96,10 +98,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     memo holds only the unresolved DataFrame (file listing + schema —
     never rows; every action still scans parquet), lives on the session
     object so it dies with the session, and keys on (path, mtime_ns,
-    size) — plus entry count and newest child mtime for directory
-    tables — so a rewritten table misses. This is the same session-scoped
-    metadata-cache policy as hudi._archive_metas_cached and Spark's own
-    temp-view catalog.
+    size) — plus entry count, newest child mtime and total child size
+    for directory tables — so a rewritten table misses. This is the
+    same session-scoped metadata-cache policy as
+    hudi._archive_metas_cached and Spark's own temp-view catalog.
 
     The ``events`` fixture's ``ts`` has shipped in two physical shapes,
     and this is the ONE place that normalizes both to a session-tz
@@ -141,17 +143,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         cache[key] = df
     return df
 
-
-def register_views(spark: SparkSession, sf_dir: str,
-                   tables: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    """Register each fixture table as a temp view named after itself.
-
-    Returns the name->DataFrame map so callers can keep using the
-    DataFrame API on the same scans.
-    """
-    out: dict[str, DataFrame] = {}
-    for name in tables:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -198,30 +198,6 @@ def jaccard_pairs(
     )
 
 
-def shingle_hashes(sh_col: Column) -> Column:
-    """xxhash64 -> pmod p of each shingle. Materialize this as a column
-    before fanning out to the k signature expressions — otherwise each
-    of the k array_min lambdas would recompute every shingle hash."""
-    return F.transform(sh_col, lambda s: F.pmod(F.xxhash64(s), F.lit(MINHASH_PRIME)))
-
-
-def minhash_signature_cols(hs_col: Column, k: int = 32) -> list[Column]:
-    """k MinHash signature values from a MATERIALIZED shingle-hash array
-    column: each permutation is an array_min over an affine transform —
-    k*|sh| cheap ops, one scan, no shuffle."""
-    def _affine(a: int, b: int):
-        # closure factory: PySpark inspects lambda arity, so no defaults
-        return lambda x: F.pmod(F.lit(a) * x + F.lit(b), F.lit(MINHASH_PRIME))
-
-    out = []
-    for i in range(k):
-        ai, bi = MINHASH_COEFFS[i]
-        out.append(
-            F.array_min(F.transform(hs_col, _affine(ai, bi))).alias(f"mh_{i}")
-        )
-    return out
-
-
 def lsh_signature_table(
     df: DataFrame,
     id_col: str,

@@ -6,22 +6,21 @@ end-to-end write->log->snapshot-read fidelity, including timestamp
 microseconds (min/max unix_micros) and partition-value recovery (the
 group key IS the partition column, injected from the log).
 
-The staged table is cached per sf_dir under /tmp (content is
-deterministic); staging uses write-to-unique-dir + atomic rename so
-concurrent first calls cannot interleave."""
+Every staged table is cached per (sf_dir, schema) under /tmp (content
+is deterministic) and built once through ``queries.staging.staged``."""
 
 from __future__ import annotations
 
 import hashlib
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkstreamingtwitter_presidential_spark.io import load_table
 from sparkstreamingtwitter_presidential_spark.queries.registry import query
+from sparkstreamingtwitter_presidential_spark.queries.staging import staged
 from sparkstreamingtwitter_presidential_spark.sources.delta import (
     read_delta,
     write_delta,
@@ -36,69 +35,27 @@ def _events_cache_key(spark: SparkSession, sf_dir: str) -> str:
     return hashlib.md5(f"{sf_dir}|{schema}".encode()).hexdigest()[:12]
 
 
-def _sweep_superseded_staging(table: str) -> None:
-    """Version-aware cleanup of this staging family's SUPERSEDED keys
-    (r15 verdict item 7). A staged dir is named ``<stem><version>_<key>``
-    (key = the 12-hex cache hash); bumping the version in code (e.g.
-    ``ssp_iceberg_specevo2_*`` → ``ssp_iceberg_specevo3_*``) used to
-    orphan every older-version dir in /tmp until reboot. Called only
-    after a successful COLD build (never on the warm path, so timed
-    reads are untouched): removes sibling dirs of the same family with
-    a LOWER version — plus their ``.staging-*`` / ``.stale``
-    leftovers — while keeping same-version dirs under other keys
-    (live caches for other sf_dirs/schemas) and NEWER versions (an
-    old checkout must never delete a newer build's cache)."""
-    import re
-
-    root = os.path.dirname(table) or "/tmp"
-    base = os.path.basename(table)
-    m = re.match(r"^(?P<stem>ssp_.*?)(?P<ver>\d*)_(?P<key>[0-9a-f]{12})$", base)
-    if m is None:
-        return
-    stem, cur = m.group("stem"), int(m.group("ver") or 0)
-    pat = re.compile(
-        rf"^{re.escape(stem)}(?P<ver>\d*)_[0-9a-f]{{12}}"
-        r"(?:\.staging-.*|\.stale)?$"
-    )
-    try:
-        names = os.listdir(root)
-    except OSError:
-        return
-    for n in names:
-        mm = pat.match(n)
-        if mm is None or int(mm.group("ver") or 0) >= cur:
-            continue
-        full = os.path.join(root, n)
-        if os.path.isdir(full):
-            shutil.rmtree(full, ignore_errors=True)
-        else:
-            try:
-                os.remove(full)
-            except OSError:
-                pass
+def _staged_delta(spark: SparkSession, sf_dir: str, tag: str, build) -> str:
+    """Stage a Delta table derived from events once per (sf_dir,
+    schema) at ``/tmp/ssp_delta_<tag>_<key>``: ``build(spark, table)``
+    creates the table and applies its (deterministic) DML."""
+    key = _events_cache_key(spark, sf_dir)
+    return staged(spark, f"/tmp/ssp_delta_{tag}_{key}", build)
 
 
 def _staged_events_delta(spark: SparkSession, sf_dir: str) -> str:
-    key = _events_cache_key(spark, sf_dir)
-    table = f"/tmp/ssp_delta_events_{key}"
-    if not os.path.isdir(os.path.join(table, "_delta_log")):
-        staging = f"{table}.staging-{uuid.uuid4().hex}"
+    def build(spark: SparkSession, table: str) -> None:
         ev = load_table(spark, sf_dir, "events")
-        write_delta(ev, staging, mode="append", partition_by=["event_type"])
-        try:
-            os.rename(staging, table)
-        except OSError:
-            shutil.rmtree(staging, ignore_errors=True)  # lost the race
-        _sweep_superseded_staging(table)
-    return table
+        write_delta(ev, table, mode="append", partition_by=["event_type"])
+
+    return _staged_delta(spark, sf_dir, "events", build)
 
 
 def _streamed_events_delta(spark: SparkSession, sf_dir: str) -> str:
     """Drain the events file-replay stream through the exactly-once
     Delta sink (streaming/delta_sink.py) once per sf_dir; the resulting
-    table is deterministic (full drain, append-only), so it is cached
-    under /tmp with the same unique-staging + atomic-rename pattern as
-    the batch staging above."""
+    table is deterministic (full drain, append-only). The checkpoint
+    lives in the table's ``_ckpt`` dir, which Delta reads never list."""
     from sparkstreamingtwitter_presidential_spark.queries.streaming import _staged
     from sparkstreamingtwitter_presidential_spark.sources.replay import (
         read_events_stream,
@@ -108,14 +65,13 @@ def _streamed_events_delta(spark: SparkSession, sf_dir: str) -> str:
     )
 
     key = _events_cache_key(spark, sf_dir)
-    table = f"/tmp/ssp_delta_stream_{key}"
-    if not os.path.isdir(os.path.join(table, "_delta_log")):
-        scratch = f"{table}.staging-{uuid.uuid4().hex}"
+
+    def build(spark: SparkSession, table: str) -> None:
         stream = read_events_stream(spark, _staged(spark, sf_dir))
         q = write_stream_to_delta(
             stream,
-            os.path.join(scratch, "table"),
-            os.path.join(scratch, "ckpt"),
+            table,
+            os.path.join(table, "_ckpt"),
             app_id=f"ssp_stream_ingest_{key}",
             partition_by=["event_type"],
         )
@@ -124,13 +80,8 @@ def _streamed_events_delta(spark: SparkSession, sf_dir: str) -> str:
         finally:
             q.stop()
             q.awaitTermination(30)
-        try:
-            os.rename(os.path.join(scratch, "table"), table)
-        except OSError:
-            pass  # lost the race; winner's table is equivalent
-        shutil.rmtree(scratch, ignore_errors=True)
-        _sweep_superseded_staging(table)
-    return table
+
+    return _staged_delta(spark, sf_dir, "stream", build)
 
 
 @query(
@@ -156,25 +107,6 @@ def streaming_delta_sink_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_distinct("user_id").alias("users"),
         (F.floor(F.sum("value") * 100 + F.lit(0.5)) / 100).alias("total_value"),
     )
-
-
-def _dml_staged_delta(spark: SparkSession, sf_dir: str, tag: str, build) -> str:
-    """Stage a mutated copy of the events Delta table once per
-    (sf_dir, schema): ``build(spark, staging_path)`` creates the table
-    and applies its (deterministic) DML; unique-staging + atomic rename
-    makes racing first calls safe, schema keying makes reader-side type
-    fixes invalidate the cache (r3 lesson)."""
-    key = _events_cache_key(spark, sf_dir)
-    table = f"/tmp/ssp_delta_{tag}_{key}"
-    if not os.path.isdir(os.path.join(table, "_delta_log")):
-        staging = f"{table}.staging-{uuid.uuid4().hex}"
-        build(spark, staging)
-        try:
-            os.rename(staging, table)
-        except OSError:
-            shutil.rmtree(staging, ignore_errors=True)  # lost the race
-        _sweep_superseded_staging(table)
-    return table
 
 
 def _agg_by_type(ev: DataFrame) -> DataFrame:
@@ -222,7 +154,7 @@ def lakehouse_delta_merge_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, table, updates.unionByName(inserts), keys=["event_id"]
         )
 
-    table = _dml_staged_delta(spark, sf_dir, "merge", build)
+    table = _staged_delta(spark, sf_dir, "merge", build)
     return _agg_by_type(read_delta(spark, table))
 
 
@@ -258,7 +190,7 @@ def lakehouse_delta_delete_update_agg(
         delete_delta(spark, table, "event_type = 'error'")
         update_delta(spark, table, {"value": "value + 1"}, "user_id % 5 = 0")
 
-    table = _dml_staged_delta(spark, sf_dir, "dml", build)
+    table = _staged_delta(spark, sf_dir, "dml", build)
     return _agg_by_type(read_delta(spark, table))
 
 
@@ -276,7 +208,7 @@ def lakehouse_delta_delete_update_agg(
     "Staging RAISES if compaction fails to reduce the live file count",
 )
 def lakehouse_delta_optimize_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table = _dml_staged_delta(spark, sf_dir, "opt", _build_opt_table(sf_dir))
+    table = _staged_delta(spark, sf_dir, "opt", _build_opt_table(sf_dir))
     return _agg_by_type(read_delta(spark, table))
 
 
@@ -334,7 +266,7 @@ def _build_opt_table(sf_dir: str):
 def lakehouse_delta_changes_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkstreamingtwitter_presidential_spark.sources.delta import delta_changes
 
-    table = _dml_staged_delta(spark, sf_dir, "opt", _build_opt_table(sf_dir))
+    table = _staged_delta(spark, sf_dir, "opt", _build_opt_table(sf_dir))
     return _agg_by_type(delta_changes(spark, table, from_version=1))
 
 
@@ -361,7 +293,7 @@ def lakehouse_delta_pipeline_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         drain_delta_incremental,
     )
 
-    source = _dml_staged_delta(spark, sf_dir, "opt", _build_opt_table(sf_dir))
+    source = _staged_delta(spark, sf_dir, "opt", _build_opt_table(sf_dir))
 
     def build(spark: SparkSession, dest: str) -> None:
         drained = drain_delta_incremental(
@@ -378,7 +310,7 @@ def lakehouse_delta_pipeline_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         if drained < 4:  # 4 append commits must each be their own poll
             raise RuntimeError(f"expected >=4 drained commits, got {drained}")
 
-    dest = _dml_staged_delta(spark, sf_dir, "etl", build)
+    dest = _staged_delta(spark, sf_dir, "etl", build)
     return _agg_by_type(read_delta(spark, dest))
 
 
@@ -428,7 +360,7 @@ def lakehouse_delta_skipping_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             cluster_by=["event_id"],
         )
 
-    table = _dml_staged_delta(spark, sf_dir, "skip", build)
+    table = _staged_delta(spark, sf_dir, "skip", build)
     ranges = {"event_id": (100, 299)}
     files = _replay_log(table, None).files
     kept = sum(1 for a in files.values() if not file_skips(a, ranges))
@@ -484,7 +416,7 @@ def lakehouse_delta_zorder_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             zorder_by=["event_id", "user_id"],
         )
 
-    table = _dml_staged_delta(spark, sf_dir, "zorder", build)
+    table = _staged_delta(spark, sf_dir, "zorder", build)
     ranges = {"user_id": (0, 4)}
     files = _replay_log(table, None).files
     kept = sum(1 for a in files.values() if not file_skips(a, ranges))
@@ -561,7 +493,7 @@ def lakehouse_delta_evolution_agg(spark: SparkSession, sf_dir: str) -> DataFrame
                 "VACUUM deleted nothing despite tombstoned partition"
             )
 
-    table = _dml_staged_delta(spark, sf_dir, "evolve", build)
+    table = _staged_delta(spark, sf_dir, "evolve", build)
     ev = read_delta(spark, table)
     return ev.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -611,23 +543,24 @@ def _upserted_events_delta(spark: SparkSession, sf_dir: str) -> str:
     micro-batch, marker and rewrite in one commit). Keys are unique
     per feed (event_id), so the final state is order-independent:
     every event exactly once with its true value — stale rows
-    updated, the rest inserted."""
+    updated, the rest inserted. The feed and the checkpoint live in
+    the table's ``_feed`` and ``_ckpt`` dirs, which Delta reads never
+    list."""
     from sparkstreamingtwitter_presidential_spark.streaming.delta_upsert import (
         upsert_stream_to_delta,
     )
 
     cols = ["event_id", "user_id", "event_type", "value"]
     key = _events_cache_key(spark, sf_dir)
-    table = f"/tmp/ssp_delta_upsert_{key}"
-    if not os.path.isdir(os.path.join(table, "_delta_log")):
-        scratch = f"{table}.staging-{uuid.uuid4().hex}"
+
+    def build(spark: SparkSession, table: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(*cols)
-        feed = os.path.join(scratch, "feed")
-        ev.repartition(4).write.parquet(feed)
         seed = ev.filter("event_id % 3 = 0").withColumn(
             "value", F.lit(-1.0)
         ).select(*cols)
-        write_delta(seed, os.path.join(scratch, "table"))
+        write_delta(seed, table)
+        feed = os.path.join(table, "_feed")
+        ev.repartition(4).write.parquet(feed)
         stream = (
             spark.readStream.schema(
                 "event_id long, user_id long, event_type string, value double"
@@ -637,8 +570,8 @@ def _upserted_events_delta(spark: SparkSession, sf_dir: str) -> str:
         )
         q = upsert_stream_to_delta(
             stream,
-            os.path.join(scratch, "table"),
-            os.path.join(scratch, "ckpt"),
+            table,
+            os.path.join(table, "_ckpt"),
             keys=["event_id"],
             app_id=f"ssp_upsert_{key}",
         )
@@ -647,13 +580,8 @@ def _upserted_events_delta(spark: SparkSession, sf_dir: str) -> str:
         finally:
             q.stop()
             q.awaitTermination(30)
-        try:
-            os.rename(os.path.join(scratch, "table"), table)
-        except OSError:
-            pass  # lost the race; winner's table is equivalent
-        shutil.rmtree(scratch, ignore_errors=True)
-        _sweep_superseded_staging(table)
-    return table
+
+    return _staged_delta(spark, sf_dir, "upsert", build)
 
 
 @query(
@@ -722,7 +650,7 @@ def streaming_delta_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ev.filter(f"event_id % 3 = {m}"), table, mode="append"
             )
 
-    table = _dml_staged_delta(spark, sf_dir, "stream_src", build)
+    table = _staged_delta(spark, sf_dir, "stream_src", build)
     register_delta_stream(spark)
     scratch = tempfile.mkdtemp(prefix="ssp_delta_src_drain_")
     out = os.path.join(scratch, "out")
@@ -818,7 +746,7 @@ def lakehouse_delta_row_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, table, updates.unionByName(inserts), keys=["event_id"]
         )
 
-    table = _dml_staged_delta(spark, sf_dir, "merge", build)
+    table = _staged_delta(spark, sf_dir, "merge", build)
     v = table_version(table)  # the MERGE commit (v0 = initial append)
     changes = delta_row_changes(spark, table, v, ["event_id"])
     return changes.select(
@@ -859,7 +787,7 @@ def lakehouse_delta_time_travel_agg(spark: SparkSession, sf_dir: str) -> DataFra
             spark, table, updates.unionByName(inserts), keys=["event_id"]
         )
 
-    table = _dml_staged_delta(spark, sf_dir, "merge", build)
+    table = _staged_delta(spark, sf_dir, "merge", build)
     return _agg_by_type(read_delta(spark, table, version=0))
 
 
@@ -956,7 +884,7 @@ def lakehouse_delta_dv_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(commit, "w") as fh:
             fh.write("\n".join(lines) + "\n")
 
-    table = _dml_staged_delta(spark, sf_dir, "dv", build)
+    table = _staged_delta(spark, sf_dir, "dv", build)
     live = _replay_log(table, None)
     n_dv = sum(
         1 for a in live.files.values() if a.get("deletionVector")
@@ -995,7 +923,7 @@ def _cdf_staged_delta(spark: SparkSession, sf_dir: str) -> str:
         update_delta(spark, table, {"value": "value * 2"}, "event_id % 7 = 0")
         delete_delta(spark, table, "event_id % 5 = 0")
 
-    return _dml_staged_delta(spark, sf_dir, "cdf", build)
+    return _staged_delta(spark, sf_dir, "cdf", build)
 
 
 @query(
@@ -1214,7 +1142,7 @@ def lakehouse_delta_restore_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_delta(bad, table, mode="overwrite")
         restore_delta(spark, table, 0)
 
-    table = _dml_staged_delta(spark, sf_dir, "restore", build)
+    table = _staged_delta(spark, sf_dir, "restore", build)
     ops = [c["operation"] for c in history_infos(table)]
     if ops != ["WRITE", "WRITE", "RESTORE"]:
         raise RuntimeError(
@@ -1288,7 +1216,7 @@ def lakehouse_delta_mapped_dml_agg(
         )
         merge_delta(spark, table, inserts, keys=["event_id"])
 
-    table = _dml_staged_delta(spark, sf_dir, "mapped_dml", build)
+    table = _staged_delta(spark, sf_dir, "mapped_dml", build)
     snap = _replay_log(table, None)
     mapping = _column_mapping(snap)
     if mapping is None:
@@ -1365,7 +1293,7 @@ def lakehouse_delta_mor_merge_agg(
             spark, table, updates.unionByName(inserts), keys=["event_id"]
         )
 
-    table = _dml_staged_delta(spark, sf_dir, "mor_merge", build)
+    table = _staged_delta(spark, sf_dir, "mor_merge", build)
     v0 = _replay_log(table, 0)
     live = _replay_log(table, None)
     rewritten = sorted(set(v0.files) - set(live.files))
@@ -1450,7 +1378,7 @@ def lakehouse_delta_history_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         optimize_delta(spark, table)
 
-    table = _dml_staged_delta(spark, sf_dir, "hist", build)
+    table = _staged_delta(spark, sf_dir, "hist", build)
     return describe_history(spark, table).select(
         "version",
         "operation",
@@ -1466,11 +1394,7 @@ def _staged_events_iceberg(spark: SparkSession, sf_dir: str) -> str:
     (sf_dir, schema): two appends (even ids, then odd ids) so the table
     has real multi-snapshot structure for the latest-read AND
     time-travel queries. Iceberg manifests record absolute file paths
-    (spec: full URIs), so the Delta staging's rename trick would break
-    them; first-caller races are fenced with an O_EXCL lock + _READY
-    marker instead (build happens in place, visibility is gated by the
-    marker, losers poll — see _staged_iceberg_locked for the heartbeat
-    and stale-lock takeover story)."""
+    (spec: full URIs), so the table is built in place, never moved."""
     from sparkstreamingtwitter_presidential_spark.sources.iceberg import (
         write_iceberg,
     )
@@ -1482,9 +1406,7 @@ def _staged_events_iceberg(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg(ev.filter("event_id % 2 = 0"), table)
         write_iceberg(ev.filter("event_id % 2 = 1"), table, mode="append")
 
-    return _staged_iceberg_locked(
-        spark, f"/tmp/ssp_iceberg_events_{key}", build
-    )
+    return staged(spark, f"/tmp/ssp_iceberg_events_{key}", build)
 
 
 @query(
@@ -1629,9 +1551,7 @@ def lakehouse_iceberg_skipping_agg(
             table,
         )
 
-    table = _staged_iceberg_locked(
-        spark, f"/tmp/ssp_iceberg_skip_{key}", build
-    )
+    table = staged(spark, f"/tmp/ssp_iceberg_skip_{key}", build)
 
     ranges = {"event_id": (100, 299)}
     pruned = read_iceberg(spark, table, skip_ranges=ranges)
@@ -1704,9 +1624,7 @@ def lakehouse_iceberg_sorted_agg(
         finally:
             spark.conf.set(key_, prev)
 
-    table = _staged_iceberg_locked(
-        spark, f"/tmp/ssp_iceberg_sorted_{key}", build
-    )
+    table = staged(spark, f"/tmp/ssp_iceberg_sorted_{key}", build)
     meta = _load_metadata(table)
     if meta.get("default-sort-order-id") != 1:
         raise RuntimeError(
@@ -1733,124 +1651,6 @@ def lakehouse_iceberg_sorted_agg(
             "files kept for a 200-id range on a sorted table"
         )
     return _agg_by_type(pruned.filter("event_id BETWEEN 500 AND 699"))
-
-
-_LOCK_STALE_SECS = 30.0  # no heartbeat for this long == crashed builder
-
-
-def _staged_iceberg_locked(spark: SparkSession, table: str, build) -> str:
-    """Stage an Iceberg table in place behind an O_EXCL build lock +
-    _READY marker (manifests hold absolute paths — the Delta staging's
-    rename trick would break them; build happens in place, visibility
-    is gated by the marker).
-
-    Liveness, not a fixed wall cap: the builder HEARTBEATS the lock's
-    mtime every 2 s from a daemon thread; waiters poll the marker and
-    treat a lock whose heartbeat stopped for _LOCK_STALE_SECS as a
-    crashed builder — one waiter wins an atomic os.rename of the stale
-    lock, wipes the partial build, and rebuilds; the rest keep
-    polling. A legitimately slow large-SF build keeps its lock fresh
-    and is waited on indefinitely (the old fixed 300 s cap could
-    false-timeout it), while a builder that died between lock and
-    marker no longer wedges every later caller (ADVICE r7)."""
-    import shutil
-    import threading
-    import time as _time
-
-    ready = os.path.join(table, "_READY")
-    lock = os.path.join(table, "_BUILD_LOCK")
-
-    def _wipe_partial() -> None:
-        # builders always start from a clean dir: whatever is here
-        # with no _READY marker is a crashed builder's partial state
-        # (idempotent, cheap on a clean dir). Running it after EVERY
-        # successful lock acquisition — not only the stale-takeover
-        # branch — closes the window where a brand-new caller O_EXCL-
-        # claims the lock between a takeover's rename and re-claim and
-        # would otherwise append onto half-written staging (ADVICE r8).
-        for n in os.listdir(table):
-            if n == "_BUILD_LOCK":
-                continue
-            full = os.path.join(table, n)
-            if os.path.isdir(full):
-                shutil.rmtree(full, ignore_errors=True)
-            else:
-                try:
-                    os.remove(full)
-                except OSError:
-                    pass
-
-    while True:
-        if os.path.exists(ready):
-            return table
-        os.makedirs(table, exist_ok=True)
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.close(fd)
-            _wipe_partial()
-        except FileExistsError:
-            # lost the claim: wait while the builder shows a pulse
-            try:
-                age = _time.time() - os.stat(lock).st_mtime
-            except OSError:
-                continue  # lock vanished (crash cleanup/publish): re-check
-            if age > _LOCK_STALE_SECS:
-                try:
-                    os.rename(lock, f"{lock}.stale")  # one winner
-                except OSError:
-                    continue  # another waiter claimed the takeover
-                # claim BEFORE clearing: create our own fresh lock so
-                # no other waiter can slip in between the rename and
-                # the wipe (an rmtree here could delete a racer's
-                # fresh lock and in-progress build — review finding);
-                # then clear the dead builder's partial state around
-                # our held lock.
-                try:
-                    fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                    os.close(fd)
-                except FileExistsError:
-                    continue  # a racer claimed first; wait on them
-                for n in os.listdir(table):
-                    if n == "_BUILD_LOCK":
-                        continue
-                    full = os.path.join(table, n)
-                    if os.path.isdir(full):
-                        shutil.rmtree(full, ignore_errors=True)
-                    else:
-                        try:
-                            os.remove(full)
-                        except OSError:
-                            pass
-            else:
-                _time.sleep(0.5)
-                continue
-        # builder: heartbeat the lock while the (possibly long) Spark
-        # build runs, so waiters can tell slow from dead
-        stop = threading.Event()
-
-        def _beat() -> None:
-            while not stop.wait(2.0):
-                try:
-                    os.utime(lock)
-                except OSError:
-                    return
-
-        beater = threading.Thread(target=_beat, daemon=True)
-        beater.start()
-        try:
-            build(spark, table)
-            open(ready, "w").close()
-            _sweep_superseded_staging(table)
-        except BaseException:
-            # leave no half-built table behind a dead lock: clear the
-            # claim so the next caller rebuilds from scratch
-            stop.set()
-            beater.join(timeout=5.0)
-            shutil.rmtree(table, ignore_errors=True)
-            raise
-        stop.set()
-        beater.join(timeout=5.0)
-        return table
 
 
 @query(
@@ -1893,9 +1693,7 @@ def lakehouse_iceberg_partitioned_agg(
         write_iceberg(ev.filter("event_id % 2 = 1"), table, mode="append")
 
     key = _events_cache_key(spark, sf_dir)
-    table = _staged_iceberg_locked(
-        spark, f"/tmp/ssp_iceberg_part_{key}", build
-    )
+    table = staged(spark, f"/tmp/ssp_iceberg_part_{key}", build)
     # the target partition comes from the MANIFESTS (driver-side
     # partition_infos — zero data scans, zero Spark jobs; r15: the
     # .partitions frame + collect paid a createDataFrame round trip
@@ -1961,9 +1759,7 @@ def lakehouse_iceberg_transform_partitioned_agg(
         write_iceberg(ev.filter("event_id % 2 = 1"), table, mode="append")
 
     key = _events_cache_key(spark, sf_dir)
-    table = _staged_iceberg_locked(
-        spark, f"/tmp/ssp_iceberg_txpart_{key}", build
-    )
+    table = staged(spark, f"/tmp/ssp_iceberg_txpart_{key}", build)
     # the earliest day comes from the MANIFESTS (epoch-day ordinals,
     # driver-side partition_infos — zero data scans, zero Spark jobs)
     min_day = min(p["ts_day"] for p in partition_infos(table))
@@ -2013,7 +1809,7 @@ def _staged_iceberg_dml(spark: SparkSession, sf_dir: str) -> str:
         )
 
     key = _events_cache_key(spark, sf_dir)
-    table = _staged_iceberg_locked(spark, f"/tmp/ssp_iceberg_dml_{key}", build)
+    table = staged(spark, f"/tmp/ssp_iceberg_dml_{key}", build)
     ops = [s["operation"] for s in snapshot_infos(table)]
     if ops != ["append", "delete", "overwrite", "overwrite"]:
         raise RuntimeError(
@@ -2172,7 +1968,7 @@ def streaming_iceberg_sink_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "commits — the exactly-once channel never engaged"
             )
 
-    _staged_iceberg_locked(spark, table, build)
+    staged(spark, table, build)
     ev = read_iceberg(spark, table)
     return ev.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -2231,9 +2027,7 @@ def lakehouse_iceberg_positional_delete_agg(
         delete_iceberg_positional(spark, table, "event_id % 5 = 0")
 
     key = _events_cache_key(spark, sf_dir)
-    table = _staged_iceberg_locked(
-        spark, f"/tmp/ssp_iceberg_posdel2_{key}", build
-    )
+    table = staged(spark, f"/tmp/ssp_iceberg_posdel2_{key}", build)
     ops = [s["operation"] for s in snapshot_infos(table)]
     if ops != ["append", "append", "delete"]:
         raise RuntimeError(
@@ -2288,7 +2082,7 @@ def streaming_hudi_sink_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream,
             table,
             os.path.join(table, ".ckpt"),  # dot-dir: invisible to the
-            # slice scanner, wiped with the table on stale takeover
+            # slice scanner, wiped with the table on a rebuild
             record_key="event_id",
             app_id=f"ssp_hudi_ingest_{key}",
         )
@@ -2303,7 +2097,7 @@ def streaming_hudi_sink_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "commits — the exactly-once channel never engaged"
             )
 
-    _staged_iceberg_locked(spark, table, build)
+    staged(spark, table, build)
     ev = read_hudi(spark, table)
     return ev.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -2355,7 +2149,7 @@ def lakehouse_hudi_events_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     key = _events_cache_key(spark, sf_dir)
-    table = _staged_iceberg_locked(spark, f"/tmp/ssp_hudi_events_{key}", build)
+    table = staged(spark, f"/tmp/ssp_hudi_events_{key}", build)
     ev = read_hudi(spark, table)
     return ev.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -2417,7 +2211,7 @@ def lakehouse_hudi_upsert_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert_hudi(spark, table, updates.unionByName(inserts))
 
     key = _events_cache_key(spark, sf_dir)
-    table = _staged_iceberg_locked(spark, f"/tmp/ssp_hudi_dml_{key}", build)
+    table = staged(spark, f"/tmp/ssp_hudi_dml_{key}", build)
     ops = [c["operation"] for c in timeline_infos(table)]
     if ops != ["INSERT", "UPSERT"]:
         raise RuntimeError(
@@ -2477,7 +2271,7 @@ def lakehouse_hudi_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFram
 
     key = _events_cache_key(spark, sf_dir)
     # shares the INSERT+UPSERT staging with lakehouse_hudi_upsert_agg
-    table = _staged_iceberg_locked(spark, f"/tmp/ssp_hudi_dml_{key}", build)
+    table = staged(spark, f"/tmp/ssp_hudi_dml_{key}", build)
     instants = [c["instant"] for c in timeline_infos(table)]
     if len(instants) != 2:
         raise RuntimeError(
@@ -2544,7 +2338,7 @@ def lakehouse_hudi_partitioned_agg(spark: SparkSession, sf_dir: str) -> DataFram
         )
 
     key = _events_cache_key(spark, sf_dir)
-    table = _staged_iceberg_locked(spark, f"/tmp/ssp_hudi_mlpart_{key}", build)
+    table = staged(spark, f"/tmp/ssp_hudi_mlpart_{key}", build)
     # the target leaf comes from the DIR LAYOUT (hive col=val names
     # are exact for string partitions) — zero data scans; every
     # event_type present in the source has a dir, so min(dir value)
@@ -2686,7 +2480,7 @@ def _stage_hudi_mor(spark: SparkSession, sf_dir: str) -> str:
         )
 
     key = _events_cache_key(spark, sf_dir)
-    return _staged_iceberg_locked(spark, f"/tmp/ssp_hudi_mor_{key}", build)
+    return staged(spark, f"/tmp/ssp_hudi_mor_{key}", build)
 
 
 @query(
@@ -2875,9 +2669,7 @@ def _stage_hudi_mor_ordering(spark: SparkSession, sf_dir: str) -> str:
         upsert_hudi_mor(spark, table, deletes=dels)
 
     key = _events_cache_key(spark, sf_dir)
-    return _staged_iceberg_locked(
-        spark, f"/tmp/ssp_hudi_morord_{key}", build
-    )
+    return staged(spark, f"/tmp/ssp_hudi_morord_{key}", build)
 
 
 @query(
@@ -2979,9 +2771,7 @@ def _stage_hudi_cluster(spark: SparkSession, sf_dir: str) -> str:
         clean_hudi(table, keep_last=1)
 
     key = _events_cache_key(spark, sf_dir)
-    return _staged_iceberg_locked(
-        spark, f"/tmp/ssp_hudi_cluster_{key}", build
-    )
+    return staged(spark, f"/tmp/ssp_hudi_cluster_{key}", build)
 
 
 @query(
@@ -3063,7 +2853,7 @@ def lakehouse_hudi_compaction_agg(
         upsert_hudi_mor(spark, table, upd2)
 
     key = _events_cache_key(spark, sf_dir)
-    table = _staged_iceberg_locked(spark, f"/tmp/ssp_hudi_compact_{key}", build)
+    table = staged(spark, f"/tmp/ssp_hudi_compact_{key}", build)
     hd = _hoodie(table)
     delta = sorted(
         n[: -len(".deltacommit")]
@@ -3157,9 +2947,7 @@ def lakehouse_iceberg_v3_dv_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         forge_v3_dv_commit(table, deletes)
 
     key = _events_cache_key(spark, sf_dir)
-    table = _staged_iceberg_locked(
-        spark, f"/tmp/ssp_iceberg_v3dv_{key}", build
-    )
+    table = staged(spark, f"/tmp/ssp_iceberg_v3dv_{key}", build)
     meta = _load_metadata(table)
     if meta.get("format-version") != 3:
         raise RuntimeError(
@@ -3233,9 +3021,7 @@ def lakehouse_iceberg_v3_dml_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     key = _events_cache_key(spark, sf_dir)
-    table = _staged_iceberg_locked(
-        spark, f"/tmp/ssp_iceberg_v3dml_{key}", build
-    )
+    table = staged(spark, f"/tmp/ssp_iceberg_v3dml_{key}", build)
     meta = _load_metadata(table)
     if meta.get("format-version") != 3 or meta.get("next-row-id", 0) <= 0:
         raise RuntimeError(
@@ -3317,7 +3103,7 @@ def lakehouse_delta_reorg_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         delete_delta_dv(spark, table, "event_id % 8 = 0")
         rewrite_deletion_vectors(spark, table)
 
-    table = _dml_staged_delta(spark, sf_dir, "reorg", build)
+    table = _staged_delta(spark, sf_dir, "reorg", build)
     ops = [c["operation"] for c in history_infos(table)]
     if ops != ["WRITE", "DELETE", "REORG"]:
         raise RuntimeError(
@@ -3387,9 +3173,7 @@ def lakehouse_iceberg_row_lineage(
         write_iceberg(ev.filter("event_id % 2 = 1"), table, mode="append")
 
     key = _events_cache_key(spark, sf_dir)
-    table = _staged_iceberg_locked(
-        spark, f"/tmp/ssp_iceberg_v3lineage_{key}", build
-    )
+    table = staged(spark, f"/tmp/ssp_iceberg_v3lineage_{key}", build)
     # persisted: the uniqueness/density stats below materialize the
     # scan and the returned aggregate reuses it (r15, one read per call)
     rows = read_iceberg_lineage(spark, table).persist()
@@ -3484,9 +3268,7 @@ def lakehouse_iceberg_lineage_agg(
         merge_iceberg_dv(spark, table, source, ["event_id"])
 
     key = _events_cache_key(spark, sf_dir)
-    table = _staged_iceberg_locked(
-        spark, f"/tmp/ssp_iceberg_lineage_{key}", build
-    )
+    table = staged(spark, f"/tmp/ssp_iceberg_lineage_{key}", build)
     meta = _load_metadata(table)
     if meta.get("format-version") != 3 or meta.get("next-row-id", 0) <= 0:
         raise RuntimeError(
@@ -3620,7 +3402,7 @@ def lakehouse_delta_row_tracking_agg(
         )
         merge_delta(spark, table, source, ["event_id"])
 
-    table = _dml_staged_delta(spark, sf_dir, "rowtrack", build)
+    table = _staged_delta(spark, sf_dir, "rowtrack", build)
     from sparkstreamingtwitter_presidential_spark.sources.delta import (
         _replay_log,
         _row_id_high_water,
@@ -3791,9 +3573,7 @@ def lakehouse_iceberg_wap_agg(
             )
 
     key = _events_cache_key(spark, sf_dir)
-    table = _staged_iceberg_locked(
-        spark, f"/tmp/ssp_iceberg_wap_{key}", build
-    )
+    table = staged(spark, f"/tmp/ssp_iceberg_wap_{key}", build)
 
     meta = _load_metadata(table)
     refs = meta.get("refs") or {}
@@ -3881,9 +3661,7 @@ def lakehouse_delta_clone_agg(
         write_delta(shifted(13, 8, 30_000_000), dst, mode="append")
 
     key = _events_cache_key(spark, sf_dir)
-    root = _staged_iceberg_locked(
-        spark, f"/tmp/ssp_delta_clone_{key}", build
-    )
+    root = staged(spark, f"/tmp/ssp_delta_clone_{key}", build)
     src, dst = os.path.join(root, "src"), os.path.join(root, "dst")
 
     import json as _json
@@ -3991,7 +3769,7 @@ def lakehouse_delta_identity_agg(
             mode="append",
         )
 
-    table = _dml_staged_delta(spark, sf_dir, "identity", build)
+    table = _staged_delta(spark, sf_dir, "identity", build)
 
     md = None
     with open(
@@ -4191,9 +3969,7 @@ def lakehouse_iceberg_spec_evolution_agg(
         rewrite_position_deletes(spark, table)
 
     key = _events_cache_key(spark, sf_dir)
-    table = _staged_iceberg_locked(
-        spark, f"/tmp/ssp_iceberg_specevo3_{key}", build
-    )
+    table = staged(spark, f"/tmp/ssp_iceberg_specevo3_{key}", build)
 
     meta = _load_metadata(table)
     snaps_sorted = sorted(

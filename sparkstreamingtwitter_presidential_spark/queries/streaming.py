@@ -26,6 +26,7 @@ from sparkstreamingtwitter_presidential_spark.sources.replay import (
     stage_ts_ordered,
 )
 from sparkstreamingtwitter_presidential_spark.queries.registry import query
+from sparkstreamingtwitter_presidential_spark.queries.staging import staged
 from sparkstreamingtwitter_presidential_spark.streaming import (
     run_bounded_collector,
     session_aggregate,
@@ -45,11 +46,11 @@ def _staged(spark: SparkSession, sf_dir: str) -> str:
     from sparkstreamingtwitter_presidential_spark.io import load_table
 
     ev = load_table(spark, sf_dir, "events")
-    out = schema_keyed_dir("spark_graft_stage", sf_dir, ev.schema)
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        stage_ts_ordered(ev, out, n_files=4)
-    return out
+    return staged(
+        spark,
+        schema_keyed_dir("spark_graft_stage", sf_dir, ev.schema),
+        lambda _s, out: stage_ts_ordered(ev, out, n_files=4),
+    )
 
 
 #: State-store partitions for the bounded replay jobs. The partition
@@ -191,18 +192,18 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _staged_dup(spark: SparkSession, sf_dir: str) -> str:
-    """Stage (once per sf_dir per process) an at-least-once delivery of
+    """Stage (once per sf_dir and schema) an at-least-once delivery of
     the events fixture: every event delivered twice, duplicates landing
     in the same time-sliced file (equal ts -> same range partition), the
     way producer retries duplicate within a bounded horizon."""
     from sparkstreamingtwitter_presidential_spark.io import load_table
 
     ev = load_table(spark, sf_dir, "events")
-    out = schema_keyed_dir("spark_graft_stage_dup", sf_dir, ev.schema)
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        stage_ts_ordered(ev.unionByName(ev), out, n_files=4)
-    return out
+    return staged(
+        spark,
+        schema_keyed_dir("spark_graft_stage_dup", sf_dir, ev.schema),
+        lambda _s, out: stage_ts_ordered(ev.unionByName(ev), out, n_files=4),
+    )
 
 
 @query(
@@ -225,7 +226,7 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _staged_enrichment(spark: SparkSession, sf_dir: str) -> str:
-    """Stage (once per sf_dir per process) a late-arriving enrichment
+    """Stage (once per sf_dir and schema) a late-arriving enrichment
     stream derived deterministically from events: 2 of every 3 events
     gain an enrichment record delayed by ``event_id % 240`` seconds
     (within-watermark lateness a producer-side annotator would show; the
@@ -244,11 +245,11 @@ def _staged_enrichment(spark: SparkSession, sf_dir: str) -> str:
             "CAST(event_id % 240 AS BIGINT) AS delay_s",
         )
     )
-    out = schema_keyed_dir("spark_graft_stage_enr", sf_dir, enr.schema)
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        stage_ts_ordered(enr, out, n_files=4, ts_col="enr_ts")
-    return out
+    return staged(
+        spark,
+        schema_keyed_dir("spark_graft_stage_enr", sf_dir, enr.schema),
+        lambda _s, out: stage_ts_ordered(enr, out, n_files=4, ts_col="enr_ts"),
+    )
 
 
 @query(

@@ -6,14 +6,13 @@ hash proven byte-identical on Unicode inputs)."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkstreamingtwitter_presidential_spark.functions import text_stats as ts
 from sparkstreamingtwitter_presidential_spark.io import load_table
 from sparkstreamingtwitter_presidential_spark.queries.registry import query
+from sparkstreamingtwitter_presidential_spark.queries.staging import staged
 
 # DuckDB twins of the shared expressions (same constants/regexes).
 _DUCK_WS = r"len(string_split_regex(trim(text), '\s+'))"
@@ -425,10 +424,12 @@ def io_jsonl_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    staged = schema_keyed_dir("spark_graft_jsonl_docs", sf_dir, d.schema)
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
-        write_jsonl(d, staged, n_files=4)
-    return read_jsonl(spark, staged, d.schema)
+    path = staged(
+        spark,
+        schema_keyed_dir("spark_graft_jsonl_docs", sf_dir, d.schema),
+        lambda _s, out: write_jsonl(d, out, n_files=4),
+    )
+    return read_jsonl(spark, path, d.schema)
 
 
 @query(
@@ -455,10 +456,12 @@ def io_csv_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    staged = schema_keyed_dir("spark_graft_csv_docs", sf_dir, d.schema)
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
-        write_csv(d, staged, n_files=4)
-    return read_csv(spark, staged, d.schema)
+    path = staged(
+        spark,
+        schema_keyed_dir("spark_graft_csv_docs", sf_dir, d.schema),
+        lambda _s, out: write_csv(d, out, n_files=4),
+    )
+    return read_csv(spark, path, d.schema)
 
 
 @query(
@@ -577,10 +580,12 @@ def io_orc_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    staged = schema_keyed_dir("spark_graft_orc_docs", sf_dir, d.schema)
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
-        write_orc(d, staged, n_files=4)
-    return read_orc(spark, staged, d.schema)
+    path = staged(
+        spark,
+        schema_keyed_dir("spark_graft_orc_docs", sf_dir, d.schema),
+        lambda _s, out: write_orc(d, out, n_files=4),
+    )
+    return read_orc(spark, path, d.schema)
 
 
 @query(
@@ -610,10 +615,12 @@ def io_partitioned_parquet_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars", "source"
     )
-    staged = schema_keyed_dir("spark_graft_part_docs", sf_dir, d.schema)
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
-        d.write.mode("overwrite").partitionBy("source").parquet(staged)
-    back = spark.read.parquet(staged).filter(
+    path = staged(
+        spark,
+        schema_keyed_dir("spark_graft_part_docs", sf_dir, d.schema),
+        lambda _s, out: d.write.partitionBy("source").parquet(out),
+    )
+    back = spark.read.parquet(path).filter(
         F.col("source").isin("src1", "src2")
     )
     return back.groupBy("source", "lang").agg(
@@ -841,10 +848,12 @@ def io_avro_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    staged = schema_keyed_dir("spark_graft_avro_docs", sf_dir, d.schema)
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
-        write_avro(d, staged, n_files=4)
-    return read_avro(spark, staged, d.schema)
+    path = staged(
+        spark,
+        schema_keyed_dir("spark_graft_avro_docs", sf_dir, d.schema),
+        lambda _s, out: write_avro(d, out, n_files=4),
+    )
+    return read_avro(spark, path, d.schema)
 
 
 @query(
@@ -895,16 +904,15 @@ def io_shard_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    staged = schema_keyed_dir("spark_graft_shard_export", sf_dir, d.schema)
-    if not os.path.exists(os.path.join(staged, X.MANIFEST_NAME)):
-        import shutil as _sh
-
-        _sh.rmtree(staged, ignore_errors=True)  # partial prior attempt
-        X.export_jsonl_shards(d, staged, "doc_id", n_shards=8)
-    X.verify_export(spark, staged)
+    path = staged(
+        spark,
+        schema_keyed_dir("spark_graft_shard_export", sf_dir, d.schema),
+        lambda _s, out: X.export_jsonl_shards(d, out, "doc_id", n_shards=8),
+    )
+    X.verify_export(spark, path)
     return X.read_jsonl_shards(
         spark,
-        staged,
+        path,
         "doc_id long, text string, lang string, source string, n_chars long, shard int",
     ).drop("shard")
 
@@ -947,10 +955,12 @@ def io_pipetext_connector_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
             " + make_interval(0,0,0,0,0,0, doc_id % 86400)"
         ).alias("created_at"),
     )
-    staged = schema_keyed_dir("spark_graft_pipetext", sf_dir, presi.schema)
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
-        presi.write.format("pipetext").mode("append").save(staged)
-    back = spark.read.format("pipetext").load(staged)
+    path = staged(
+        spark,
+        schema_keyed_dir("spark_graft_pipetext", sf_dir, presi.schema),
+        lambda _s, out: presi.write.format("pipetext").mode("append").save(out),
+    )
+    back = spark.read.format("pipetext").load(path)
     return back.select(
         "text",
         "latitude",

@@ -65,6 +65,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from sparkstreamingtwitter_presidential_spark.sources._fs import put_if_absent
+
 _LOG_DIR = "_delta_log"
 _LAST_CHECKPOINT = "_last_checkpoint"
 # how long remove tombstones stay in checkpoints (mirrors the real
@@ -2585,15 +2587,11 @@ def commit_actions(
         actions = list(actions) + [{"commitInfo": ci}]
     payload = "\n".join(json.dumps(a, separators=(",", ":")) for a in actions)
     commit_file = os.path.join(_log_path(path), f"{version:020d}.json")
-    try:
-        fd = os.open(commit_file, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
+    if not put_if_absent(commit_file, payload + "\n"):
         raise DeltaCommitConflict(
             f"version {version} of {path} was committed concurrently; "
             "re-read the table and re-derive the operation"
-        ) from None
-    with os.fdopen(fd, "w") as f:
-        f.write(payload + "\n")
+        )
     return version
 
 
@@ -3329,9 +3327,7 @@ def write_delta(
             json.dumps(a, separators=(",", ":")) for a in all_actions
         )
         commit_file = os.path.join(log_dir, f"{version:020d}.json")
-        try:
-            fd = os.open(commit_file, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
+        if not put_if_absent(commit_file, payload + "\n"):
             # Lost the race. The staged data files are safe (unique
             # names), but any action derived from the pre-race snapshot
             # may no longer be valid — re-replay the log and only retry
@@ -3392,6 +3388,4 @@ def write_delta(
                 )
             version = fresh.version + 1
             continue
-        with os.fdopen(fd, "w") as f:
-            f.write(payload + "\n")
         return version

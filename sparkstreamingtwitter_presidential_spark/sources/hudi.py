@@ -101,6 +101,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparkstreamingtwitter_presidential_spark.sources._fs import put_if_absent
+
 _HOODIE_DIR = ".hoodie"
 _PROPS = "hoodie.properties"
 META_COLS = [
@@ -357,15 +359,11 @@ def _complete_instant(
     open(os.path.join(hd, f"{instant}.{action}.requested"), "w").close()
     open(os.path.join(hd, f"{instant}.inflight"), "w").close()
     target = os.path.join(hd, f"{instant}.{action}")
-    try:
-        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
+    if not put_if_absent(target, json.dumps(commit_meta)):
         raise HudiCommitConflict(
             f"instant {instant} of {path} completed concurrently; "
             "re-read the table and retry"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        json.dump(commit_meta, fh)
+        )
 
 
 # ---------------------------------------------------------------- writing

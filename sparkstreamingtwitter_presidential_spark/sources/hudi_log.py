@@ -71,9 +71,9 @@ engine-extension surface (VERDICT r12 "Next round" item 6).
 from __future__ import annotations
 
 import json
-import os
 import struct
 
+from sparkstreamingtwitter_presidential_spark.sources._fs import put_if_absent
 from sparkstreamingtwitter_presidential_spark.sources.avro import (
     _Reader,
     _write_value,
@@ -225,9 +225,8 @@ def write_log_file(full_path: str, blocks: list[bytes]) -> int:
     each deltacommit writes NEW log files, never appends, which is
     what makes rollback exact). Returns bytes written."""
     data = b"".join(blocks)
-    fd = os.open(full_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "wb") as fh:
-        fh.write(data)
+    if not put_if_absent(full_path, data):
+        raise FileExistsError(f"log file exists: {full_path}")
     return len(data)
 
 

@@ -83,6 +83,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparkstreamingtwitter_presidential_spark.sources._fs import put_if_absent
 from sparkstreamingtwitter_presidential_spark.sources.avro import (
     read_container,
     write_container,
@@ -1291,10 +1292,6 @@ def _entries_for_snapshot(path: str, snap: dict) -> list[dict]:
             "before compaction/maintenance ops"
         )
     return entries
-
-
-def _data_files_for_snapshot(path: str, snap: dict) -> list[dict]:
-    return [e["data_file"] for e in _entries_for_snapshot(path, snap)]
 
 
 # v3 row-lineage reserved column names (spec §Row Lineage): engines
@@ -4003,21 +4000,7 @@ def _commit_snapshot(
             {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
         ]
 
-    new_version = base_version + 1
-    target = os.path.join(md, f"v{new_version}.metadata.json")
-    try:
-        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise IcebergCommitConflict(
-            f"metadata version {new_version} of {path} was committed "
-            "concurrently; re-read the table and retry"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    tmp_hint = os.path.join(md, f".{_VERSION_HINT}.{uuid.uuid4().hex}")
-    with open(tmp_hint, "w", encoding="utf-8") as fh:
-        fh.write(str(new_version))
-    os.replace(tmp_hint, os.path.join(md, _VERSION_HINT))
+    _put_metadata_version(path, base_version + 1, new_meta)
     return snapshot_id
 
 
@@ -4481,23 +4464,7 @@ def expire_snapshots(
         for e in meta.get("snapshot-log", [])
         if e["snapshot-id"] in keep_ids
     ]
-    new_version = meta["_loaded_version"] + 1
-    target = os.path.join(_metadata_dir(path), f"v{new_version}.metadata.json")
-    try:
-        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise IcebergCommitConflict(
-            f"metadata version {new_version} of {path} was committed "
-            "concurrently; re-read the table and retry"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    tmp_hint = os.path.join(
-        _metadata_dir(path), f".{_VERSION_HINT}.{uuid.uuid4().hex}"
-    )
-    with open(tmp_hint, "w", encoding="utf-8") as fh:
-        fh.write(str(new_version))
-    os.replace(tmp_hint, os.path.join(_metadata_dir(path), _VERSION_HINT))
+    _put_metadata_version(path, meta["_loaded_version"] + 1, new_meta)
 
     # physical deletion AFTER the metadata commit: readers that resolve
     # metadata from here on never see the expired snapshots; see the
@@ -5541,32 +5508,34 @@ def remove_orphan_files(
 # writer's schema check pins appends to the NEW shape from then on.
 
 
+def _put_metadata_version(path: str, new_version: int, new_meta: dict) -> None:
+    """The one Iceberg commit point: put-if-absent claim of
+    ``v<new_version>.metadata.json`` holding ``new_meta`` as given,
+    then repoint the version hint. Raises IcebergCommitConflict if the
+    version was already taken (a commit landed since planning)."""
+    md = _metadata_dir(path)
+    target = os.path.join(md, f"v{new_version}.metadata.json")
+    if not put_if_absent(target, json.dumps(new_meta)):
+        raise IcebergCommitConflict(
+            f"metadata version {new_version} of {path} was committed "
+            "concurrently; re-read the table and retry"
+        )
+    tmp_hint = os.path.join(md, f".{_VERSION_HINT}.{uuid.uuid4().hex}")
+    with open(tmp_hint, "w", encoding="utf-8") as fh:
+        fh.write(str(new_version))
+    os.replace(tmp_hint, os.path.join(md, _VERSION_HINT))
+
+
 def _claim_metadata_version(path: str, meta: dict, new_meta: dict) -> int:
     """Shared metadata-only commit primitive (schema evolution, refs):
-    put-if-absent claim of ``meta['_loaded_version'] + 1``, then
-    repoint the version hint. Raises IcebergCommitConflict if any
-    commit landed since planning. Metadata-only commits never assign
-    row ids, so v3 tables need no lineage bookkeeping here."""
+    stamp ``last-updated-ms`` and commit ``meta['_loaded_version'] + 1``.
+    Metadata-only commits never assign row ids, so v3 tables need no
+    lineage bookkeeping here."""
     new_meta = dict(new_meta)
     new_meta.pop("_loaded_version", None)
     new_meta["last-updated-ms"] = int(time.time() * 1000)
     new_version = meta["_loaded_version"] + 1
-    target = os.path.join(_metadata_dir(path), f"v{new_version}.metadata.json")
-    try:
-        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise IcebergCommitConflict(
-            f"metadata version {new_version} of {path} was committed "
-            "concurrently; re-read the table and retry"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh)
-    tmp_hint = os.path.join(
-        _metadata_dir(path), f".{_VERSION_HINT}.{uuid.uuid4().hex}"
-    )
-    with open(tmp_hint, "w", encoding="utf-8") as fh:
-        fh.write(str(new_version))
-    os.replace(tmp_hint, os.path.join(_metadata_dir(path), _VERSION_HINT))
+    _put_metadata_version(path, new_version, new_meta)
     return new_version
 
 

@@ -260,9 +260,11 @@ def test_skip_ranges_prunes_clustered_files_but_not_rows(spark, tmp_path):
         [Row(id=i, cat="a", val=float(i % 7)) for i in range(2000)]
     )
     # land shuffled across 4 appends so pre-compaction files all span
-    # the full id range (stats useless), then cluster
+    # the full id range (stats useless), then cluster; 4 files per
+    # append at any local[N], so the compacted byte total (and with it
+    # the output file count) does not follow the core count
     for k in range(4):
-        write_delta(df.filter(SF.pmod("id", SF.lit(4)) == k), p)
+        write_delta(df.filter(SF.pmod("id", SF.lit(4)) == k).repartition(4), p)
     unclustered = read_delta(spark, p, skip_ranges={"id": (100, 120)})
     n_unclustered = len(_live_after_skip(p, {"id": (100, 120)}))
     optimize_delta(spark, p, target_file_bytes=6000, cluster_by=["id"])

@@ -775,10 +775,21 @@ def test_rewrite_deletion_vectors_folds_puffin_files(spark, tmp_path):
         rewrite_deletion_vectors,
     )
 
-    t = _table(spark, tmp_path, n=100, files=4)
-    delete_iceberg_dv(spark, t, "id % 10 = 0")
-    delete_iceberg_dv(spark, t, "id % 10 = 1")  # supersedes some unions
-    update_iceberg_dv(spark, t, {"val": "val + 1000"}, "id % 10 = 2")
+    # four data files of contiguous id ranges ([0,25) .. [75,100)) at
+    # any local[N], and DML predicates that pick which files they hit:
+    # the live vectors then span three Puffin files by construction
+    # (a round-robin layout put every residue in every file, so each
+    # DML superseded all vectors and one live Puffin file could remain)
+    t = str(tmp_path / "t")
+    df = spark.range(0, 100, 1, 4).selectExpr(
+        "id", "cast(id % 5 as long) as grp", "cast(id * 1.5 as double) as val"
+    )
+    write_iceberg(df, t, format_version=3)
+    delete_iceberg_dv(spark, t, "id % 10 = 0")  # all four files
+    delete_iceberg_dv(spark, t, "id % 10 = 1 AND id < 50")  # supersedes two
+    update_iceberg_dv(
+        spark, t, {"val": "val + 1000"}, "id % 10 = 2 AND id >= 75"
+    )
     before = sorted(tuple(r) for r in read_iceberg(spark, t).collect())
     lin_before = sorted(
         (r.id, r._row_id) for r in read_iceberg_lineage(spark, t).collect()

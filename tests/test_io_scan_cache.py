@@ -82,7 +82,6 @@ def test_scan_plan_memo_misses_on_in_place_part_rewrite(spark, tmp_path):
     load_table must miss and see the new rows."""
     import glob
     import shutil
-    import time
 
     sf = str(tmp_path)
     path = os.path.join(sf, "region.parquet")
@@ -94,13 +93,47 @@ def test_scan_plan_memo_misses_on_in_place_part_rewrite(spark, tmp_path):
     n_one = one.count()
     entries_before = sorted(os.listdir(path))
     # in-place rewrite: copy the doubled dir's part (and .crc) BYTES
-    # over the existing files — same names, same entry count
-    time.sleep(0.05)  # ensure a strictly newer child mtime
+    # over the existing files — same names, same entry count — and
+    # stamp each a strictly newer mtime
     for pattern in ("part-*.parquet", ".part-*.crc"):
         [dst] = glob.glob(os.path.join(path, pattern))
         [s] = glob.glob(os.path.join(other, pattern))
+        st = os.stat(dst)
         shutil.copyfile(s, dst)
+        os.utime(dst, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
     assert sorted(os.listdir(path)) == entries_before  # no entry churn
     two = load_table(spark, sf, "region")
     assert two is not one  # key miss despite unchanged dir entries
+    assert two.count() == 2 * n_one
+
+
+def test_scan_plan_memo_misses_on_mtime_preserving_overwrite(spark, tmp_path):
+    """An in-place overwrite that restores every child's mtime (the way
+    ``cp -p`` or ``rsync -t`` does) but changes a part file's size must
+    still miss: the key folds in the total child size."""
+    import glob
+    import shutil
+
+    sf = str(tmp_path)
+    path = os.path.join(sf, "region.parquet")
+    other = os.path.join(sf, "other")
+    src = load_table(spark, SF_DIR, "region")
+    src.coalesce(1).write.parquet(path)
+    src.unionByName(src).coalesce(1).write.parquet(other)
+    dir_st = os.stat(path)
+    [part] = glob.glob(os.path.join(path, "part-*.parquet"))
+    part_size = os.path.getsize(part)
+    one = load_table(spark, sf, "region")
+    n_one = one.count()
+    for pattern in ("part-*.parquet", ".part-*.crc"):
+        [dst] = glob.glob(os.path.join(path, pattern))
+        [s] = glob.glob(os.path.join(other, pattern))
+        st = os.stat(dst)
+        shutil.copyfile(s, dst)
+        os.utime(dst, ns=(st.st_atime_ns, st.st_mtime_ns))  # mtime kept
+    assert os.path.getsize(part) != part_size
+    # the directory itself is untouched: same mtime, same size
+    assert os.stat(path).st_mtime_ns == dir_st.st_mtime_ns
+    two = load_table(spark, sf, "region")
+    assert two is not one
     assert two.count() == 2 * n_one
