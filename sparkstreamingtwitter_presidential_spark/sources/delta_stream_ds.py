@@ -7,12 +7,10 @@ Offsets are TABLE VERSIONS ({"version": V} == "commits 0..V
 consumed"), the log's own monotone clock: a micro-batch plans the add
 actions of commits ``(start, end]``, one InputPartition per data file,
 so replays under checkpointing re-read exactly the same file slice —
-exactly-once composition with any idempotent sink. Version offsets
-never regress on a clean restart even without state (the log only
-grows), and with ``progress_dir`` set the admission cap
-(``maxCommitsPerTrigger``) stays engaged across restarts (the
-latestOffset-before-initialOffset protocol gap; see
-sources/stream_progress.py).
+exactly-once composition with any idempotent sink. Admission
+(``maxCommitsPerTrigger``, ``maxBytesPerTrigger``, ``progress_dir``)
+is sources/stream_progress.py's; the commits it counts are the ones
+that deliver rows.
 
 Append-only contract, like the real source without
 ignoreChanges/ignoreDeletes: a commit in range carrying a
@@ -26,8 +24,7 @@ Scale/shape notes: planning is O(actions in the version range)
 driver-side; reads are executor-parallel per file and yield ARROW
 RECORD BATCHES (pyarrow iter_batches -> JVM columnar transfer, not
 row-at-a-time Python). Partition values are log metadata injected as
-constant Arrow columns per the declared type. Column-mapped tables
-refuse at schema time (files store physical names).
+constant Arrow columns per the declared type.
 
 Parity: delta-spark's `readStream.format("delta")`
 (delta.io docs §Streaming reads). Reference scope: the original app's
@@ -45,11 +42,7 @@ import urllib.parse
 from typing import Any, Iterator
 
 from pyspark.sql import SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource, InputPartition
 from pyspark.sql.types import StructType
 
 from sparkstreamingtwitter_presidential_spark.sources.delta import (
@@ -58,8 +51,8 @@ from sparkstreamingtwitter_presidential_spark.sources.delta import (
     _replay_log,
 )
 from sparkstreamingtwitter_presidential_spark.sources.stream_progress import (
-    load_high_water,
-    save_high_water,
+    TailReader,
+    starting_timestamp_ms,
 )
 
 
@@ -111,8 +104,6 @@ def _pa_type(ddl: str):
         import re
 
         m = re.match(r"decimal\((\d+),(\d+)\)", ddl)
-        import pyarrow as pa
-
         return pa.decimal128(int(m.group(1)), int(m.group(2)))
     try:
         return _PA_BY_DDL[ddl]
@@ -121,6 +112,13 @@ def _pa_type(ddl: str):
             f"delta_native stream: unsupported partition-column type "
             f"{ddl!r}"
         ) from None
+
+
+def _const_column(value: Any, ddl: str, n: int):
+    """An n-row Arrow column holding ``value`` as the declared type."""
+    import pyarrow as pa
+
+    return pa.array([value] * n, type=_pa_type(ddl))
 
 
 def _pv_python(value: str | None, ddl: str) -> Any:
@@ -144,49 +142,29 @@ def _pv_python(value: str | None, ddl: str) -> Any:
     return value  # string
 
 
-class DeltaStreamReader(DataSourceStreamReader):
+def _data_adds(actions: list) -> list:
+    return [
+        a["add"] for a in actions
+        if "add" in a and a["add"].get("dataChange", True)
+    ]
+
+
+def _rewrites(actions: list) -> bool:
+    """The commit changes existing rows: a dataChange remove
+    (DELETE/UPDATE/MERGE/overwrite) or a deletion-vector attach."""
+    return any(
+        "remove" in a and a["remove"].get("dataChange", True)
+        for a in actions
+    ) or any(a.get("deletionVector") for a in _data_adds(actions))
+
+
+class DeltaStreamReader(TailReader):
+    format_name = "delta_native"
+    offset_key = "version"
+    count_option = "maxCommitsPerTrigger"
+
     def __init__(self, options, fields: list):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("delta_native: .load(path) is required")
-        self.fields = fields  # (name, ddl, is_partition) in schema order
-        if options.get("startingTimestamp") is not None:
-            # real-source parity (r10): resolve the first version
-            # committed AT OR AFTER the timestamp — the stream delivers
-            # from there (delta-spark's startingTimestamp contract).
-            # Resolution goes through version_at_timestamp so the
-            # mtime fallback for commitInfo-less foreign commits and
-            # the monotonization rule (ADVICE r8) apply here too: the
-            # first at-or-after version is one past the latest
-            # at-or-before (ts - 1ms).
-            if options.get("startingVersion") is not None:
-                raise ValueError(
-                    "pass either startingVersion or startingTimestamp, "
-                    "not both"
-                )
-            import datetime as _dt
-
-            from sparkstreamingtwitter_presidential_spark.sources.delta import (
-                version_at_timestamp,
-            )
-
-            ts = _dt.datetime.fromisoformat(options["startingTimestamp"])
-            if ts.tzinfo is None:
-                ts = ts.replace(tzinfo=_dt.timezone.utc)
-            want_ms = int(ts.timestamp() * 1000)
-            try:
-                start_v = version_at_timestamp(self.path, want_ms - 1) + 1
-            except ValueError:
-                start_v = 0  # every retained commit is at-or-after
-            if start_v > _replay_log(self.path, None).version:
-                raise ValueError(
-                    f"startingTimestamp {options['startingTimestamp']} "
-                    "is after the table's latest commit — nothing to "
-                    "stream from"
-                )
-            self.starting_version = start_v
-        else:
-            self.starting_version = int(options.get("startingVersion", "0"))
+        self.fields = fields  # (name, physical, ddl, is_partition)
         # real-source parity (r10): skipChangeCommits=true silently
         # SKIPS commits that rewrite data (DELETE/UPDATE/MERGE/
         # overwrite, DV attaches) instead of failing the stream — the
@@ -209,118 +187,96 @@ class DeltaStreamReader(DataSourceStreamReader):
             raise ValueError(
                 "readChangeFeed and skipChangeCommits are contradictory"
             )
-        self.max_commits = (
-            int(options.get("maxCommitsPerTrigger", "0")) or None
-        )
-        # byte-based admission (r10 — what real backfills tune): cap
-        # each micro-batch at the first commit boundary where the
-        # cumulative ADDED bytes would exceed the budget, always
-        # admitting at least one commit so the stream progresses (the
-        # real maxBytesPerTrigger's soft-max semantics). Engages once
-        # the mark is known, same protocol note as maxCommitsPerTrigger.
-        self.max_bytes = int(options.get("maxBytesPerTrigger", "0")) or None
-        self._commit_bytes_cache: dict[int, int] = {}
-        self.progress_dir = options.get("progress_dir")
-        # persisted mark uses COUNT semantics (versions consumed ==
-        # last version + 1) so the empty-progress-dir cold-start value
-        # of 0 means "nothing consumed" (version -1), not "version 0
-        # consumed" — the version clock starts at -1, unlike the
-        # pipetext file index
-        consumed = load_high_water(self.progress_dir, "delta_native")
-        self._last: int | None = (
-            consumed - 1 if consumed is not None else None
+        self._commit_info_cache: dict[int, tuple[bool, int]] = {}
+        super().__init__(options)
+
+    def _start_clock(self, options) -> int:
+        want_ms = starting_timestamp_ms(options, "startingVersion")
+        if want_ms is None:
+            return int(options.get("startingVersion", "0")) - 1
+        # real-source parity (r10): deliver from the first version
+        # committed AT OR AFTER the timestamp, i.e. one past the latest
+        # at-or-before (ts - 1ms) — version_at_timestamp applies the
+        # mtime fallback for commitInfo-less foreign commits and the
+        # monotonization rule
+        from sparkstreamingtwitter_presidential_spark.sources.delta import (
+            version_at_timestamp,
         )
 
-    def initialOffset(self) -> dict:
-        # the stream's logical beginning: one BELOW the first version
-        # to deliver (latestOffset is called first even on cold start,
-        # so this must not consult the high-water mark)
-        return {"version": self.starting_version - 1}
+        try:
+            start_v = version_at_timestamp(self.path, want_ms - 1) + 1
+        except ValueError:
+            start_v = 0  # every retained commit is at-or-after
+        if start_v > _replay_log(self.path, None).version:
+            raise ValueError(
+                f"startingTimestamp {options['startingTimestamp']} "
+                "is after the table's latest commit — nothing to "
+                "stream from"
+            )
+        return start_v - 1
 
-    def _commit_bytes(self, v: int) -> int:
-        """Total ADDED bytes of one commit (dataChange adds), cached —
-        O(new commits) driver metadata reads per trigger, never data."""
-        if v not in self._commit_bytes_cache:
-            total = 0
-            commit = os.path.join(_log_path(self.path), f"{v:020d}.json")
+    def _actions(self, v: int) -> list:
+        commit = os.path.join(_log_path(self.path), f"{v:020d}.json")
+        try:
             with open(commit) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    action = json.loads(line)
-                    add = action.get("add")
-                    if add is not None and add.get("dataChange", True):
-                        total += int(add.get("size", 0))
-            self._commit_bytes_cache[v] = total
-        return self._commit_bytes_cache[v]
+                return [json.loads(line) for line in fh if line.strip()]
+        except FileNotFoundError:
+            raise ValueError(
+                f"commit {v} of {self.path} is not available as a "
+                "JSON delta (expired by log retention) — the "
+                "stream's offset range needs the per-commit actions"
+            ) from None
 
-    def latestOffset(self) -> dict:
-        v = _replay_log(self.path, None).version
-        if self.max_commits is not None and self._last is not None:
-            v = min(v, self._last + self.max_commits)
-        if self.max_bytes is not None and self._last is not None:
-            admitted, total = self._last, 0
-            for cv in range(self._last + 1, v + 1):
-                b = self._commit_bytes(cv)
-                if admitted > self._last and total + b > self.max_bytes:
-                    break
-                admitted, total = cv, total + b
-            v = admitted
-        if self._last is not None:
-            v = max(v, self._last)  # monotone (log never shrinks anyway)
-        # never below the stream's logical beginning (a capped cold
-        # start with startingVersion>0 must not plan end < start)
-        v = max(v, self.starting_version - 1)
-        self._last = v
-        return {"version": v}
+    def _commit_info(self, v: int) -> tuple[bool, int]:
+        """(delivers rows, ADDED bytes) of one commit, cached — O(new
+        commits) driver metadata reads per trigger, never data."""
+        if v not in self._commit_info_cache:
+            actions = self._actions(v)
+            adds = _data_adds(actions)
+            if self.read_change_feed:
+                delivers = bool(adds) or any("cdc" in a for a in actions)
+            else:
+                delivers = bool(adds) and not (
+                    self.skip_change_commits and _rewrites(actions)
+                )
+            self._commit_info_cache[v] = (
+                delivers, sum(int(a.get("size", 0)) for a in adds),
+            )
+        return self._commit_info_cache[v]
 
-    def _logical_pv(self, pv: dict) -> dict:
+    def _window(self, floor: int):
+        tail = _replay_log(self.path, None).version
+        candidates = (
+            v for v in range(floor + 1, tail + 1) if self._commit_info(v)[0]
+        )
+        return candidates, tail
+
+    def _size(self, v: int) -> int:
+        return self._commit_info(v)[1]
+
+    def _partition(self, add: dict, **cdf) -> _AddFilePartition:
         # mapped tables key partitionValues by PHYSICAL name; re-key to
         # logical so read() stays mapping-blind
-        return {
-            n: pv.get(ph, pv.get(n))
-            for n, ph, _t, is_p in self.fields
-            if is_p
+        pv = add.get("partitionValues", {})
+        logical = {
+            n: pv.get(ph, pv.get(n)) for n, ph, _t, is_p in self.fields if is_p
         }
+        return _AddFilePartition(
+            os.path.join(self.path, urllib.parse.unquote(add["path"])),
+            self.fields,
+            logical,
+            **cdf,
+        )
 
-    def _cdf_partitions(self, v: int, commit: str) -> list:
+    def _cdf_partitions(self, v: int, actions: list) -> list:
         """CDF planning for ONE commit: cdc files exclusively when
         present (self-contained change rows), else the insert-only
         shortcut; dataChange removes without cdc fail by name."""
-        cdc: list = []
-        adds: list = []
-        saw_remove = False
-        with open(commit) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "cdc" in action:
-                    cdc.append(action["cdc"])
-                elif "add" in action and action["add"].get(
-                    "dataChange", True
-                ):
-                    adds.append(action["add"])
-                elif "remove" in action and action["remove"].get(
-                    "dataChange", True
-                ):
-                    saw_remove = True
+        cdc = [a["cdc"] for a in actions if "cdc" in a]
         if cdc:
-            return [
-                _AddFilePartition(
-                    os.path.join(
-                        self.path, urllib.parse.unquote(a["path"])
-                    ),
-                    self.fields,
-                    self._logical_pv(a.get("partitionValues", {})),
-                    commit_version=v,
-                    change_type=None,  # the cdc file carries it
-                )
-                for a in cdc
-            ]
-        if saw_remove or any(a.get("deletionVector") for a in adds):
+            # the cdc file carries _change_type itself
+            return [self._partition(a, commit_version=v) for a in cdc]
+        if _rewrites(actions):
             # a DV attach without cdc is a rewrite too — streaming the
             # add's physical rows would deliver the deleted ones as
             # 'insert' (the batch twin applies the add's own DV state)
@@ -331,88 +287,32 @@ class DeltaStreamReader(DataSourceStreamReader):
                 "use the batch table_changes with keys)"
             )
         return [
-            _AddFilePartition(
-                os.path.join(self.path, urllib.parse.unquote(a["path"])),
-                self.fields,
-                self._logical_pv(a.get("partitionValues", {})),
-                commit_version=v,
-                change_type="insert",
-            )
-            for a in adds
+            self._partition(a, commit_version=v, change_type="insert")
+            for a in _data_adds(actions)
         ]
 
-    def partitions(self, start: dict, end: dict):
-        self._last = max(
-            self._last if self._last is not None else -1, end["version"]
-        )
-        log_dir = _log_path(self.path)
+    def _plan(self, lo: int, hi: int) -> list:
         out = []
-        for v in range(start["version"] + 1, end["version"] + 1):
-            commit = os.path.join(log_dir, f"{v:020d}.json")
-            if not os.path.exists(commit):
-                raise ValueError(
-                    f"commit {v} of {self.path} is not available as a "
-                    "JSON delta (expired by log retention) — the "
-                    "stream's offset range needs the per-commit actions"
-                )
+        for v in range(lo + 1, hi + 1):
+            actions = self._actions(v)
             if self.read_change_feed:
-                out.extend(self._cdf_partitions(v, commit))
+                out.extend(self._cdf_partitions(v, actions))
                 continue
-            commit_parts: list[_AddFilePartition] = []
-            is_change_commit = False
-            with open(commit) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    action = json.loads(line)
-                    if "remove" in action and action["remove"].get(
-                        "dataChange", True
-                    ):
-                        if self.skip_change_commits:
-                            is_change_commit = True
-                            continue
-                        raise ValueError(
-                            f"commit {v} of {self.path} removes data "
-                            "(DELETE/UPDATE/MERGE/overwrite) — an "
-                            "append-only stream cannot represent a "
-                            "retraction; restart from a snapshot read "
-                            "+ startingVersion past it, or pass "
-                            "skipChangeCommits=true to skip such "
-                            "commits entirely"
-                        )
-                    if "add" not in action:
-                        continue
-                    add = action["add"]
-                    if not add.get("dataChange", True):
-                        continue  # OPTIMIZE rewrite: rows already sent
-                    if add.get("deletionVector"):
-                        if self.skip_change_commits:
-                            is_change_commit = True
-                            continue
-                        raise ValueError(
-                            f"commit {v} of {self.path} attaches a "
-                            "deletion vector (row-level DELETE) — "
-                            "append-only stream, see above"
-                        )
-                    commit_parts.append(
-                        _AddFilePartition(
-                            os.path.join(
-                                self.path,
-                                urllib.parse.unquote(add["path"]),
-                            ),
-                            self.fields,
-                            self._logical_pv(
-                                add.get("partitionValues", {})
-                            ),
-                        )
-                    )
-            if is_change_commit:
-                # skipChangeCommits skips the WHOLE commit (the real
-                # option's semantics): its adds are rewrite survivors
-                # or updated versions, not appends
-                continue
-            out.extend(commit_parts)
+            if _rewrites(actions):
+                if self.skip_change_commits:
+                    # skipped WHOLE (the real option's semantics): its
+                    # adds are rewrite survivors or updated versions
+                    continue
+                raise ValueError(
+                    f"commit {v} of {self.path} rewrites data (DELETE/"
+                    "UPDATE/MERGE/overwrite or a deletion vector) — an "
+                    "append-only stream cannot represent a retraction; "
+                    "restart from a snapshot read + startingVersion "
+                    "past it, or pass skipChangeCommits=true to skip "
+                    "such commits entirely"
+                )
+            # OPTIMIZE's dataChange:false adds re-stage rows already sent
+            out.extend(self._partition(a) for a in _data_adds(actions))
         return out
 
     def read(self, partition: _AddFilePartition) -> Iterator:
@@ -431,12 +331,8 @@ class DeltaStreamReader(DataSourceStreamReader):
             arrays, names = [], []
             for name, phys, ddl, is_part in partition.fields:
                 if is_part:
-                    pv = _pv_python(
-                        partition.part_values.get(name), ddl
-                    )
-                    arrays.append(
-                        pa.array([pv] * n, type=_pa_type(ddl))
-                    )
+                    pv = _pv_python(partition.part_values.get(name), ddl)
+                    arrays.append(_const_column(pv, ddl, n))
                 else:
                     # files store the PHYSICAL name; emit the logical
                     arrays.append(
@@ -452,27 +348,13 @@ class DeltaStreamReader(DataSourceStreamReader):
                     )
                 else:
                     arrays.append(
-                        pa.array(
-                            [partition.change_type] * n, type=pa.string()
-                        )
+                        _const_column(partition.change_type, "string", n)
                     )
-                names.append("_change_type")
                 arrays.append(
-                    pa.array(
-                        [int(partition.commit_version)] * n,
-                        type=pa.int64(),
-                    )
+                    _const_column(partition.commit_version, "bigint", n)
                 )
-                names.append("_commit_version")
+                names += ["_change_type", "_commit_version"]
             yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    def commit(self, end: dict) -> None:
-        self._last = max(
-            self._last if self._last is not None else -1, end["version"]
-        )
-        save_high_water(
-            self.progress_dir, "delta_native", self._last + 1
-        )
 
 
 class DeltaNativeDataSource(DataSource):

@@ -13,6 +13,9 @@ the LATEST slice as of ``end`` of each file GROUP the range's commits
 touched, row-filtered to ``_hoodie_commit_time`` in range executor-
 side — so copied-over rows fall out and a group rewritten twice in
 one batch delivers each changed record ONCE with its final value.
+Admission (``maxCommitsPerTrigger``, ``maxBytesPerTrigger``,
+``progress_dir``) is sources/stream_progress.py's; every new commit
+counts, and the persisted mark is the instant itself.
 
 Semantics are a CHANGE/UPSERT FEED, not append-only: Hudi's commit-
 time meta column gives every row an exact change stamp, so UPSERT
@@ -42,16 +45,11 @@ stored IN Hudi data files (full rows), so no injection is needed.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Iterator
 
 from pyspark.sql import SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource, InputPartition
 from pyspark.sql.types import StructType
 
 from sparkstreamingtwitter_presidential_spark.sources.hudi import (
@@ -66,8 +64,7 @@ from sparkstreamingtwitter_presidential_spark.sources.hudi import (
     _replace_map,
 )
 from sparkstreamingtwitter_presidential_spark.sources.stream_progress import (
-    load_high_water,
-    save_high_water,
+    TailReader,
 )
 
 _COMMIT_TIME_COL = "_hoodie_commit_time"
@@ -97,38 +94,28 @@ class _SlicePartition(InputPartition):
         self.precombine = precombine
 
 
-def _instant_of(offset: dict) -> str:
-    return offset.get("instant", "")
+class HudiStreamReader(TailReader):
+    format_name = "hudi_native"
+    offset_key = "instant"
+    count_option = "maxCommitsPerTrigger"
 
-
-class HudiStreamReader(DataSourceStreamReader):
     def __init__(self, options, out_cols: list):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("hudi_native: .load(path) is required")
         self.out_cols = out_cols
-        self.starting = options.get("startingInstant", "")
-        self.max_commits = (
-            int(options.get("maxCommitsPerTrigger", "0")) or None
-        )
-        # byte-based admission (r10): per-commit write sizes from the
-        # commit metadata's fileSizeInBytes (this engine writes them;
-        # foreign commits without the field fall back to one os.stat
-        # per written slice, cached). Soft max — at least one commit
-        # always admits.
-        self.max_bytes = int(options.get("maxBytesPerTrigger", "0")) or None
         self._commit_bytes_cache: dict[str, int] = {}
-        self.progress_dir = options.get("progress_dir")
-        # persisted as int(instant); 0 == nothing consumed
-        hw = load_high_water(self.progress_dir, "hudi_native")
-        self._last: str | None = (
-            (str(hw).zfill(17) if hw else "") if hw is not None else None
-        )
+        super().__init__(options)
 
-    def initialOffset(self) -> dict:
-        return {"instant": self.starting}
+    def _start_clock(self, options) -> str:
+        return options.get("startingInstant", "")
 
-    def _commit_bytes(self, c: str) -> int:
+    def _window(self, floor: str):
+        commits = _completed_commits(self.path)
+        tail = commits[-1] if commits else ""
+        return [c for c in commits if c > floor], tail
+
+    def _size(self, c: str) -> int:
+        """Written bytes of one commit: the commit metadata's
+        fileSizeInBytes (this engine writes them), else one os.stat per
+        written slice; cached."""
         if c not in self._commit_bytes_cache:
             total = 0
             meta = _commit_meta(self.path, c)
@@ -146,32 +133,7 @@ class HudiStreamReader(DataSourceStreamReader):
             self._commit_bytes_cache[c] = total
         return self._commit_bytes_cache[c]
 
-    def latestOffset(self) -> dict:
-        commits = _completed_commits(self.path)
-        floor = self._last if self._last is not None else ""
-        floor = max(floor, self.starting)
-        news = [c for c in commits if c > floor]
-        if self.max_commits is not None and self._last is not None:
-            news = news[: self.max_commits]
-        if self.max_bytes is not None and self._last is not None:
-            kept, total = [], 0
-            for c in news:
-                b = self._commit_bytes(c)
-                if kept and total + b > self.max_bytes:
-                    break
-                kept.append(c)
-                total += b
-            news = kept
-        cur = news[-1] if news else floor
-        if self._last is not None:
-            cur = max(cur, self._last)
-        self._last = cur
-        return {"instant": cur}
-
-    def partitions(self, start: dict, end: dict):
-        lo, hi = _instant_of(start), _instant_of(end)
-        if self._last is None or hi > self._last:
-            self._last = hi
+    def _plan(self, lo: str, hi: str) -> list:
         if lo >= hi:
             return []  # empty replan tick
         # O(1) boundary read — the guard never parses the archive
@@ -342,16 +304,6 @@ class HudiStreamReader(DataSourceStreamReader):
             kept = batch.filter(mask)
             if kept.num_rows:
                 yield kept.select(partition.out_cols)
-
-    def commit(self, end: dict) -> None:
-        hi = _instant_of(end)
-        if self._last is None or hi > self._last:
-            self._last = hi
-        save_high_water(
-            self.progress_dir,
-            "hudi_native",
-            int(self._last) if self._last else 0,
-        )
 
 
 class HudiNativeDataSource(DataSource):

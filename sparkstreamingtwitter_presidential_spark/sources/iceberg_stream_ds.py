@@ -12,12 +12,15 @@ select by their own sequence number with the spec's inheritance rule
 — the same selection as read_iceberg_incremental, so foreign
 manifest-merging writers are read correctly). One InputPartition per
 data file; replays under checkpointing plan the identical slice.
+Admission (``maxSnapshotsPerTrigger``, ``maxBytesPerTrigger``,
+``progress_dir``) is sources/stream_progress.py's; the snapshots it
+counts are the main-history ones that deliver rows.
 
 Append-only contract (the real source's default): a non-append
 snapshot in range (overwrite/delete) fails the stream by name —
-or skips WHOLE under ``skipChangeCommits=true`` (r11, the Delta
-twin's option: a change commit's files are rewrite survivors, not
-appends); delete manifests with in-range content fail likewise;
+or skips WHOLE under ``skipChangeCommits=true`` (the Delta twin's
+option: a change commit's files are rewrite survivors, not appends);
+delete manifests with in-range content fail likewise;
 ``replace`` (compaction) always skips as layout-only. Schema
 evolution mid-stream is conservative: a range snapshot whose schema
 renames or retypes any current field refuses (field-id projection is
@@ -38,18 +41,14 @@ sources/delta_stream_ds.py.
 from __future__ import annotations
 
 import os
-from typing import Any, Iterator
+from typing import Iterator
 
 from pyspark.sql import SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource, InputPartition
 from pyspark.sql.types import StructType
 
 from sparkstreamingtwitter_presidential_spark.sources.delta_stream_ds import (
-    _pa_type,
+    _const_column,
 )
 from sparkstreamingtwitter_presidential_spark.sources.iceberg import (
     _STATUS_DELETED,
@@ -63,8 +62,8 @@ from sparkstreamingtwitter_presidential_spark.sources.iceberg import (
     read_container,
 )
 from sparkstreamingtwitter_presidential_spark.sources.stream_progress import (
-    load_high_water,
-    save_high_water,
+    TailReader,
+    starting_timestamp_ms,
 )
 
 
@@ -79,48 +78,13 @@ class _IceFilePartition(InputPartition):
         self.inject = inject
 
 
-class IcebergStreamReader(DataSourceStreamReader):
-    def __init__(self, options, fields: list):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("iceberg_native: .load(path) is required")
-        self.fields = fields  # (name, ddl) in schema order
-        if options.get("startingTimestamp") is not None:
-            # real-source parity (r10): stream from the first MAIN
-            # snapshot committed at-or-after the timestamp
-            if options.get("startingSequence") is not None:
-                raise ValueError(
-                    "pass either startingSequence or startingTimestamp, "
-                    "not both"
-                )
-            import datetime as _dt
+class IcebergStreamReader(TailReader):
+    format_name = "iceberg_native"
+    offset_key = "seq"
+    count_option = "maxSnapshotsPerTrigger"
 
-            ts = _dt.datetime.fromisoformat(options["startingTimestamp"])
-            if ts.tzinfo is None:
-                ts = ts.replace(tzinfo=_dt.timezone.utc)
-            want_ms = int(ts.timestamp() * 1000)
-            meta = _load_metadata(self.path)
-            anc = _ancestor_ids(meta, _snapshot(meta, None)["snapshot-id"])
-            cands = sorted(
-                (
-                    s["sequence-number"]
-                    for s in meta.get("snapshots", [])
-                    if s["snapshot-id"] in anc
-                    and int(s.get("timestamp-ms", 0)) >= want_ms
-                ),
-            )
-            if not cands:
-                raise ValueError(
-                    f"startingTimestamp {options['startingTimestamp']} "
-                    "is after the table's latest snapshot — nothing to "
-                    "stream from"
-                )
-            self.starting_seq = cands[0] - 1
-        else:
-            self.starting_seq = int(options.get("startingSequence", "0"))
-        self.max_snapshots = (
-            int(options.get("maxSnapshotsPerTrigger", "0")) or None
-        )
+    def __init__(self, options, fields: list):
+        self.fields = fields  # (name, ddl) in schema order
         # real-source parity (r11, the Delta twin's r10 option): skip
         # non-append snapshots WHOLE instead of failing the stream — a
         # change commit's added files are rewrite survivors / upsert
@@ -129,33 +93,81 @@ class IcebergStreamReader(DataSourceStreamReader):
             str(options.get("skipChangeCommits", "false")).lower()
             == "true"
         )
-        # byte-based admission (r10): cumulative added-files-size from
-        # the snapshot summaries (real-writer + this engine's field);
-        # summaries without it fall back to one cached manifest walk.
-        # Soft max — at least one snapshot always admits.
-        self.max_bytes = int(options.get("maxBytesPerTrigger", "0")) or None
+        self._window_snaps: dict[int, dict] = {}
         self._snap_bytes_cache: dict[int, int] = {}
-        self.progress_dir = options.get("progress_dir")
-        # sequence numbers are 1-based, so load_high_water's cold-start
-        # 0 natively means "nothing consumed" — no count shift needed
-        self._last: int | None = load_high_water(
-            self.progress_dir, "iceberg_native"
+        super().__init__(options)
+
+    def _start_clock(self, options) -> int:
+        want_ms = starting_timestamp_ms(options, "startingSequence")
+        if want_ms is None:
+            return int(options.get("startingSequence", "0"))
+        # real-source parity (r10): stream from the first MAIN
+        # snapshot committed at-or-after the timestamp
+        first = min(
+            (
+                s["sequence-number"]
+                for s in self._main_snapshots(
+                    _load_metadata(self.path), -1, float("inf")
+                )
+                if int(s.get("timestamp-ms", 0)) >= want_ms
+            ),
+            default=None,
+        )
+        if first is None:
+            raise ValueError(
+                f"startingTimestamp {options['startingTimestamp']} "
+                "is after the table's latest snapshot — nothing to "
+                "stream from"
+            )
+        return first - 1
+
+    @staticmethod
+    def _main_snapshots(meta: dict, lo, hi) -> list[dict]:
+        """Main-history snapshots with sequence in (lo, hi], in order:
+        the table-wide sequence clock also stamps BRANCH commits, which
+        a main-history stream must not deliver (or plan from)."""
+        anc = _ancestor_ids(meta, _snapshot(meta, None)["snapshot-id"])
+        return sorted(
+            (
+                s
+                for s in meta.get("snapshots", [])
+                if lo < s.get("sequence-number", 0) <= hi
+                and s["snapshot-id"] in anc
+            ),
+            key=lambda s: s["sequence-number"],
         )
 
-    def initialOffset(self) -> dict:
-        return {"seq": self.starting_seq}
+    def _skips(self, snap: dict) -> bool:
+        """partitions() skips the snapshot whole: a replace
+        (compaction/rewrite_manifests — layout-only; its rows deliver
+        under their ORIGINAL append snapshots, the real source's
+        behavior) or, under skipChangeCommits=true, any non-append."""
+        op = (snap.get("summary") or {}).get("operation")
+        return op == "replace" or (
+            self.skip_changes and op not in (None, "append")
+        )
 
-    def _snapshot_bytes(self, meta: dict, snap: dict) -> int:
-        sid = snap["snapshot-id"]
-        if sid not in self._snap_bytes_cache:
+    def _window(self, floor: int):
+        meta = _load_metadata(self.path)
+        tail = _snapshot(meta, None)["sequence-number"]
+        self._window_snaps = {
+            s["sequence-number"]: s
+            for s in self._main_snapshots(meta, floor, tail)
+            if not self._skips(s)
+        }
+        return list(self._window_snaps), tail
+
+    def _size(self, seq: int) -> int:
+        """Added bytes of one snapshot: the summary's added-files-size
+        (real writers and this engine's), else one cached walk of its
+        manifest list counting its own ADDED data entries."""
+        if seq not in self._snap_bytes_cache:
+            snap = self._window_snaps[seq]  # admit() walks _window's
             summ = snap.get("summary") or {}
             if "added-files-size" in summ:
-                self._snap_bytes_cache[sid] = int(summ["added-files-size"])
+                self._snap_bytes_cache[seq] = int(summ["added-files-size"])
             else:
-                # one cached walk of the snapshot's manifest list,
-                # counting its own ADDED data entries' sizes
                 total = 0
-                seq = snap["sequence-number"]
                 _, _, manifests = read_container(snap["manifest-list"])
                 for m in manifests:
                     if m["content"] != 0 or m["sequence_number"] != seq:
@@ -169,72 +181,14 @@ class IcebergStreamReader(DataSourceStreamReader):
                             total += int(
                                 e["data_file"].get("file_size_in_bytes", 0)
                             )
-                self._snap_bytes_cache[sid] = total
-        return self._snap_bytes_cache[sid]
+                self._snap_bytes_cache[seq] = total
+        return self._snap_bytes_cache[seq]
 
-    def latestOffset(self) -> dict:
-        meta = _load_metadata(self.path)
-        cur = _snapshot(meta, None)
-        s = cur["sequence-number"]
-        if self.max_snapshots is not None and self._last is not None:
-            s = min(s, self._last + self.max_snapshots)
-        if self.max_bytes is not None and self._last is not None:
-            anc = _ancestor_ids(meta, cur["snapshot-id"])
-            cands = sorted(
-                (
-                    x
-                    for x in meta.get("snapshots", [])
-                    if self._last < x.get("sequence-number", 0) <= s
-                    and x["snapshot-id"] in anc
-                    # replace (compaction) snapshots deliver zero rows
-                    # (partitions() skips them) — counting their bytes
-                    # would stall the budget on undelivered data; under
-                    # skipChangeCommits=true the same holds for EVERY
-                    # skipped non-append commit (r11 advice: a trigger
-                    # must not spend its byte budget on commits
-                    # partitions() will skip)
-                    and (x.get("summary") or {}).get("operation")
-                    != "replace"
-                    and not (
-                        self.skip_changes
-                        and (x.get("summary") or {}).get("operation")
-                        not in (None, "append")
-                    )
-                ),
-                key=lambda x: x["sequence-number"],
-            )
-            if cands:  # branch-only windows advance uncapped (they
-                # plan no files; capping to _last would stall the
-                # stream behind another branch's commits)
-                admitted, total = self._last, 0
-                for x in cands:
-                    b = self._snapshot_bytes(meta, x)
-                    if admitted > self._last and total + b > self.max_bytes:
-                        break
-                    admitted, total = x["sequence-number"], total + b
-                s = admitted
-        if self._last is not None:
-            s = max(s, self._last)
-        s = max(s, self.starting_seq)
-        self._last = s
-        return {"seq": s}
-
-    def partitions(self, start: dict, end: dict):
-        self._last = max(self._last or 0, end["seq"])
-        lo_seq, hi_seq = start["seq"], end["seq"]
+    def _plan(self, lo_seq: int, hi_seq: int) -> list:
         if lo_seq >= hi_seq:
             return []  # empty replan tick — nothing to deliver
         meta = _load_metadata(self.path)
-        # ancestry-filtered: the table-wide sequence clock also stamps
-        # BRANCH commits — a main-history stream must not deliver (or
-        # plan from the manifest list of) another branch's snapshot
-        anc = _ancestor_ids(meta, _snapshot(meta, None)["snapshot-id"])
-        snaps_in_range = [
-            s
-            for s in meta.get("snapshots", [])
-            if lo_seq < s.get("sequence-number", 0) <= hi_seq
-            and s["snapshot-id"] in anc
-        ]
+        snaps_in_range = self._main_snapshots(meta, lo_seq, hi_seq)
         if not snaps_in_range:
             if any(
                 lo_seq < s.get("sequence-number", 0) <= hi_seq
@@ -251,21 +205,13 @@ class IcebergStreamReader(DataSourceStreamReader):
         cur_by_id = {f["id"]: f for f in cur_schema["fields"]}
         planned: list[dict] = []
         for s in snaps_in_range:
-            op = s.get("summary", {}).get("operation")
-            if op == "replace":
-                # compaction/rewrite_manifests: layout-only — its rows
-                # were (or will be) delivered under their ORIGINAL
-                # append snapshots' sequences; planning each snapshot
-                # from its OWN manifest list (r10) makes skipping safe
-                # even mid-range (the real source's behavior — a
-                # compacting table must not kill its consumers)
+            if self._skips(s):
+                # planning each snapshot from its OWN manifest list
+                # makes skipping safe even mid-range; a skipped change
+                # commit's delete manifests skip with it
                 continue
+            op = (s.get("summary") or {}).get("operation")
             if op not in (None, "append"):
-                if self.skip_changes:
-                    # skipChangeCommits=true: the commit (data files
-                    # AND its delete manifests) skips whole — the
-                    # consumer opted into missing row-level changes
-                    continue
                 raise ValueError(
                     f"snapshot {s['snapshot-id']} (seq "
                     f"{s['sequence-number']}) in the stream's range is "
@@ -377,10 +323,7 @@ class IcebergStreamReader(DataSourceStreamReader):
             for name, ddl in partition.fields:
                 if name in partition.inject:
                     arrays.append(
-                        pa.array(
-                            [partition.inject[name]] * n,
-                            type=_pa_type(ddl),
-                        )
+                        _const_column(partition.inject[name], ddl, n)
                     )
                 else:
                     arrays.append(
@@ -388,10 +331,6 @@ class IcebergStreamReader(DataSourceStreamReader):
                     )
                 names.append(name)
             yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    def commit(self, end: dict) -> None:
-        self._last = max(self._last or 0, end["seq"])
-        save_high_water(self.progress_dir, "iceberg_native", self._last)
 
 
 class IcebergNativeDataSource(DataSource):

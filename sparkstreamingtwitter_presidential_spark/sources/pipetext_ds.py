@@ -39,7 +39,6 @@ from pyspark.sql import SparkSession
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     DataSourceWriter,
     EqualTo,
     Filter,
@@ -50,8 +49,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from sparkstreamingtwitter_presidential_spark.sources.stream_progress import (
-    load_high_water,
-    save_high_water,
+    TailReader,
 )
 
 _DDL = "text string, latitude float, longitude float, created_at timestamp"
@@ -192,7 +190,7 @@ class PipeTextWriter(DataSourceWriter):
                     pass
 
 
-class PipeTextStreamReader(DataSourceStreamReader):
+class PipeTextStreamReader(TailReader):
     """Tail a pipe-text directory as a Structured Streaming source.
 
     Offsets are positions in the SORTED file listing ({"index": N} ==
@@ -203,29 +201,13 @@ class PipeTextStreamReader(DataSourceStreamReader):
     zero-padded sequence numbers; the collector's replay staging does
     exactly that). Each micro-batch gets one InputPartition per new
     file — executor-parallel, exactly-once under checkpointing (the
-    offset log replays the same [start, end) file slice)."""
+    offset log replays the same [start, end) file slice).
+    ``maxFilesPerTrigger`` caps the files one micro-batch admits, the
+    builtin file source's knob (sources/stream_progress.py)."""
 
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("pipetext: .load(path) is required")
-        # admission control, same knob as the builtin file source: cap
-        # how many new files one micro-batch admits so a backlog drains
-        # in bounded batches instead of one giant catch-up batch.
-        self.max_files = int(options.get("maxFilesPerTrigger", "0")) or None
-        # High-water mark of files already planned/committed. Spark
-        # calls latestOffset() on a FRESH reader before initialOffset()
-        # or partitions() — on both cold start and clean restart — so
-        # an in-memory mark starting at 0 would, after a restart, cap
-        # the offset BEHIND the checkpoint, move the offset log
-        # backward, and re-deliver files. With ``progress_dir`` set the
-        # mark persists across restarts (commit() writes it) and the
-        # cap always applies. Without it the mark is None until seeded
-        # by partitions()/commit(), and an UNSEEDED latestOffset
-        # returns the full listing length: one uncapped catch-up batch,
-        # never a regression (see sources/stream_progress.py).
-        self.progress_dir = options.get("progress_dir")
-        self._last: int | None = load_high_water(self.progress_dir, "pipetext")
+    format_name = "pipetext"
+    offset_key = "index"
+    count_option = "maxFilesPerTrigger"
 
     def _files(self) -> list:
         if not os.path.isdir(self.path):
@@ -234,31 +216,18 @@ class PipeTextStreamReader(DataSourceStreamReader):
             n for n in os.listdir(self.path) if not n.startswith(("_", "."))
         )
 
-    def initialOffset(self) -> dict:
-        # the stream's logical beginning. NOT the high-water mark:
-        # Spark calls latestOffset() BEFORE initialOffset() even on a
-        # cold start, so returning the (already advanced) mark here
-        # would make batch 0 skip the entire backlog.
-        return {"index": 0}
+    def _start_clock(self, options) -> int:
+        return 0
 
-    def latestOffset(self) -> dict:
+    def _window(self, floor: int):
         n = len(self._files())
-        if self.max_files is not None and self._last is not None:
-            n = min(n, self._last + self.max_files)
-        if self._last is not None:
-            n = max(n, self._last)  # monotone even if files vanish
-        self._last = n
-        return {"index": n}
+        return range(floor + 1, n + 1), n
 
-    def partitions(self, start: dict, end: dict):
-        # a replayed/committed batch proves the stream is already at
-        # end.index — never let latestOffset regress behind what the
-        # offset log has durably planned
-        self._last = max(self._last or 0, end["index"])
+    def _plan(self, lo: int, hi: int) -> list:
         files = self._files()
         return [
             _FilePartition(os.path.join(self.path, files[i]))
-            for i in range(start["index"], min(end["index"], len(files)))
+            for i in range(lo, min(hi, len(files)))
         ]
 
     def read(self, partition: _FilePartition):
@@ -266,10 +235,6 @@ class PipeTextStreamReader(DataSourceStreamReader):
             for line in fh:
                 if line.strip() != "":
                     yield _parse_line(line)
-
-    def commit(self, end: dict) -> None:
-        self._last = max(self._last or 0, end["index"])  # see partitions()
-        save_high_water(self.progress_dir, "pipetext", self._last)
 
 
 class PipeTextDataSource(DataSource):

@@ -273,6 +273,47 @@ def test_stream_skip_change_commits(spark, tmp_path):
     assert sorted(r[0] for r in sink) == [0, 1, 2, 3, 10]
 
 
+@pytest.mark.parametrize("cap", ["maxBytesPerTrigger", "maxCommitsPerTrigger"])
+def test_stream_skip_change_commits_caps(spark, tmp_path, cap):
+    """Under skipChangeCommits=true, neither cap spends a trigger on the
+    skipped DML commit: one batch per APPEND commit, no zero-row batch
+    in the middle."""
+    from sparkstreamingtwitter_presidential_spark.sources.delta_dml import (
+        delete_delta,
+    )
+
+    register_delta_stream(spark)
+    t = str(tmp_path / "t")
+    write_delta(
+        spark.createDataFrame(
+            [(i, 0, float(i)) for i in range(4)],
+            "id long, part int, v double",
+        ).repartition(1),
+        t,
+        mode="append",
+    )
+    delete_delta(spark, t, "id = 1")
+    for i in (10, 11):
+        write_delta(
+            spark.createDataFrame(
+                [(i, 0, float(i))], "id long, part int, v double"
+            ),
+            t,
+            mode="append",
+        )
+    ckpt = str(tmp_path / "ckpt")
+    sink: list = []
+    counts: list = []
+    _run(
+        spark, t, ckpt, sink, batches=counts,
+        skipChangeCommits="true", progress_dir=ckpt, **{cap: "1"},
+    )
+    assert sorted(r[0] for r in sink) == [0, 1, 2, 3, 10, 11]
+    while counts and counts[-1] == 0:
+        counts.pop()  # trailing empty replan ticks are fine
+    assert counts == [4, 1, 1]
+
+
 def test_stream_starting_timestamp(spark, tmp_path):
     """startingTimestamp resolves to the first commit at-or-after it
     (real-source parity); both-options and after-latest refuse."""

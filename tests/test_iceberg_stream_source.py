@@ -259,10 +259,11 @@ def test_iceberg_stream_skip_change_commits(spark, tmp_path):
     assert sorted(r[0] for r in sink2) == [11]
 
 
-def test_iceberg_stream_skip_change_commits_byte_budget(spark, tmp_path):
-    """r11 advice: with skipChangeCommits=true, maxBytesPerTrigger must
-    not spend a trigger's budget on commits partitions() will skip —
-    no zero-row micro-batch burned on the skipped DML commit."""
+@pytest.mark.parametrize("cap", ["maxBytesPerTrigger", "maxSnapshotsPerTrigger"])
+def test_iceberg_stream_skip_change_commits_byte_budget(spark, tmp_path, cap):
+    """With skipChangeCommits=true, neither the byte nor the count cap
+    spends a trigger on commits partitions() will skip — no zero-row
+    micro-batch burned on the skipped DML commit."""
     from sparkstreamingtwitter_presidential_spark.sources.iceberg import (
         delete_iceberg,
     )
@@ -278,8 +279,7 @@ def test_iceberg_stream_skip_change_commits_byte_budget(spark, tmp_path):
     counts: list = []
     _run(
         spark, t, ckpt, sink, batches=counts,
-        maxBytesPerTrigger="1", skipChangeCommits="true",
-        progress_dir=ckpt,
+        skipChangeCommits="true", progress_dir=ckpt, **{cap: "1"},
     )
     assert sorted(r[0] for r in sink) == [0, 1, 2, 3, 10, 11]
     while counts and counts[-1] == 0:
