@@ -28,6 +28,11 @@ MERGE-ON-READ tables too):
    safe to replay — same optimistic-concurrency contract as the real
    client).
 
+The deletion-vector flavours (``*_delta_dv``) share one body per
+statement with their copy-on-write twins; the format-independent half
+of both (contracts, rewrites, lineage carry, vector union) is
+``row_dml.py``, shared with the Iceberg connector.
+
 OPTIMIZE is the same machinery with ``dataChange: false``: it bin-packs
 small files per partition toward a target size, so downstream streaming
 readers (which key on dataChange) correctly ignore it, and time travel
@@ -36,8 +41,10 @@ to pre-OPTIMIZE versions still works.
 
 from __future__ import annotations
 
+import json
 import os
 import urllib.parse
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -45,6 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from sparkstreamingtwitter_presidential_spark.sources.delta import (
+    _DV_PAIRS_DRIVER_MAX,
     _assign_row_tracking,
     _column_mapping,
     _enforce_row_contracts,
@@ -59,6 +67,24 @@ from sparkstreamingtwitter_presidential_spark.sources.delta import (
     _Snapshot,
     _stage_files,
     commit_actions,
+)
+from sparkstreamingtwitter_presidential_spark.sources.delta_dv import (
+    dv_row_indexes,
+    pack_dv_file,
+)
+from sparkstreamingtwitter_presidential_spark.sources.row_dml import (
+    Lineage,
+    affected_files,
+    carry_id,
+    check_merge,
+    check_set,
+    collect_positions,
+    cow_delete,
+    cow_merge,
+    cow_update,
+    holds,
+    set_columns,
+    union_vectors,
 )
 
 
@@ -103,6 +129,8 @@ def _now_ms() -> int:
     return int(time.time() * 1000)
 
 
+# the refusal context every copy-on-write rewrite shares
+_COW = "copy-on-write DML/OPTIMIZE"
 _FILE_COL = "__delta_file"
 _POS_COL = "__delta_pos"
 
@@ -322,8 +350,6 @@ def _scan_with_file(
         for col, val in zip(snap.partition_columns, key):
             df = df.withColumn(col, F.lit(val).cast(part_types[col]))
         parts.append(df.select(*cols, *extra_phys_cols, *extra_names))
-    from functools import reduce
-
     return reduce(DataFrame.unionByName, parts)
 
 
@@ -335,6 +361,11 @@ def _rel_by_base(snap: _Snapshot) -> dict[str, str]:
             raise ValueError(f"duplicate data-file basename {base!r}")
         out[base] = rel
     return out
+
+
+def _rels(snap: _Snapshot, bases: list[str]) -> list[str]:
+    rels = _rel_by_base(snap)
+    return [rels[b] for b in bases]
 
 
 def _removes(snap: _Snapshot, rels: list[str], data_change: bool) -> list[dict]:
@@ -496,64 +527,103 @@ def _rt_resolved_scan(
     )
 
 
-def _affected_files(scan: DataFrame, cond: Column) -> list[str]:
-    """Basenames of live files containing >=1 row matching ``cond``.
-    Distributed scan + distinct on the file column; the driver holds
-    only the file LIST (metadata scale, same as the log itself)."""
-    return [
-        r[_FILE_COL]
-        for r in scan.filter(cond).select(_FILE_COL).distinct().collect()
-    ]
+def _dml_scan(
+    spark: SparkSession, path: str, snap: _Snapshot, ctx: str, dv: bool
+) -> tuple[DataFrame, Lineage]:
+    """The tagged scan a DML statement plans over, with the row-tracking
+    lineage pair its rewrites carry (None on an untracked table).
+    Copy-on-write scans hide rows a live deletion vector removed, so a
+    rewrite never resurrects them; deletion-vector scans keep those rows
+    and their positions, because the union rule owns the old vectors."""
+    if _row_tracking_active(snap):
+        return _rt_resolved_scan(
+            spark, path, snap, ctx, apply_dvs=not dv, keep_pos=dv
+        )
+    scan = _scan_with_file(spark, path, snap, with_pos=dv, apply_dvs=not dv)
+    return scan, None
+
+
+def _changes(df: DataFrame, kind: str) -> DataFrame:
+    return df.withColumn("_change_type", F.lit(kind))
+
+
+def _commit_dml(
+    path: str,
+    snap: _Snapshot,
+    actions: list[dict],
+    op: str,
+    params: dict,
+    dv: bool,
+    assign_ids: bool,
+) -> int:
+    """Commit a DML statement: deletion-vector commits record their
+    mode, and row-tracked ones claim fresh id ranges for staged adds
+    (rewrites' carried ids ride inside the files)."""
+    if dv:
+        params = {**params, "mode": "deletion-vectors"}
+    if assign_ids:
+        actions = _assign_row_tracking(snap, actions, snap.version + 1)
+    return commit_actions(
+        path, snap.version, actions, op, params, snapshot=snap
+    )
+
+
+def _delete(
+    spark: SparkSession, path: str, predicate: str, budget: int | None
+) -> int:
+    """DELETE, copy-on-write (``budget`` None) or into deletion vectors
+    of at most ``budget`` newly deleted rows."""
+    dv = budget is not None
+    snap = _replay_log(path, None)
+    name = "delete_delta_dv" if dv else "DELETE"
+    mapping = _write_mapping(snap, name)
+    _refuse_unenforced_writer_contracts(
+        snap, name if dv else _COW, emits_removes=True
+    )
+    cond = F.expr(predicate)
+    tcols = [f.name for f in snap.schema.fields]
+    emit_cdf = _cdf_enabled(snap)
+    if dv:
+        # a DV delete never moves a row: re-added actions carry
+        # baseRowId/defaultRowCommitVersion verbatim, so surviving ids
+        # are stable without a lineage-resolving scan
+        scan = _scan_with_file(spark, path, snap, with_pos=True)
+        mark = _dv_mark_matched(
+            path, snap, scan.filter(cond), budget, "delete_delta"
+        )
+        if mark is None:
+            return snap.version
+        actions, fresh = mark
+        lineage = None
+        deleted = _rows_at(spark, scan, fresh) if emit_cdf else None
+    else:
+        scan, lineage = _dml_scan(spark, path, snap, "DELETE", dv)
+        affected = affected_files(scan.filter(cond), _FILE_COL)
+        if not affected:
+            return snap.version
+        rows = scan.filter(F.col(_FILE_COL).isin(affected))
+        kept = cow_delete(rows, tcols, cond, lineage)
+        _enforce_row_contracts(snap, kept, "DELETE rewrite")
+        actions = _removes(snap, _rels(snap, affected), True)
+        actions += _stage_table_files(kept, path, snap, mapping)
+        deleted = rows.filter(holds(cond))
+    if emit_cdf:
+        actions += _stage_cdc_mapped(
+            _changes(deleted.select(*tcols), "delete"), path, snap, mapping
+        )
+    return _commit_dml(
+        path, snap, actions, "DELETE", {"predicate": predicate}, dv,
+        lineage is not None,
+    )
 
 
 def delete_delta(spark: SparkSession, path: str, predicate: str) -> int:
     """DELETE FROM table WHERE predicate (SQL-null semantics: only rows
     where the predicate is TRUE are deleted). Returns the new version
-    (unchanged if nothing matched — no empty commit)."""
-    snap = _replay_log(path, None)
-    mapping = _write_mapping(snap, "DELETE")
-    _refuse_unenforced_writer_contracts(
-        snap, "copy-on-write DML/OPTIMIZE", emits_removes=True
-    )
-    # MOR tables work directly (r10): the scan applies live deletion
-    # vectors, so a rewrite can never resurrect deleted rows; rewritten
-    # files drop their vectors with the remove, untouched files keep
-    # theirs
-    rt = _row_tracking_active(snap)
-    if rt:
-        # r12: survivors CARRY their resolved row id + commit version
-        # as materialized columns in the rewritten files
-        scan, rt_cols = _rt_resolved_scan(spark, path, snap, "DELETE")
-    else:
-        scan, rt_cols = _scan_with_file(spark, path, snap, apply_dvs=True), ()
-    cond = F.expr(predicate)
-    affected = _affected_files(scan, cond)
-    if not affected:
-        return snap.version
-    rels = _rel_by_base(snap)
-    kept = (
-        scan.filter(F.col(_FILE_COL).isin(affected))
-        .filter(~F.coalesce(cond, F.lit(False)))
-        .drop(_FILE_COL)
-    )
-    _enforce_row_contracts(snap, kept, "DELETE rewrite")
-    adds = _stage_table_files(kept, path, snap, mapping)
-    cdc: list[dict] = []
-    if _cdf_enabled(snap):
-        deleted_rows = (
-            scan.filter(F.col(_FILE_COL).isin(affected))
-            .filter(F.coalesce(cond, F.lit(False)))
-            .drop(_FILE_COL, *rt_cols)
-            .withColumn("_change_type", F.lit("delete"))
-        )
-        cdc = _stage_cdc_mapped(deleted_rows, path, snap, mapping)
-    actions = _removes(snap, [rels[b] for b in affected], True) + adds + cdc
-    if rt:
-        actions = _assign_row_tracking(snap, actions, snap.version + 1)
-    return commit_actions(
-        path, snap.version, actions, "DELETE", {"predicate": predicate},
-        snapshot=snap,
-    )
+    (unchanged if nothing matched — no empty commit). Only files holding
+    a match rewrite; on a row-tracked table the survivors carry their
+    resolved row id and commit version as materialized columns."""
+    return _delete(spark, path, predicate, None)
 
 
 # Legacy protocol version -> implied feature sets: shared constants in
@@ -587,33 +657,23 @@ def _dv_protocol_upgrade(snap: _Snapshot) -> dict[str, Any] | None:
     }
 
 
-# Matched-row budget for a DV delete: positions collect driver-side
-# (the descriptor bitmaps are driver-written metadata), so the matched
-# set must stay metadata-sized. Matches delta._DV_PAIRS_DRIVER_MAX so
-# a table this writer produces always reads back under read_delta's
-# pair budget. Bigger deletes belong to copy-on-write delete_delta,
-# whose cost is ∝ affected-file bytes but whose driver state is only
-# the file list.
-_DV_DELETE_MAX_ROWS = 2_000_000
-
-
 def delete_delta_dv(
     spark: SparkSession,
     path: str,
     predicate: str,
-    max_deleted_rows: int = _DV_DELETE_MAX_ROWS,
+    max_deleted_rows: int = _DV_PAIRS_DRIVER_MAX,
 ) -> int:
     """DELETE FROM table WHERE predicate — MERGE-ON-READ flavor: marks
     matched rows in per-file DELETION VECTORS instead of rewriting the
-    data files (the write side of the r9 DV read path; Delta
-    PROTOCOL.md §Deletion Vectors). Returns the new version (unchanged
-    if nothing matched).
+    data files (Delta PROTOCOL.md §Deletion Vectors). Returns the new
+    version (unchanged if nothing matched).
 
     Mechanics: one distributed scan finds matched (file, row_index)
-    pairs; they collect driver-side (bounded by ``max_deleted_rows`` —
-    refuse above, pointing at copy-on-write :func:`delete_delta`), are
-    unioned with each file's EXISTING vector (the spec: a new DV
-    replaces the old and must contain it), and serialize into ONE
+    pairs; they collect driver-side (bounded by ``max_deleted_rows``,
+    by default read_delta's driver pair budget, so a table this writer
+    produces always reads back under it — refuse above, pointing at
+    copy-on-write :func:`delete_delta`), are unioned with each file's
+    EXISTING vector (row_dml.union_vectors), and serialize into ONE
     roaring-bitmap sidecar per commit (delta_dv.pack_dv_file). A file
     whose union covers every physical row emits a plain remove instead
     of a 100%-deleted DV, matching the real writer. The commit
@@ -628,183 +688,101 @@ def delete_delta_dv(
     columns; write cost is ∝ matched rows (bitmap bytes), NOT affected
     -file bytes — the point of DVs. Read-back applies the vectors via
     read_delta's broadcast anti-join. Name-mode column-mapped tables
-    work (r10 — DVs key on positions, untouched files keep their
-    physical names; only the cdc staging renames); id-mode refuses
+    work (DVs key on positions, untouched files keep their physical
+    names; only the cdc staging renames); id-mode refuses
     (_write_mapping); appendOnly tables refuse (a DV is a delete)."""
-    snap = _replay_log(path, None)
-    mapping = _write_mapping(snap, "delete_delta_dv")
-    _refuse_unenforced_writer_contracts(
-        snap, "delete_delta_dv", emits_removes=True
-    )
-    # row-tracked tables work as-is (r12-late): a DV delete never
-    # moves a row — the re-added action carries baseRowId/
-    # defaultRowCommitVersion verbatim, so surviving ids are stable
-    cond = F.expr(predicate)
-    scan = _scan_with_file(spark, path, snap, with_pos=True)
-    mark = _dv_mark_matched(
-        path, snap, scan, cond, max_deleted_rows, "delete"
-    )
-    if mark is None:
-        return snap.version
-    actions, fresh_pairs = mark
-    if _cdf_enabled(snap) and fresh_pairs:
-        # CDF on a DV delete: the newly-deleted rows (never the ones a
-        # previous vector already covered) materialize as cdc 'delete'
-        # rows — the driver-built pair set is already budget-bounded
-        deleted_rows = (
-            scan.join(
-                _pairs_frame(spark, fresh_pairs),
-                on=[_FILE_COL, _POS_COL],
-                how="leftsemi",
-            )
-            .drop(_FILE_COL, _POS_COL)
-            .withColumn("_change_type", F.lit("delete"))
-        )
-        actions.extend(
-            _stage_cdc_mapped(deleted_rows, path, snap, mapping)
-        )
-    return commit_actions(
-        path,
-        snap.version,
-        actions,
-        "DELETE",
-        {"predicate": predicate, "mode": "deletion-vectors"},
-        snapshot=snap,
-    )
+    return _delete(spark, path, predicate, max_deleted_rows)
 
 
-def _pairs_frame(spark: SparkSession, pairs: list) -> DataFrame:
-    return F.broadcast(
-        spark.createDataFrame(pairs, f"{_FILE_COL} string, {_POS_COL} long")
-    )
+def _dv_positions(path: str, add: dict) -> list[int]:
+    dv = add.get("deletionVector")
+    return dv_row_indexes(path, dv) if dv else []
+
+
+def _num_records(add: dict) -> int | None:
+    stats = add.get("stats")
+    return json.loads(stats).get("numRecords") if stats else None
 
 
 def _dv_mark_matched(
     path: str,
     snap: _Snapshot,
-    scan: DataFrame,
-    cond,
+    matches: DataFrame,
     budget: int,
-    op: str,
-) -> tuple[list[dict], list[tuple[str, int]]] | None:
-    """Shared DV-marking machinery (delete_delta_dv / update_delta_dv):
-    collect matched (file, row_index) pairs driver-side (bounded by
-    ``budget``), union each touched file's set with its EXISTING
-    vector (spec: a new DV must contain the old), and build the commit
-    actions — protocol upgrade if needed, plain removes for fully-
-    deleted files, remove+re-add with the packed descriptor otherwise.
-    Returns (actions, fresh_pairs) where fresh_pairs are the NEWLY
-    marked (file basename, row_index) rows (never ones a previous
-    vector already covered), or None when nothing new matched."""
-    import json as _json
-
-    from sparkstreamingtwitter_presidential_spark.sources.delta_dv import (
-        dv_row_indexes,
-        pack_dv_file,
-    )
-
-    matched = (
-        scan.filter(cond)
-        .select(_FILE_COL, _POS_COL)
-        .limit(budget + 1)
-        .collect()
-    )
-    if len(matched) > budget:
-        raise NotImplementedError(
-            f"DV {op} matched more than {budget} rows; descriptors are "
-            "driver-built metadata and a change this size should "
-            "rewrite data files — use the copy-on-write path"
-        )
-    if not matched:
-        return None
+    cow_twin: str,
+) -> tuple[list[dict], dict[str, list[int]]] | None:
+    """The Delta side of a deletion-vector write: collect ``matches``'
+    positions (row_dml.collect_positions), union them with each file's
+    existing vector (row_dml.union_vectors), and build the actions —
+    protocol upgrade if needed, plain removes for retired files,
+    remove + re-add with the packed descriptor otherwise. Returns
+    (actions, newly deleted positions per file basename), or None when
+    nothing new matched."""
+    new = collect_positions(matches, _FILE_COL, _POS_COL, budget, cow_twin)
     rels = _rel_by_base(snap)
-    by_rel: dict[str, set[int]] = {}
-    for r in matched:
-        by_rel.setdefault(rels[r[_FILE_COL]], set()).add(int(r[_POS_COL]))
-
-    new_rows_per_rel: dict[str, list[int]] = {}
-    fully_deleted: list[str] = []
-    fresh_pairs: list[tuple[str, int]] = []  # (file basename, row_index)
-    for rel, poss in by_rel.items():
-        add = snap.files[rel]
-        old_dv = add.get("deletionVector")
-        old = set(dv_row_indexes(path, old_dv)) if old_dv else set()
-        union = sorted(old | poss)
-        if len(union) == len(old):
-            continue  # every match was already deleted — no-op file
-        base = urllib.parse.unquote(rel).split("/")[-1]
-        fresh_pairs.extend((base, p) for p in sorted(poss - old))
-        stats = add.get("stats")
-        n_phys = _json.loads(stats).get("numRecords") if stats else None
-        if n_phys is not None and len(union) == int(n_phys):
-            fully_deleted.append(rel)
-        else:
-            new_rows_per_rel[rel] = union
-    if not new_rows_per_rel and not fully_deleted:
+    vu = union_vectors(
+        new,
+        lambda b: _dv_positions(path, snap.files[rels[b]]),
+        lambda b: _num_records(snap.files[rels[b]]),
+    )
+    if not vu.fresh:
         return None
-
+    unions = {rels[b]: poss for b, poss in vu.unions.items()}
     actions: list[dict[str, Any]] = []
     upgrade = _dv_protocol_upgrade(snap)
-    if upgrade is not None and new_rows_per_rel:
+    if upgrade is not None and unions:
         actions.append({"protocol": upgrade})
-    actions.extend(
-        _removes(snap, fully_deleted + sorted(new_rows_per_rel), True)
-    )
-    descs = (
-        pack_dv_file(path, new_rows_per_rel) if new_rows_per_rel else {}
-    )
-    for rel in sorted(new_rows_per_rel):
+    actions += _removes(snap, [rels[b] for b in vu.retired] + list(unions), True)
+    descs = pack_dv_file(path, unions) if unions else {}
+    for rel in sorted(unions):
         a = dict(snap.files[rel])
         a["deletionVector"] = descs[rel]
         a["dataChange"] = True
         a["modificationTime"] = _now_ms()
         if a.get("stats"):
-            st = _json.loads(a["stats"])
+            st = json.loads(a["stats"])
             st["tightBounds"] = False
-            a["stats"] = _json.dumps(st)
+            a["stats"] = json.dumps(st)
         actions.append({"add": a})
-    return actions, fresh_pairs
+    return actions, vu.fresh
 
 
-def update_delta_dv(
+def _rows_at(
+    spark: SparkSession, scan: DataFrame, positions: dict[str, list[int]]
+) -> DataFrame:
+    """The rows of a positional ``scan`` at ``positions`` (a bounded,
+    driver-built set, so the build side broadcasts)."""
+    pairs = spark.createDataFrame(
+        [(b, p) for b, poss in positions.items() for p in poss],
+        f"{_FILE_COL} string, {_POS_COL} long",
+    )
+    return scan.join(
+        F.broadcast(pairs), on=[_FILE_COL, _POS_COL], how="leftsemi"
+    ).drop(_FILE_COL, _POS_COL)
+
+
+def _update(
     spark: SparkSession,
     path: str,
     set_exprs: dict[str, str],
-    predicate: str | None = None,
-    max_updated_rows: int = _DV_DELETE_MAX_ROWS,
+    predicate: str | None,
+    dv: bool,
 ) -> int:
-    """UPDATE ... SET — MERGE-ON-READ flavor (how the real writer runs
-    UPDATE/MERGE on DV-enabled tables): ONE commit marks the matched
-    rows deleted in per-file deletion vectors AND stages their updated
-    versions as new data files. No matched file is rewritten; write
-    cost ∝ matched rows (bitmap bytes + the new rows' bytes), not
-    affected-file bytes.
-
-    Rows a PREVIOUS vector already deleted are invisible and are NOT
-    updated (resurrecting them as fresh rows would be wrong) — the
-    update set is exactly the newly-marked rows. Expressions evaluate
-    against the PRE-update row (SQL UPDATE semantics); partition
-    columns cannot be updated (same contract as the CoW path). With
-    CDF enabled the commit stages update pre/post images. Budget and
-    refusal story match delete_delta_dv."""
+    """UPDATE, copy-on-write or deletion-vector (see the two entry
+    points): the flavours share the SET contract, the generated-column
+    recompute, the contract probe and the pre/post-image change rows."""
     snap = _replay_log(path, None)
-    mapping = _write_mapping(snap, "update_delta_dv")
+    name = "update_delta_dv" if dv else "UPDATE"
+    ctx = "UPDATE (deletion-vectors)" if dv else "UPDATE"
+    mapping = _write_mapping(snap, name)
     _refuse_unenforced_writer_contracts(
-        snap, "update_delta_dv", emits_removes=True
+        snap, name if dv else _COW, emits_removes=True
     )
-    _refuse_identity_update(snap, "update_delta_dv", set_exprs)
-    bad = set(set_exprs) & set(snap.partition_columns)
-    if bad:
-        raise ValueError(
-            f"cannot UPDATE partition column(s) {sorted(bad)}; "
-            "delete+insert (or merge) instead"
-        )
-    schema = snap.schema
-    assert schema is not None
-    unknown = set(set_exprs) - {f.name for f in schema.fields}
-    if unknown:
-        raise ValueError(f"unknown column(s) in SET: {sorted(unknown)}")
-    gen_targets = set(set_exprs) & {c for c, _ in _generated_exprs(schema)}
+    _refuse_identity_update(snap, name, set_exprs)
+    fields = snap.schema.fields
+    tcols = [f.name for f in fields]
+    check_set(set_exprs, tcols, snap.partition_columns)
+    gen_targets = set(set_exprs) & {c for c, _ in _generated_exprs(snap.schema)}
     if gen_targets:
         raise ValueError(
             f"cannot UPDATE generated column(s) {sorted(gen_targets)}; "
@@ -812,221 +790,175 @@ def update_delta_dv(
             "their source columns change"
         )
     cond = F.expr(predicate) if predicate is not None else F.lit(True)
-    rt = _row_tracking_active(snap)
-    if rt:
-        # r12-late: the marking scan resolves row ids in place, so the
-        # re-staged updated rows CARRY identity (materialized _row_id;
-        # the commit version derives from the new add's default)
-        scan, (mat_id, _mat_ver) = _rt_resolved_scan(
-            spark, path, snap, "UPDATE (deletion-vectors)",
-            apply_dvs=False, keep_pos=True,
+    scan, lineage = _dml_scan(spark, path, snap, ctx, dv)
+    if dv:
+        # rows a previous vector deleted are invisible and never update:
+        # the re-staged set is exactly the newly marked rows, carrying
+        # their row ids
+        mark = _dv_mark_matched(
+            path, snap, scan.filter(cond), _DV_PAIRS_DRIVER_MAX, "update_delta"
+        )
+        if mark is None:
+            return snap.version
+        actions, fresh = mark
+        before = _rows_at(spark, scan, fresh)
+        staged = before.select(
+            *set_columns(fields, set_exprs), *carry_id(lineage)
         )
     else:
-        scan = _scan_with_file(spark, path, snap, with_pos=True)
-    mark = _dv_mark_matched(
-        path, snap, scan, cond, max_updated_rows, "update"
-    )
-    if mark is None:
-        return snap.version
-    actions, fresh_pairs = mark
-    fresh = scan.join(
-        _pairs_frame(spark, fresh_pairs),
-        on=[_FILE_COL, _POS_COL],
-        how="leftsemi",
-    ).drop(_FILE_COL, _POS_COL)
-    updated = fresh.select(
-        *[
-            (
-                F.expr(set_exprs[f.name]).cast(f.dataType).alias(f.name)
-                if f.name in set_exprs
-                else F.col(f.name)
-            )
-            for f in schema.fields
-        ],
-        *([F.col(mat_id)] if rt else []),
-    )
-    updated = _recompute_generated(
-        snap, updated, "UPDATE (deletion-vectors)"
-    )
-    _enforce_row_contracts(snap, updated, "UPDATE (deletion-vectors)")
-    actions.extend(_stage_table_files(updated, path, snap, mapping))
+        affected = affected_files(scan.filter(cond), _FILE_COL)
+        if not affected:
+            return snap.version
+        rows = scan.filter(F.col(_FILE_COL).isin(affected))
+        actions = _removes(snap, _rels(snap, affected), True)
+        staged = cow_update(rows, fields, set_exprs, cond, lineage)
+        before = rows.filter(holds(cond))
+    staged = _recompute_generated(snap, staged, f"{ctx} rewrite")
+    _enforce_row_contracts(snap, staged, f"{ctx} rewrite")
+    actions += _stage_table_files(staged, path, snap, mapping)
     if _cdf_enabled(snap):
-        pre = (fresh.drop(mat_id, _mat_ver) if rt else fresh).withColumn(
-            "_change_type", F.lit("update_preimage")
+        before = before.select(*tcols)
+        after = _recompute_generated(
+            snap, before.select(*set_columns(fields, set_exprs)), f"{ctx} cdc"
         )
-        post = (updated.drop(mat_id) if rt else updated).withColumn(
-            "_change_type", F.lit("update_postimage")
+        actions += _stage_cdc_mapped(
+            _changes(before, "update_preimage").unionByName(
+                _changes(after, "update_postimage")
+            ),
+            path, snap, mapping,
         )
-        actions.extend(
-            _stage_cdc_mapped(pre.unionByName(post), path, snap, mapping)
-        )
-    if rt:
-        actions = _assign_row_tracking(snap, actions, snap.version + 1)
-    return commit_actions(
-        path,
-        snap.version,
-        actions,
-        "UPDATE",
-        {"predicate": predicate or "true", "mode": "deletion-vectors"},
-        snapshot=snap,
+    return _commit_dml(
+        path, snap, actions, "UPDATE", {"predicate": predicate or "true"},
+        dv, lineage is not None,
     )
 
 
-def merge_delta_dv(
+def update_delta_dv(
+    spark: SparkSession,
+    path: str,
+    set_exprs: dict[str, str],
+    predicate: str | None = None,
+) -> int:
+    """UPDATE ... SET — MERGE-ON-READ flavor (how the real writer runs
+    UPDATE on DV-enabled tables): ONE commit marks the matched rows
+    deleted in per-file deletion vectors AND stages their updated
+    versions as new data files. Write cost ∝ matched rows; contract,
+    budget and refusals as :func:`update_delta` and
+    :func:`delete_delta_dv`."""
+    return _update(spark, path, set_exprs, predicate, dv=True)
+
+
+def update_delta(
+    spark: SparkSession,
+    path: str,
+    set_exprs: dict[str, str],
+    predicate: str | None = None,
+) -> int:
+    """UPDATE table SET col = expr, ... [WHERE predicate]. Expressions
+    are SQL over the row's own columns (evaluated against the PRE-update
+    row, like SQL UPDATE). Partition, generated and identity columns
+    cannot be updated (a real row-move rewrite is MERGE's job). With
+    CDF enabled the commit stages update pre/post images. Returns the
+    new version."""
+    return _update(spark, path, set_exprs, predicate, dv=False)
+
+
+def _merge(
     spark: SparkSession,
     path: str,
     source: DataFrame,
     keys: list[str],
-    when_matched: str = "update",
-    insert_not_matched: bool = True,
-    txn: tuple[str, int] | None = None,
-    max_matched_rows: int = _DV_DELETE_MAX_ROWS,
+    when_matched: str,
+    insert_not_matched: bool,
+    txn: tuple[str, int] | None,
+    dv: bool,
 ) -> int:
-    """MERGE INTO — MERGE-ON-READ flavor (the real writer's MERGE on
-    DV-enabled tables, and the common CDC-upsert shape): ONE commit
-    marks the matched target rows deleted in per-file deletion
-    vectors, stages the source's versions of those keys
-    (``when_matched='update'``; ``'delete'`` stages nothing), and
-    appends the unmatched source rows (``insert_not_matched``). No
-    matched file rewrites — write cost ∝ matched rows + source bytes,
-    not affected-file bytes, which is what makes a small CDC batch
-    against a huge table cheap.
-
-    Contract matches :func:`merge_delta`: source columns must equal
-    the table's, duplicate source keys raise, ``txn`` records the
-    idempotence marker in the same commit. Matched-row positions
-    collect driver-side under ``max_matched_rows`` (refuse → CoW
-    merge_delta). Rows a previous vector already deleted are invisible
-    — a source row matching only dead rows inserts (if enabled) rather
-    than updating them. With CDF enabled the commit stages
-    pre/post/insert (or delete) change rows."""
-    if when_matched not in ("update", "delete"):
-        raise ValueError(
-            f"when_matched must be update|delete: {when_matched!r}"
-        )
+    """MERGE, copy-on-write or deletion-vector (see the two entry
+    points): one contract (row_dml.check_merge), one insert branch, one
+    change-row and txn tail; only the WHEN MATCHED step differs."""
     snap = _replay_log(path, None)
-    mapping = _write_mapping(snap, "merge_delta_dv")
+    name = "merge_delta_dv" if dv else "MERGE"
+    ctx = "MERGE (deletion-vectors)" if dv else "MERGE"
+    mapping = _write_mapping(snap, name)
     _refuse_unenforced_writer_contracts(
-        snap, "merge_delta_dv", emits_removes=True
+        snap, name if dv else _COW, emits_removes=True
     )
-    _refuse_identity_merge(snap, "merge_delta_dv")
-    schema = snap.schema
-    assert schema is not None
-    tcols = [f.name for f in schema.fields]
-    if sorted(source.columns) != sorted(tcols):
-        raise ValueError(
-            f"source columns {sorted(source.columns)} != table's "
-            f"{sorted(tcols)}"
-        )
-    missing = [k for k in keys if k not in tcols]
-    if missing:
-        raise ValueError(f"merge keys not in table: {missing}")
-    dup = source.groupBy(*keys).count().filter("count > 1").limit(1).collect()
-    if dup:
-        raise ValueError(
-            f"source has duplicate merge keys (e.g. "
-            f"{ {k: dup[0][k] for k in keys} }); MERGE would be ambiguous"
-        )
-    source = source.select(*tcols)
-
-    rt = _row_tracking_active(snap)
-    if rt:
-        # r12-late: resolve row ids on the marking scan so re-staged
-        # matched rows CARRY identity (materialized _row_id; commit
-        # version derives from the new add's default)
-        scan, (mat_id, _mat_ver) = _rt_resolved_scan(
-            spark, path, snap, "MERGE (deletion-vectors)",
-            apply_dvs=False, keep_pos=True,
-        )
-    else:
-        scan = _scan_with_file(spark, path, snap, with_pos=True)
-    key_df = source.select(*keys).distinct()
-    # the LIVE matched rows: raw-scan matches minus rows an existing
-    # vector already deleted (handled inside _dv_mark_matched's
-    # fresh-pair computation; the semi-join here is the raw match)
-    cond_scan = scan.join(key_df, on=keys, how="leftsemi")
-    mark = _dv_mark_matched(
-        path,
-        snap,
-        cond_scan,
-        F.lit(True),
-        max_matched_rows,
-        "merge",
-    )
+    _refuse_identity_merge(snap, name)
+    tcols = [f.name for f in snap.schema.fields]
+    source = check_merge(source, tcols, keys, when_matched)
+    scan, lineage = _dml_scan(spark, path, snap, ctx, dv)
     actions: list[dict[str, Any]] = []
-    fresh_pairs: list[tuple[str, int]] = []
-    if mark is not None:
-        actions, fresh_pairs = mark
-    cdc_frames: list[DataFrame] = []
-    emit_cdf = _cdf_enabled(snap)
-    matched_keys = None
-    if fresh_pairs:
-        fresh_rows = scan.join(
-            _pairs_frame(spark, fresh_pairs),
-            on=[_FILE_COL, _POS_COL],
-            how="leftsemi",
-        ).drop(_FILE_COL, _POS_COL)
-        matched_keys = fresh_rows.select(*keys).distinct()
-        if when_matched == "update":
-            # one updated row PER MATCHED TARGET ROW (duplicate target
-            # keys each update — the CoW merge's semantics), hence the
-            # inner join on the matched rows' keys, not a semi-join
-            updated = fresh_rows.select(
-                *keys, *([F.col(mat_id)] if rt else [])
-            ).join(source, on=keys, how="inner").select(
-                *tcols, *([F.col(mat_id)] if rt else [])
-            )
-            updated = _recompute_generated(
-                snap, updated, "MERGE (deletion-vectors) update"
-            )
-            _enforce_row_contracts(
-                snap, updated, "MERGE (deletion-vectors) update"
-            )
-            actions.extend(
-                _stage_table_files(updated, path, snap, mapping)
-            )
-            if emit_cdf:
-                cdc_frames.append(
-                    (fresh_rows.drop(mat_id, _mat_ver) if rt else fresh_rows)
-                    .withColumn("_change_type", F.lit("update_preimage"))
-                )
-                cdc_frames.append(
-                    (updated.drop(mat_id) if rt else updated).withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                )
-        elif emit_cdf:
-            cdc_frames.append(
-                (fresh_rows.drop(mat_id, _mat_ver) if rt else fresh_rows)
-                .withColumn("_change_type", F.lit("delete"))
-            )
-    if insert_not_matched:
+    before = after = None
+    if not dv:
+        cm = cow_merge(scan, _FILE_COL, source, keys, when_matched, lineage)
+        inserts = cm.inserts
+        if cm.affected:
+            before = cm.before
+            after = _recompute_generated(snap, cm.after, f"{ctx} cdc")
+            staged = _recompute_generated(snap, cm.rewritten, f"{ctx} rewrite")
+            _enforce_row_contracts(snap, staged, f"{ctx} rewrite")
+            actions += _removes(snap, _rels(snap, cm.affected), True)
+            actions += _stage_table_files(staged, path, snap, mapping)
+    else:
+        key_df = source.select(*keys).distinct()
         inserts = source
-        if matched_keys is not None:
-            inserts = source.join(matched_keys, on=keys, how="leftanti")
-        # VALIDATE (not recompute) provided generated values on insert
-        # — the r11 advice fix, same rationale as merge_delta's branch
-        _enforce_row_contracts(
-            snap, inserts, "MERGE (deletion-vectors) insert"
-        )
-        actions.extend(
-            _stage_table_files(inserts, path, snap, mapping)
-        )
-        if emit_cdf:
-            cdc_frames.append(
-                inserts.withColumn("_change_type", F.lit("insert"))
+        if when_matched == "none":
+            live = _scan_with_file(spark, path, snap, apply_dvs=True)
+            inserts = source.join(
+                live.join(key_df, on=keys, how="leftsemi")
+                .select(*keys)
+                .distinct(),
+                on=keys,
+                how="leftanti",
             )
-    if cdc_frames:
-        from functools import reduce as _reduce
-
-        actions.extend(
-            _stage_cdc_mapped(
-                _reduce(DataFrame.unionByName, cdc_frames),
-                path,
-                snap,
-                mapping,
+        else:
+            mark = _dv_mark_matched(
+                path, snap, scan.join(key_df, on=keys, how="leftsemi"),
+                _DV_PAIRS_DRIVER_MAX, "merge_delta",
             )
-        )
+            if mark is not None:
+                actions, fresh = mark
+                before = _rows_at(spark, scan, fresh)
+                inserts = source.join(
+                    before.select(*keys).distinct(), on=keys, how="leftanti"
+                )
+        if before is not None and when_matched == "update":
+            # one replacement PER MATCHED TARGET ROW (duplicate target
+            # keys each update, as in the copy-on-write merge), carrying
+            # the target row's id
+            ids = carry_id(lineage)
+            staged = (
+                before.select(*keys, *ids)
+                .join(source, on=keys, how="inner")
+                .select(*tcols, *ids)
+            )
+            staged = _recompute_generated(snap, staged, f"{ctx} rewrite")
+            _enforce_row_contracts(snap, staged, f"{ctx} rewrite")
+            actions += _stage_table_files(staged, path, snap, mapping)
+            after = staged
+    if insert_not_matched:
+        # the insert branch VALIDATES provided generated-column values
+        # (the `col <=> (expr)` probe inside _enforce_row_contracts)
+        # rather than recomputing them: the real writer rejects a wrong
+        # provided value on insert — recompute is reserved for rewrite
+        # branches where source columns changed under the row
+        _enforce_row_contracts(snap, inserts, f"{ctx} insert")
+        actions += _stage_table_files(inserts, path, snap, mapping)
+    if _cdf_enabled(snap):
+        frames = []
+        if before is not None and when_matched == "update":
+            frames += [
+                _changes(before.select(*tcols), "update_preimage"),
+                _changes(after.select(*tcols), "update_postimage"),
+            ]
+        elif before is not None and when_matched == "delete":
+            frames.append(_changes(before.select(*tcols), "delete"))
+        if insert_not_matched:
+            frames.append(_changes(inserts, "insert"))
+        if frames:
+            actions += _stage_cdc_mapped(
+                reduce(DataFrame.unionByName, frames), path, snap, mapping
+            )
     if txn is not None:
         actions.append(
             {
@@ -1039,134 +971,43 @@ def merge_delta_dv(
         )
     if not actions:
         return snap.version
-    if rt and any("add" in a for a in actions):
-        actions = _assign_row_tracking(snap, actions, snap.version + 1)
-    return commit_actions(
-        path,
-        snap.version,
-        actions,
-        "MERGE",
-        {
-            "keys": keys,
-            "whenMatched": when_matched,
-            "insertNotMatched": insert_not_matched,
-            "mode": "deletion-vectors",
-        },
-        snapshot=snap,
+    return _commit_dml(
+        path, snap, actions, "MERGE",
+        {"keys": keys, "whenMatched": when_matched,
+         "insertNotMatched": insert_not_matched},
+        dv, lineage is not None and any("add" in a for a in actions),
     )
 
 
-def update_delta(
+def merge_delta_dv(
     spark: SparkSession,
     path: str,
-    set_exprs: dict[str, str],
-    predicate: str | None = None,
+    source: DataFrame,
+    keys: list[str],
+    when_matched: str = "update",
+    insert_not_matched: bool = True,
+    txn: tuple[str, int] | None = None,
 ) -> int:
-    """UPDATE table SET col = expr, ... [WHERE predicate]. Expressions
-    are SQL over the row's own columns (evaluated against the PRE-update
-    row, like SQL UPDATE). Partition columns cannot be updated (a real
-    row-move rewrite is MERGE's job). Returns the new version."""
-    snap = _replay_log(path, None)
-    mapping = _write_mapping(snap, "UPDATE")
-    _refuse_unenforced_writer_contracts(
-        snap, "copy-on-write DML/OPTIMIZE", emits_removes=True
-    )
-    bad = set(set_exprs) & set(snap.partition_columns)
-    if bad:
-        raise ValueError(
-            f"cannot UPDATE partition column(s) {sorted(bad)}; "
-            "delete+insert (or merge) instead"
-        )
-    schema = snap.schema
-    assert schema is not None
-    unknown = set(set_exprs) - {f.name for f in schema.fields}
-    if unknown:
-        raise ValueError(f"unknown column(s) in SET: {sorted(unknown)}")
-    gen_targets = set(set_exprs) & {c for c, _ in _generated_exprs(schema)}
-    if gen_targets:
-        raise ValueError(
-            f"cannot UPDATE generated column(s) {sorted(gen_targets)}; "
-            "they recompute from their generation expressions when "
-            "their source columns change"
-        )
-    _refuse_identity_update(snap, "UPDATE", set_exprs)
-    rt = _row_tracking_active(snap)
-    if rt:
-        scan, (mat_id, mat_ver) = _rt_resolved_scan(
-            spark, path, snap, "UPDATE"
-        )
-    else:
-        scan = _scan_with_file(spark, path, snap, apply_dvs=True)
-    cond = F.expr(predicate) if predicate is not None else F.lit(True)
-    affected = _affected_files(scan, cond)
-    if not affected:
-        return snap.version
-    rels = _rel_by_base(snap)
-    hit = F.coalesce(cond, F.lit(False))
-    rewritten = scan.filter(F.col(_FILE_COL).isin(affected)).select(
-        *[
-            (
-                F.when(hit, F.expr(set_exprs[f.name]).cast(f.dataType))
-                .otherwise(F.col(f.name))
-                .alias(f.name)
-                if f.name in set_exprs
-                else F.col(f.name)
-            )
-            for f in schema.fields
-        ],
-        # r12 row tracking: every rewritten row keeps its id; HIT rows
-        # null their materialized commit version so the add's
-        # defaultRowCommitVersion (this commit) applies on read, while
-        # copied rows keep their original attribution
-        *(
-            [
-                F.col(mat_id),
-                F.when(hit, F.lit(None).cast("long"))
-                .otherwise(F.col(mat_ver))
-                .alias(mat_ver),
-            ]
-            if rt
-            else []
-        ),
-    )
-    rewritten = _recompute_generated(snap, rewritten, "UPDATE rewrite")
-    _enforce_row_contracts(snap, rewritten, "UPDATE rewrite")
-    adds = _stage_table_files(rewritten, path, snap, mapping)
-    cdc: list[dict] = []
-    if _cdf_enabled(snap):
-        matched = scan.filter(F.col(_FILE_COL).isin(affected)).filter(hit)
-        if rt:
-            matched = matched.drop(mat_id, mat_ver)
-        pre = matched.drop(_FILE_COL).withColumn(
-            "_change_type", F.lit("update_preimage")
-        )
-        post = _recompute_generated(
-            snap,
-            matched.select(
-                *[
-                    (
-                        F.expr(set_exprs[f.name])
-                        .cast(f.dataType)
-                        .alias(f.name)
-                        if f.name in set_exprs
-                        else F.col(f.name)
-                    )
-                    for f in schema.fields
-                ]
-            ),
-            "UPDATE cdc",
-        ).withColumn("_change_type", F.lit("update_postimage"))
-        cdc = _stage_cdc_mapped(pre.unionByName(post), path, snap, mapping)
-    actions = _removes(snap, [rels[b] for b in affected], True) + adds + cdc
-    if rt:
-        actions = _assign_row_tracking(snap, actions, snap.version + 1)
-    return commit_actions(
-        path,
-        snap.version,
-        actions,
-        "UPDATE",
-        {"predicate": predicate or "true"},
-        snapshot=snap,
+    """MERGE INTO — MERGE-ON-READ flavor (the real writer's MERGE on
+    DV-enabled tables, and the common CDC-upsert shape): ONE commit
+    marks the matched target rows deleted in per-file deletion
+    vectors, stages the source's versions of those keys
+    (``when_matched='update'``; ``'delete'`` stages nothing; ``'none'``
+    leaves them and writes no vector), and appends the unmatched source
+    rows (``insert_not_matched``). No matched file rewrites — write
+    cost ∝ matched rows + source bytes, not affected-file bytes, which
+    is what makes a small CDC batch against a huge table cheap.
+
+    Contract matches :func:`merge_delta` (row_dml.check_merge); ``txn``
+    records the idempotence marker in the same commit. Matched-row
+    positions collect driver-side under read_delta's pair budget
+    (refuse → CoW merge_delta). Rows a previous vector already deleted
+    are invisible — a source row matching only dead rows inserts (if
+    enabled) rather than updating them. With CDF enabled the commit
+    stages pre/post/insert (or delete) change rows."""
+    return _merge(
+        spark, path, source, keys, when_matched, insert_not_matched, txn,
+        dv=True,
     )
 
 
@@ -1199,182 +1040,9 @@ def merge_delta(
     scan against the (usually far smaller, auto-broadcast) source keys;
     only files containing matches rewrite; inserts append. A
     partition-aligned key makes the probe partition-pruned."""
-    if when_matched not in ("update", "delete", "none"):
-        raise ValueError(f"when_matched must be update|delete|none: {when_matched!r}")
-    snap = _replay_log(path, None)
-    mapping = _write_mapping(snap, "MERGE")
-    _refuse_unenforced_writer_contracts(
-        snap, "copy-on-write DML/OPTIMIZE", emits_removes=True
-    )
-    _refuse_identity_merge(snap, "MERGE")
-    schema = snap.schema
-    assert schema is not None
-    tcols = [f.name for f in schema.fields]
-    if sorted(source.columns) != sorted(tcols):
-        raise ValueError(
-            f"source columns {sorted(source.columns)} != table's {sorted(tcols)}"
-        )
-    missing = [k for k in keys if k not in tcols]
-    if missing:
-        raise ValueError(f"merge keys not in table: {missing}")
-
-    dup = source.groupBy(*keys).count().filter("count > 1").limit(1).collect()
-    if dup:
-        raise ValueError(
-            f"source has duplicate merge keys (e.g. "
-            f"{ {k: dup[0][k] for k in keys} }); MERGE would be ambiguous"
-        )
-    source = source.select(*tcols)  # column order for unionByName/insert
-
-    rt = _row_tracking_active(snap)
-    if rt:
-        scan, (mat_id, mat_ver) = _rt_resolved_scan(
-            spark, path, snap, "MERGE"
-        )
-    else:
-        scan = _scan_with_file(spark, path, snap, apply_dvs=True)
-    key_df = source.select(*keys).distinct()
-    affected = [
-        r[_FILE_COL]
-        for r in scan.join(key_df, on=keys, how="leftsemi")
-        .select(_FILE_COL)
-        .distinct()
-        .collect()
-    ]
-    rels = _rel_by_base(snap)
-
-    actions: list[dict[str, Any]] = []
-    matched_keys = None
-    cdc_frames: list[DataFrame] = []
-    emit_cdf = _cdf_enabled(snap)
-    if affected:
-        hit_rows = scan.filter(F.col(_FILE_COL).isin(affected))
-        src = source.select(
-            *[F.col(c).alias(f"__src_{c}") for c in tcols]
-        ).withColumn("__matched", F.lit(True))
-        joined = hit_rows.join(
-            src,
-            on=[hit_rows[k] == src[f"__src_{k}"] for k in keys],
-            how="left",
-        )
-        m = F.coalesce(F.col("__matched"), F.lit(False))
-        # r12 row tracking: rewritten rows keep their resolved id (an
-        # upsert changes values, not identity); MATCHED rows null
-        # their materialized commit version (the add's default — this
-        # commit — applies on read), copied rows keep theirs. Inserts
-        # below stage without the columns and mint fresh ids.
-        rt_carry = (
-            [
-                hit_rows[mat_id],
-                F.when(m, F.lit(None).cast("long"))
-                .otherwise(hit_rows[mat_ver])
-                .alias(mat_ver),
-            ]
-            if rt
-            else []
-        )
-        rt_keep = (
-            [hit_rows[mat_id], hit_rows[mat_ver]] if rt else []
-        )
-        if when_matched == "update":
-            rewritten = joined.select(
-                *[
-                    F.when(m, F.col(f"__src_{c}"))
-                    .otherwise(hit_rows[c])
-                    .alias(c)
-                    for c in tcols
-                ],
-                *rt_carry,
-            )
-            if emit_cdf:
-                matched_rows = joined.filter(m)
-                cdc_frames.append(
-                    matched_rows.select(
-                        *[hit_rows[c] for c in tcols]
-                    ).withColumn("_change_type", F.lit("update_preimage"))
-                )
-                cdc_frames.append(
-                    _recompute_generated(
-                        snap,
-                        matched_rows.select(
-                            *[F.col(f"__src_{c}").alias(c) for c in tcols]
-                        ),
-                        "MERGE cdc",
-                    ).withColumn("_change_type", F.lit("update_postimage"))
-                )
-        elif when_matched == "delete":
-            rewritten = joined.filter(~m).select(
-                *[hit_rows[c] for c in tcols], *rt_keep
-            )
-            if emit_cdf:
-                cdc_frames.append(
-                    joined.filter(m)
-                    .select(*[hit_rows[c] for c in tcols])
-                    .withColumn("_change_type", F.lit("delete"))
-                )
-        else:  # 'none': matched rows keep their current values
-            rewritten = joined.select(
-                *[hit_rows[c] for c in tcols], *rt_keep
-            )
-        actions += _removes(snap, [rels[b] for b in affected], True)
-        rewritten = _recompute_generated(snap, rewritten, "MERGE rewrite")
-        _enforce_row_contracts(snap, rewritten, "MERGE rewrite")
-        actions += _stage_table_files(rewritten, path, snap, mapping)
-        matched_keys = (
-            scan.filter(F.col(_FILE_COL).isin(affected)).select(*keys).distinct()
-        )
-
-    if insert_not_matched:
-        inserts = source
-        if matched_keys is not None:
-            inserts = source.join(matched_keys, on=keys, how="leftanti")
-        # (no affected files -> no key matched -> every source row inserts)
-        # INSERT branch VALIDATES provided generated-column values (the
-        # `col <=> (expr)` probe inside _enforce_row_contracts) rather
-        # than recomputing them (r11 advice): the real writer rejects a
-        # wrong provided value on insert — recompute is reserved for
-        # update/rewrite branches where source columns legitimately
-        # changed under the row.
-        _enforce_row_contracts(snap, inserts, "MERGE insert")
-        actions += _stage_table_files(inserts, path, snap, mapping)
-        if emit_cdf:
-            cdc_frames.append(
-                inserts.withColumn("_change_type", F.lit("insert"))
-            )
-    if cdc_frames:
-        from functools import reduce as _reduce
-
-        actions += _stage_cdc_mapped(
-            _reduce(DataFrame.unionByName, cdc_frames),
-            path,
-            snap,
-            mapping,
-        )
-
-    if txn is not None:
-        actions.append(
-            {
-                "txn": {
-                    "appId": txn[0],
-                    "version": int(txn[1]),
-                    "lastUpdated": _now_ms(),
-                }
-            }
-        )
-    if not actions:
-        return snap.version
-    if rt and any("add" in a for a in actions):
-        # r12 row tracking: fresh id ranges for the staged adds
-        # (rewrites' materialized carries ride inside the files)
-        actions = _assign_row_tracking(snap, actions, snap.version + 1)
-    return commit_actions(
-        path,
-        snap.version,
-        actions,
-        "MERGE",
-        {"keys": keys, "whenMatched": when_matched,
-         "insertNotMatched": insert_not_matched},
-        snapshot=snap,
+    return _merge(
+        spark, path, source, keys, when_matched, insert_not_matched, txn,
+        dv=False,
     )
 
 
@@ -1411,9 +1079,6 @@ def vacuum_delta(
     # `rel in snap.files` guard on the tombstone pass.
     snap = _replay_log(path, None)
     log_dir = os.path.join(path, "_delta_log")
-
-    import json
-
     tombstones: dict[str, int] = {}
     for n in sorted(os.listdir(log_dir)):
         if not (n.endswith(".json") and n[:-5].isdigit()):
@@ -1562,7 +1227,7 @@ def optimize_delta(
     snap = _replay_log(path, None)
     mapping = _write_mapping(snap, "OPTIMIZE")
     _refuse_unenforced_writer_contracts(
-        snap, "copy-on-write DML/OPTIMIZE", emits_removes=True
+        snap, _COW, emits_removes=True
     )
     for arg_name, arg in (("cluster_by", cluster_by), ("zorder_by", zorder_by)):
         if not arg:
@@ -1743,16 +1408,9 @@ def rewrite_deletion_vectors(
 
     sub = _copy.copy(snap)
     sub.files = {p: snap.files[p] for p in dv_rels}
-    rt = _row_tracking_active(snap)
-    if rt:
-        # r12-late: a layout-only fold keeps BOTH row id and commit
-        # version for every surviving row (materialized carry)
-        scan, _rt_cols = _rt_resolved_scan(
-            spark, path, sub, "REORG", apply_dvs=False, keep_pos=True
-        )
-    else:
-        scan = _scan_with_file(spark, path, sub, with_pos=True)
-
+    # a layout-only fold keeps BOTH row id and commit version for
+    # every surviving row (the lineage pair rides along unchanged)
+    scan, lineage = _dml_scan(spark, path, sub, "REORG", dv=True)
     build = _dv_pairs_by_base(spark, path, snap, dv_rels)
     kept = scan.join(
         build, on=[_FILE_COL, _POS_COL], how="left_anti"
@@ -1761,7 +1419,7 @@ def rewrite_deletion_vectors(
     for a in adds:
         a["add"]["dataChange"] = False  # layout-only, like OPTIMIZE
     actions = _removes(snap, dv_rels, False) + adds
-    if rt:
+    if lineage is not None:
         actions = _assign_row_tracking(snap, actions, snap.version + 1)
     return commit_actions(
         path,

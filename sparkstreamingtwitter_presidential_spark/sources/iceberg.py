@@ -77,7 +77,7 @@ import re as _re_mod
 import time
 import urllib.parse
 import uuid
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -87,6 +87,14 @@ from sparkstreamingtwitter_presidential_spark.sources._fs import put_if_absent
 from sparkstreamingtwitter_presidential_spark.sources.avro import (
     read_container,
     write_container,
+)
+from sparkstreamingtwitter_presidential_spark.sources.row_dml import (
+    affected_files,
+    check_merge,
+    check_set,
+    cow_delete,
+    cow_merge,
+    cow_update,
 )
 
 _METADATA_DIR = "metadata"
@@ -4580,29 +4588,58 @@ def _scan_entries_mixed_spec(
     return reduce(DataFrame.unionByName, parts)
 
 
-def _dml_plan(spark: SparkSession, path: str):
-    """DML plans under the CURRENT schema (like a current read): after
+class _DmlPlan(NamedTuple):
+    meta: dict
+    snap: dict
+    ice_schema: dict
+    part_fields: list[dict]
+    spark_schema: T.StructType
+    entries: list[dict]
+    dels: list[dict]
+    scan: DataFrame
+
+    @property
+    def columns(self) -> list[str]:
+        return [f.name for f in self.spark_schema.fields]
+
+    @property
+    def lineage(self) -> tuple[str, str] | None:
+        """v3 row lineage, which every rewrite carries (row_dml.carry)."""
+        if self.meta.get("format-version", 1) >= 3:
+            return (_ROW_ID_COL, _LAST_UPDATED_COL)
+        return None
+
+
+def _dml_plan(
+    spark: SparkSession,
+    path: str,
+    ctx: str = "copy-on-write DML",
+    with_file: bool = True,
+    meta: dict | None = None,
+) -> _DmlPlan:
+    """The one Iceberg DML plan, copy-on-write (``with_file``: the scan
+    carries each row's file basename) and deletion-vector alike. It
+    plans under the CURRENT schema (like a current read): after
     add_column, old files scan NULL for the new field and rewrites
     land in the evolved shape — so SET/MERGE may reference evolved
     columns. Name projection here (same boundary as partitioned reads;
     self-written tables are exact — renames go through
     rename_column_iceberg's guards).
 
-    MOR tables work directly (r10 — previously refused via
-    _entries_for_snapshot): live position/equality deletes apply to
-    the DML scan through _row_delete_filter, so a rewrite can never
-    resurrect deleted rows; the commit carries the parent's delete
-    manifests forward (carry_delete_manifests) — rewritten rows are
-    immune (higher sequence / removed paths) while untouched files
-    stay filtered. The returned ``has_deletes`` flag tells callers to
-    set that commit option."""
-    meta = _load_metadata(path)
+    Live position/equality deletes and deletion vectors apply to the
+    scan through _row_delete_filter, so a matched row is live by
+    construction and a rewrite can never resurrect a deleted one;
+    copy-on-write commits carry the parent's delete manifests forward
+    (rewritten rows are immune — higher sequence / removed paths —
+    while untouched files stay filtered)."""
+    if meta is None:
+        meta = _load_metadata(path)
     snap = _snapshot(meta, None)
     ice_schema = _schema_for(meta, meta.get("current-schema-id", 0))
     part_fields = _partition_fields(meta, ice_schema)
     spark_schema = _schema_to_spark(ice_schema)
     entries, dels = _entries_and_deletes_for_snapshot(path, snap)
-    _refuse_renamed_files(meta, entries, ice_schema, "copy-on-write DML")
+    _refuse_renamed_files(meta, entries, ice_schema, ctx)
     scan_filter = (
         _row_delete_filter(spark, meta, entries, dels, ice_schema)
         if dels
@@ -4611,11 +4648,10 @@ def _dml_plan(spark: SparkSession, path: str):
     # v3: the DML scan reads under the lineage-extended schema and
     # carries path/position, so rewrites can MATERIALIZE each copied
     # row's _row_id/_last_updated_sequence_number (spec §Row Lineage —
-    # a CoW rewrite must not change surviving rows' identity; r12)
+    # a CoW rewrite must not change surviving rows' identity)
     fv3 = meta.get("format-version", 1) >= 3
     scan_schema = _lineage_scan_schema(spark_schema) if fv3 else spark_schema
-    # MIXED-SPEC tables (r13 — lifts the r12 _refuse_spec_evolution
-    # guard for CoW DML): after partition evolution the live set spans
+    # MIXED-SPEC tables: after partition evolution the live set spans
     # spec generations; the DML scan applies the snapshot-read rule —
     # identity injection keys on each file's OWN writing spec, one
     # branch per spec GENERATION (not per file), unioned back under
@@ -4630,21 +4666,50 @@ def _dml_plan(spark: SparkSession, path: str):
         entries,
         scan_schema,
         part_fields,
-        with_file=True,
+        with_file=with_file,
         scan_filter=scan_filter,
         with_path_pos=fv3,
     )
     if fv3:
         scan = _resolve_lineage(spark, entries, scan)
-    return (
-        meta,
-        snap,
-        ice_schema,
-        part_fields,
-        spark_schema,
-        entries,
-        scan,
-        bool(dels),
+    return _DmlPlan(
+        meta, snap, ice_schema, part_fields, spark_schema, entries, dels, scan
+    )
+
+
+def _stage_plan_rows(path: str, p: _DmlPlan, rows: DataFrame) -> list[dict]:
+    """Stage DML output rows under the plan's default spec and sort."""
+    return _stage_data_files(
+        rows, path, p.ice_schema, p.part_fields,
+        sort_fields=_default_sort_fields(p.meta, p.ice_schema),
+    )
+
+
+def _commit_rewrite(
+    path: str,
+    p: _DmlPlan,
+    affected: list[str],
+    added: list[dict],
+    operation: str,
+    summary_extra: dict[str, str] | None = None,
+) -> int:
+    """The copy-on-write commit: the ``affected`` files (basenames) leave
+    as DELETED, every other live file carries as EXISTING, ``added``
+    joins, and live delete manifests carry forward."""
+    by_base = _entries_by_base(p.entries)
+    hit_set = set(affected)
+    return _commit_snapshot(
+        path,
+        p.meta,
+        p.ice_schema,
+        p.part_fields,
+        added_files=added,
+        existing_entries=[e for b, e in by_base.items() if b not in hit_set],
+        deleted_entries=[by_base[b] for b in sorted(hit_set)],
+        carry_prior_manifests=False,
+        operation=operation,
+        summary_extra=summary_extra,
+        carry_delete_manifests=bool(p.dels),
     )
 
 
@@ -4714,48 +4779,17 @@ def delete_iceberg(spark: SparkSession, path: str, predicate: str) -> int:
     a ``delete`` snapshot carrying every untouched file forward.
     Returns the new snapshot id (the current one unchanged if nothing
     matched — no empty commit)."""
-    (
-        meta, snap, ice_schema, part_fields, _schema, entries, scan,
-        has_deletes,
-    ) = _dml_plan(spark, path)
+    p = _dml_plan(spark, path)
     cond = F.expr(predicate)
-    affected = [
-        r[_FILE_COL]
-        for r in scan.filter(cond).select(_FILE_COL).distinct().collect()
-    ]
+    affected = affected_files(p.scan.filter(cond), _FILE_COL)
     if not affected:
-        return snap["snapshot-id"]
-    by_base = _entries_by_base(entries)
-    affected_set = set(affected)
-    fv3 = meta.get("format-version", 1) >= 3
-    kept_rows = scan.filter(F.col(_FILE_COL).isin(affected)).filter(
-        ~F.coalesce(cond, F.lit(False))
+        return p.snap["snapshot-id"]
+    kept = cow_delete(
+        p.scan.filter(F.col(_FILE_COL).isin(affected)),
+        p.columns, cond, p.lineage,
     )
-    # v3: survivors are COPIED rows — carry identity and original
-    # last-update attribution as materialized columns (r12)
-    kept_rows = kept_rows.select(
-        *[f.name for f in _schema.fields],
-        *([_ROW_ID_COL, _LAST_UPDATED_COL] if fv3 else []),
-    )
-    staged = _stage_data_files(
-        kept_rows, path, ice_schema, part_fields,
-        sort_fields=_default_sort_fields(meta, ice_schema),
-    )
-    return _commit_snapshot(
-        path,
-        meta,
-        ice_schema,
-        part_fields,
-        added_files=staged,
-        existing_entries=[
-            e
-            for b, e in by_base.items()
-            if b not in affected_set
-        ],
-        deleted_entries=[by_base[b] for b in sorted(affected_set)],
-        carry_prior_manifests=False,
-        operation="delete",
-        carry_delete_manifests=has_deletes,
+    return _commit_rewrite(
+        path, p, affected, _stage_plan_rows(path, p, kept), "delete"
     )
 
 
@@ -5166,78 +5200,24 @@ def update_iceberg(
 ) -> int:
     """UPDATE table SET col = expr, ... [WHERE predicate], copy-on-
     write. Expressions are SQL over the row's own columns (evaluated
-    against the PRE-update row, like SQL UPDATE). Identity-partition
-    columns cannot be updated (a real row-move rewrite is MERGE's
-    job — the same refusal as the Delta twin). Returns the new
-    snapshot id."""
-    (
-        meta, snap, ice_schema, part_fields, spark_schema, entries, scan,
-        has_deletes,
-    ) = _dml_plan(spark, path)
-    pcols = {pf["source_name"] for pf in part_fields}
-    bad = set(set_exprs) & pcols
-    if bad:
-        raise ValueError(
-            f"cannot UPDATE partition column(s) {sorted(bad)}; "
-            "delete+insert (or merge) instead"
-        )
-    unknown = set(set_exprs) - {f.name for f in spark_schema.fields}
-    if unknown:
-        raise ValueError(f"unknown column(s) in SET: {sorted(unknown)}")
+    against the PRE-update row, like SQL UPDATE). Every partition
+    SOURCE column — identity or transform — refuses (a real row-move
+    rewrite is MERGE's job; the Delta twin refuses its partition
+    columns the same way). Returns the new snapshot id."""
+    p = _dml_plan(spark, path)
+    check_set(
+        set_exprs, p.columns, {pf["source_name"] for pf in p.part_fields}
+    )
     cond = F.expr(predicate) if predicate is not None else F.lit(True)
-    affected = [
-        r[_FILE_COL]
-        for r in scan.filter(cond).select(_FILE_COL).distinct().collect()
-    ]
+    affected = affected_files(p.scan.filter(cond), _FILE_COL)
     if not affected:
-        return snap["snapshot-id"]
-    by_base = _entries_by_base(entries)
-    affected_set = set(affected)
-    fv3 = meta.get("format-version", 1) >= 3
-    hit = F.coalesce(cond, F.lit(False))
-    rewritten = scan.filter(F.col(_FILE_COL).isin(affected)).select(
-        *[
-            (
-                F.when(hit, F.expr(set_exprs[f.name]).cast(f.dataType))
-                .otherwise(F.col(f.name))
-                .alias(f.name)
-                if f.name in set_exprs
-                else F.col(f.name)
-            )
-            for f in spark_schema.fields
-        ],
-        # v3 lineage carry (r12): every rewritten row keeps its
-        # _row_id; rows the UPDATE hit null their materialized
-        # last-update so the new file's sequence (this commit)
-        # derives on read, copied-over rows keep their original
-        *(
-            [
-                F.col(_ROW_ID_COL),
-                F.when(hit, F.lit(None).cast("long"))
-                .otherwise(F.col(_LAST_UPDATED_COL))
-                .alias(_LAST_UPDATED_COL),
-            ]
-            if fv3
-            else []
-        ),
+        return p.snap["snapshot-id"]
+    rewritten = cow_update(
+        p.scan.filter(F.col(_FILE_COL).isin(affected)),
+        p.spark_schema.fields, set_exprs, cond, p.lineage,
     )
-    staged = _stage_data_files(
-        rewritten, path, ice_schema, part_fields,
-        sort_fields=_default_sort_fields(meta, ice_schema),
-    )
-    return _commit_snapshot(
-        path,
-        meta,
-        ice_schema,
-        part_fields,
-        added_files=staged,
-        existing_entries=[
-            e for b, e in by_base.items() if b not in affected_set
-        ],
-        deleted_entries=[by_base[b] for b in sorted(affected_set)],
-        carry_prior_manifests=False,
-        operation="overwrite",
-        carry_delete_manifests=has_deletes,
+    return _commit_rewrite(
+        path, p, affected, _stage_plan_rows(path, p, rewritten), "overwrite"
     )
 
 
@@ -5251,7 +5231,7 @@ def merge_iceberg(
     summary_extra: dict[str, str] | None = None,
 ) -> int:
     """MERGE INTO table USING source ON equality of ``keys``, copy-on-
-    write — the Delta twin's contract exactly (delta_dml.merge_delta):
+    write — the Delta twin's contract exactly (row_dml.check_merge):
 
     ``when_matched``: 'update' (matched target rows take the source
     row's values — full-row upsert), 'delete' (matched rows removed),
@@ -5265,138 +5245,21 @@ def merge_iceberg(
     source keys; only files containing matches rewrite; inserts
     append; a partition-aligned key makes the probe partition-pruned
     at the parquet level and keeps rewrites inside their partitions."""
-    if when_matched not in ("update", "delete", "none"):
-        raise ValueError(
-            f"when_matched must be update|delete|none: {when_matched!r}"
-        )
-    (
-        meta, snap, ice_schema, part_fields, spark_schema, entries, scan,
-        has_deletes,
-    ) = _dml_plan(spark, path)
-    tcols = [f.name for f in spark_schema.fields]
-    if sorted(source.columns) != sorted(tcols):
-        raise ValueError(
-            f"source columns {sorted(source.columns)} != table's {sorted(tcols)}"
-        )
-    missing = [k for k in keys if k not in tcols]
-    if missing:
-        raise ValueError(f"merge keys not in table: {missing}")
-    dup = source.groupBy(*keys).count().filter("count > 1").limit(1).collect()
-    if dup:
-        raise ValueError(
-            f"source has duplicate merge keys (e.g. "
-            f"{ {k: dup[0][k] for k in keys} }); MERGE would be ambiguous"
-        )
-    source = source.select(*tcols)  # column order for union/insert
-
-    key_df = source.select(*keys).distinct()
-    affected = [
-        r[_FILE_COL]
-        for r in scan.join(key_df, on=keys, how="leftsemi")
-        .select(_FILE_COL)
-        .distinct()
-        .collect()
-    ]
-    by_base = _entries_by_base(entries)
-    affected_set = set(affected)
-
-    added: list[dict] = []
-    matched_keys = None
-    fv3 = meta.get("format-version", 1) >= 3
-    if affected:
-        hit_rows = scan.filter(F.col(_FILE_COL).isin(affected))
-        src = source.select(
-            *[F.col(c).alias(f"__src_{c}") for c in tcols]
-        ).withColumn("__matched", F.lit(True))
-        joined = hit_rows.join(
-            src,
-            on=[hit_rows[k] == src[f"__src_{k}"] for k in keys],
-            how="left",
-        )
-        m = F.coalesce(F.col("__matched"), F.lit(False))
-        # v3 lineage carry (r12): rewritten rows keep their _row_id
-        # (an upsert changes values, not identity); matched rows null
-        # their materialized last-update (the new file's sequence —
-        # this commit — derives on read), copied rows keep theirs
-        lineage = (
-            [
-                hit_rows[_ROW_ID_COL],
-                F.when(m, F.lit(None).cast("long"))
-                .otherwise(hit_rows[_LAST_UPDATED_COL])
-                .alias(_LAST_UPDATED_COL),
-            ]
-            if fv3
-            else []
-        )
-        if when_matched == "update":
-            rewritten = joined.select(
-                *[
-                    F.when(m, F.col(f"__src_{c}"))
-                    .otherwise(hit_rows[c])
-                    .alias(c)
-                    for c in tcols
-                ],
-                *lineage,
-            )
-        elif when_matched == "delete":
-            rewritten = joined.filter(~m).select(
-                *[hit_rows[c] for c in tcols],
-                *(
-                    [hit_rows[_ROW_ID_COL], hit_rows[_LAST_UPDATED_COL]]
-                    if fv3
-                    else []
-                ),
-            )
-        else:  # 'none': matched rows keep their current values
-            rewritten = joined.select(
-                *[hit_rows[c] for c in tcols],
-                *(
-                    [hit_rows[_ROW_ID_COL], hit_rows[_LAST_UPDATED_COL]]
-                    if fv3
-                    else []
-                ),
-            )
-        added += _stage_data_files(
-            rewritten, path, ice_schema, part_fields,
-            sort_fields=_default_sort_fields(meta, ice_schema),
-        )
-        matched_keys = (
-            scan.filter(F.col(_FILE_COL).isin(affected))
-            .select(*keys)
-            .distinct()
-        )
-
+    p = _dml_plan(spark, path)
+    source = check_merge(source, p.columns, keys, when_matched)
+    cm = cow_merge(p.scan, _FILE_COL, source, keys, when_matched, p.lineage)
+    added = _stage_plan_rows(path, p, cm.rewritten) if cm.affected else []
     if insert_not_matched:
-        inserts = source
-        if matched_keys is not None:
-            inserts = source.join(matched_keys, on=keys, how="leftanti")
-        # (no affected files -> no key matched -> every source row inserts)
-        added += _stage_data_files(
-            inserts, path, ice_schema, part_fields,
-            sort_fields=_default_sort_fields(meta, ice_schema),
-        )
-
-    if not added and not affected:
+        added += _stage_plan_rows(path, p, cm.inserts)
+    if not added and not cm.affected:
         # a true no-op (nothing matched, nothing staged) commits
         # nothing — including no summary_extra marker. Safe for the
         # streaming upsert sink: replaying a no-op batch is another
         # no-op, and any LATER marker-bearing commit already covers
         # redelivery detection (batch_id <= last).
-        return snap["snapshot-id"]
-    return _commit_snapshot(
-        path,
-        meta,
-        ice_schema,
-        part_fields,
-        added_files=added,
-        existing_entries=[
-            e for b, e in by_base.items() if b not in affected_set
-        ],
-        deleted_entries=[by_base[b] for b in sorted(affected_set)],
-        carry_prior_manifests=False,
-        operation="overwrite",
-        summary_extra=summary_extra,
-        carry_delete_manifests=has_deletes,
+        return p.snap["snapshot-id"]
+    return _commit_rewrite(
+        path, p, cm.affected, added, "overwrite", summary_extra
     )
 
 

@@ -2,7 +2,8 @@
 write family over the public table spec (iceberg.apache.org/spec §v3
 Deletion vectors + iceberg.apache.org/puffin-spec), mirroring the Delta
 DV write family (`sources/delta_dml.py::delete_delta_dv/update_delta_dv/
-merge_delta_dv`) contract-for-contract:
+merge_delta_dv`) contract-for-contract — the contracts, the position
+collect and the vector-union rule are shared code in `row_dml.py`:
 
 * ``delete_iceberg_dv`` — DELETE marks matched rows in per-data-file
   Puffin deletion vectors; no data file rewrites.
@@ -27,13 +28,13 @@ Spec invariants enforced here:
 
 Scale shape (the 100 TB argument): the matched-row probe is ONE
 distributed predicate scan projecting only `_metadata` pseudo-columns;
-vectors are driver-built metadata bounded by ``max_*_rows`` (refuse
-above, pointing at the CoW path — a change that size should rewrite
-files); write cost is ∝ matched rows (roaring bitmap bytes), never
-affected-file bytes; untouched DATA manifests carry verbatim
-(carry_data_manifests), so commit metadata cost is ∝ delete state, not
-table size. Read-back applies vectors via the existing r10 path
-(`iceberg._position_delete_pairs`: driver decode below the budget,
+vectors are driver-built metadata bounded by the Delta twin's 2M-row
+pair budget (refuse above, pointing at the CoW path — a change that size
+should rewrite files); write cost is ∝ matched rows (roaring bitmap
+bytes), never affected-file bytes; untouched DATA manifests carry
+verbatim (carry_data_manifests), so commit metadata cost is ∝ delete
+state, not table size. Read-back applies vectors via the existing r10
+path (`iceberg._position_delete_pairs`: driver decode below the budget,
 executor-distributed decode above it).
 
 Reference parity note: the reference engine (Scala DStream collector,
@@ -51,28 +52,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkstreamingtwitter_presidential_spark.sources.avro import read_container
+from sparkstreamingtwitter_presidential_spark.sources.delta import (
+    _DV_PAIRS_DRIVER_MAX,
+)
 from sparkstreamingtwitter_presidential_spark.sources.iceberg import (
     _ABS_PATH_COL,
     _DATA_DIR,
     _LAST_UPDATED_COL,
     _ROW_ID_COL,
+    _DmlPlan,
     _commit_snapshot,
-    _default_sort_fields,
+    _dml_plan,
     _entries_and_deletes_for_snapshot,
     _identity_fields,
-    _lineage_scan_schema,
     _load_metadata,
     _norm_path,
     _partition_fields,
     _POS_COL,
-    _refuse_renamed_files,
-    _resolve_lineage,
-    _row_delete_filter,
-    _scan_entries_mixed_spec,
     _schema_for,
-    _schema_to_spark,
     _snapshot,
-    _stage_data_files,
+    _stage_plan_rows,
 )
 from sparkstreamingtwitter_presidential_spark.sources.puffin import (
     deserialize_dv_blob,
@@ -80,15 +79,16 @@ from sparkstreamingtwitter_presidential_spark.sources.puffin import (
     serialize_dv_blob,
     write_puffin,
 )
+from sparkstreamingtwitter_presidential_spark.sources.row_dml import (
+    carry_id,
+    check_merge,
+    check_set,
+    collect_positions,
+    set_columns,
+    union_vectors,
+)
 
-_DV_MAX_ROWS = 2_000_000  # driver-built metadata budget (Delta twin's)
 _PATH_COL = _ABS_PATH_COL  # the _read_files(with_path_pos) pseudo-column
-
-# v3 row-lineage reserved column names (spec §Row Lineage) — shared
-# with the CoW paths; see iceberg._resolve_lineage for the resolution
-# rules (materialized wins, else first_row_id + position / file seq).
-_ROW_ID = _ROW_ID_COL
-_LAST_UPDATED = _LAST_UPDATED_COL
 
 
 def _require_v3(meta: dict, op: str) -> None:
@@ -100,136 +100,81 @@ def _require_v3(meta: dict, op: str) -> None:
         )
 
 
-def _plan(spark: SparkSession, path: str, op: str):
-    """Shared DV-DML planning: current metadata + a scan of every live
-    data file carrying full columns, the file's NORMALIZED path and
-    in-file row position, with all live row-level deletes APPLIED —
-    so a matched row is live by construction (an UPDATE can never
-    resurrect an equality-deleted or already-vectored row). The scan
-    rides `_read_files(with_path_pos=True)` (r11) — the adaptive
-    partitioned-read machinery, so a 1000-partition table's probe is
-    one path-derived scan node, never a 1000-branch union."""
+def _plan(spark: SparkSession, path: str, op: str) -> _DmlPlan:
+    """iceberg._dml_plan on a v3 table, without the file-basename
+    column: every live row carries its NORMALIZED path, in-file position
+    and resolved lineage, with all live row-level deletes applied — so
+    a matched row is live by construction (an UPDATE can never
+    resurrect an equality-deleted or already-vectored row)."""
     meta = _load_metadata(path)
     _require_v3(meta, op)
-    snap = _snapshot(meta, None)
-    ice_schema = _schema_for(meta, meta.get("current-schema-id", 0))
-    part_fields = _partition_fields(meta, ice_schema)
-    spark_schema = _schema_to_spark(ice_schema)
-    entries, dels = _entries_and_deletes_for_snapshot(path, snap)
-    _refuse_renamed_files(meta, entries, ice_schema, op)
-    scan_filter = (
-        _row_delete_filter(spark, meta, entries, dels, ice_schema)
-        if dels
-        else None
-    )
-    # the scan reads under the lineage-extended schema (files staged by
-    # a prior DML carry materialized _row_id/_last_updated... columns,
-    # plain appends read them as null) with both columns RESOLVED, so
-    # DML re-stages carry row identity and read_iceberg_lineage just
-    # projects. Mixed-spec live sets branch per spec generation (r13 —
-    # identity injection under each file's own writing spec), so DV
-    # DML and lineage reads stay exact after partition evolution.
-    scan = _resolve_lineage(
-        spark,
-        entries,
-        _scan_entries_mixed_spec(
-            spark,
-            meta,
-            ice_schema,
-            entries,
-            _lineage_scan_schema(spark_schema),
-            part_fields,
-            scan_filter=scan_filter,
-            with_path_pos=True,
-        ),
-    )
-    return meta, snap, ice_schema, part_fields, spark_schema, entries, dels, scan
+    return _dml_plan(spark, path, op, with_file=False, meta=meta)
 
 
 def _mark_matched(
     path: str,
-    matched: list,
+    hits: DataFrame,
     entries: list[dict],
     dels: list[dict],
-    op: str,
+    budget: int,
+    cow_twin: str,
 ):
-    """Driver-side vector build from collected (normalized path, pos)
-    rows: union each touched file's positions with its EXISTING vector
-    (spec: a new DV must contain the one it replaces), detect
-    fully-deleted files, and resolve which prior delete manifests must
-    rebuild (the ones carrying superseded vectors) vs carry verbatim.
+    """The Iceberg side of a deletion-vector write: collect ``hits``'
+    positions (row_dml.collect_positions), union each touched file's
+    with its EXISTING Puffin vector (row_dml.union_vectors), and
+    resolve which prior vectors the commit supersedes.
 
-    Returns None when nothing matched, else a dict with the commit
+    Returns None when nothing new matched, else a dict with the commit
     ingredients. The whole build is bounded: matched rows by the
-    caller's collect budget, existing vectors by the touched files'
+    collect budget, existing vectors by the touched files'
     deleted-row counts (metadata-sized by the same budget applied at
     their own write time)."""
-    if not matched:
-        return None
+    new = collect_positions(hits, _PATH_COL, _POS_COL, budget, cow_twin)
     by_norm: dict[str, dict] = {
         _norm_path(e["data_file"]["file_path"]): e for e in entries
     }
-    new_by_file: dict[str, set[int]] = {}
-    for r in matched:
-        new_by_file.setdefault(r[_PATH_COL], set()).add(int(r[_POS_COL]))
-    unknown = sorted(set(new_by_file) - set(by_norm))
+    unknown = sorted(set(new) - set(by_norm))
     if unknown:
         raise ValueError(
-            f"DV {op} matched rows in non-live data files: {unknown[:3]}"
+            f"DV write matched rows in non-live data files: {unknown[:3]}"
         )
     # existing vector per touched file (PUFFIN delete entries keyed by
     # referenced_data_file); superseded entries leave in this commit
-    dv_by_ref: dict[str, dict] = {}
-    for d in dels:
-        df_ = d["data_file"]
-        if df_["file_format"].upper() == "PUFFIN":
-            dv_by_ref[_norm_path(df_["referenced_data_file"])] = d
+    dv_by_ref: dict[str, dict] = {
+        _norm_path(d["data_file"]["referenced_data_file"]): d
+        for d in dels
+        if d["data_file"]["file_format"].upper() == "PUFFIN"
+    }
 
-    unions: dict[str, list[int]] = {}
-    fully_deleted: list[str] = []
-    superseded: list[dict] = []
-    for np_, poss in sorted(new_by_file.items()):
-        old_entry = dv_by_ref.get(np_)
-        old: set[int] = set()
-        if old_entry is not None:
-            df_ = old_entry["data_file"]
-            old = set(
-                deserialize_dv_blob(
-                    read_blob(
-                        df_["file_path"],
-                        df_["content_offset"],
-                        df_["content_size_in_bytes"],
-                    )
-                )
+    def old_of(np_: str) -> list[int]:
+        entry = dv_by_ref.get(np_)
+        if entry is None:
+            return []
+        df_ = entry["data_file"]
+        return deserialize_dv_blob(
+            read_blob(
+                df_["file_path"],
+                df_["content_offset"],
+                df_["content_size_in_bytes"],
             )
-        union = sorted(old | poss)
-        if len(union) == len(old):
-            continue  # every match already deleted — no-op file
-        if old_entry is not None:
-            superseded.append(old_entry)
-        n_phys = by_norm[np_]["data_file"]["record_count"]
-        if len(union) == int(n_phys):
-            fully_deleted.append(np_)
-        else:
-            unions[np_] = union
-    if not unions and not fully_deleted:
+        )
+
+    vu = union_vectors(
+        new, old_of, lambda np_: by_norm[np_]["data_file"]["record_count"]
+    )
+    if not vu.fresh:
         return None
     return {
-        "unions": unions,
-        "fully_deleted": fully_deleted,
-        "superseded": superseded,
+        "unions": vu.unions,
+        "fully_deleted": vu.retired,
+        "superseded": [dv_by_ref[f] for f in vu.fresh if f in dv_by_ref],
         "by_norm": by_norm,
     }
 
 
 def _commit_dv(
-    spark: SparkSession,
     path: str,
-    meta: dict,
-    snap: dict,
-    ice_schema: dict,
-    part_fields: list[dict],
-    entries: list[dict],
+    plan: _DmlPlan,
     mark: dict,
     added_files: list[dict],
     operation: str,
@@ -244,6 +189,7 @@ def _commit_dv(
     delete manifest verbatim, and either carry the data manifests
     verbatim (no fully-deleted file) or rebuild them dropping the
     dead files."""
+    meta, snap, entries = plan.meta, plan.snap, plan.entries
     unions: dict[str, list[int]] = mark["unions"]
     fully_deleted: list[str] = mark["fully_deleted"]
     superseded: list[dict] = mark["superseded"]
@@ -382,8 +328,8 @@ def _commit_dv(
     return _commit_snapshot(
         path,
         meta,
-        ice_schema,
-        part_fields,
+        plan.ice_schema,
+        plan.part_fields,
         added_files=added_files,
         existing_entries=existing_entries,
         deleted_entries=deleted_entries,
@@ -402,7 +348,7 @@ def delete_iceberg_dv(
     spark: SparkSession,
     path: str,
     predicate: str,
-    max_deleted_rows: int = _DV_MAX_ROWS,
+    max_deleted_rows: int = _DV_PAIRS_DRIVER_MAX,
 ) -> int:
     """DELETE FROM table WHERE predicate — merge-on-read via Puffin
     deletion vectors (format-version 3). SQL-null semantics: only rows
@@ -411,30 +357,17 @@ def delete_iceberg_dv(
     Matches above ``max_deleted_rows`` refuse, pointing at the CoW
     :func:`iceberg.delete_iceberg`. Returns the new snapshot id (the
     current one unchanged when nothing matched)."""
-    meta, snap, ice_schema, part_fields, _ss, entries, dels, scan = _plan(
-        spark, path, "delete_iceberg_dv"
+    p = _plan(spark, path, "delete_iceberg_dv")
+    if not p.entries:
+        return p.snap["snapshot-id"]
+    mark = _mark_matched(
+        path, p.scan.filter(F.expr(predicate)), p.entries, p.dels,
+        max_deleted_rows, "delete_iceberg",
     )
-    if not entries:
-        return snap["snapshot-id"]
-    matched = (
-        scan.filter(F.expr(predicate))
-        .select(_PATH_COL, _POS_COL)
-        .limit(max_deleted_rows + 1)
-        .collect()
-    )
-    if len(matched) > max_deleted_rows:
-        raise NotImplementedError(
-            f"DV delete matched more than {max_deleted_rows} rows; "
-            "vectors are driver-built metadata and a change this size "
-            "should rewrite data files — use copy-on-write "
-            "delete_iceberg"
-        )
-    mark = _mark_matched(path, matched, entries, dels, "delete")
     if mark is None:
-        return snap["snapshot-id"]
+        return p.snap["snapshot-id"]
     return _commit_dv(
-        spark, path, meta, snap, ice_schema, part_fields, entries, mark,
-        added_files=[], operation="delete",
+        path, p, mark, added_files=[], operation="delete",
         summary_extra={"predicate": predicate, "mode": "deletion-vectors"},
     )
 
@@ -444,68 +377,43 @@ def update_iceberg_dv(
     path: str,
     set_exprs: dict[str, str],
     predicate: str | None = None,
-    max_updated_rows: int = _DV_MAX_ROWS,
 ) -> int:
     """UPDATE ... SET — merge-on-read: ONE commit marks the matched
     rows deleted in per-file deletion vectors AND stages their updated
     versions as new data files. Expressions evaluate against the
     PRE-update row (SQL UPDATE semantics); rows an existing vector or
     equality delete already removed are invisible and never update
-    (the plan scan applies all live deletes). Identity-partition
-    columns cannot be updated (the CoW twin's contract). Returns the
-    new snapshot id."""
-    meta, snap, ice_schema, part_fields, spark_schema, entries, dels, scan = (
-        _plan(spark, path, "update_iceberg_dv")
+    (the plan scan applies all live deletes). IDENTITY-partition source
+    columns refuse; a TRANSFORM source column (``ts`` under
+    ``day(ts)``) may be set, because the updated row re-stages as a new
+    file under the tuple its new value derives. (The copy-on-write
+    :func:`iceberg.update_iceberg` refuses every partition source
+    column.) Returns the new snapshot id."""
+    p = _plan(spark, path, "update_iceberg_dv")
+    check_set(
+        set_exprs,
+        p.columns,
+        {pf["source_name"] for pf in _identity_fields(p.part_fields)},
     )
-    pcols = {pf["source_name"] for pf in _identity_fields(part_fields)}
-    bad = set(set_exprs) & pcols
-    if bad:
-        raise ValueError(
-            f"cannot UPDATE partition column(s) {sorted(bad)}; "
-            "delete+insert (or merge) instead"
-        )
-    unknown = set(set_exprs) - {f.name for f in spark_schema.fields}
-    if unknown:
-        raise ValueError(f"unknown column(s) in SET: {sorted(unknown)}")
-    if not entries:
-        return snap["snapshot-id"]
+    if not p.entries:
+        return p.snap["snapshot-id"]
     cond = F.expr(predicate) if predicate is not None else F.lit(True)
-    hits = scan.filter(cond)
-    matched = (
-        hits.select(_PATH_COL, _POS_COL).limit(max_updated_rows + 1).collect()
+    hits = p.scan.filter(cond)
+    mark = _mark_matched(
+        path, hits, p.entries, p.dels, _DV_PAIRS_DRIVER_MAX, "update_iceberg"
     )
-    if len(matched) > max_updated_rows:
-        raise NotImplementedError(
-            f"DV update matched more than {max_updated_rows} rows; "
-            "use copy-on-write update_iceberg"
-        )
-    mark = _mark_matched(path, matched, entries, dels, "update")
     if mark is None:
-        return snap["snapshot-id"]
-    # v3 row lineage (r12): updated rows CARRY their original _row_id
-    # into the re-staged file as a materialized column (spec §Row
-    # Lineage — an updated row keeps its identity); the new file's
-    # data sequence number IS the updating snapshot's, so
-    # _last_updated_sequence_number derives correctly on read with no
-    # materialization needed here (the resolved one is dropped).
+        return p.snap["snapshot-id"]
+    # v3 row lineage: updated rows CARRY their original _row_id into the
+    # re-staged file (spec §Row Lineage — an updated row keeps its
+    # identity); the new file's data sequence number IS the updating
+    # snapshot's, so _last_updated_sequence_number derives on read
     updated = hits.select(
-        *[
-            (
-                F.expr(set_exprs[f.name]).cast(f.dataType).alias(f.name)
-                if f.name in set_exprs
-                else F.col(f.name)
-            )
-            for f in spark_schema.fields
-        ],
-        F.col(_ROW_ID),
-    )
-    staged = _stage_data_files(
-        updated, path, ice_schema, part_fields,
-        sort_fields=_default_sort_fields(meta, ice_schema),
+        *set_columns(p.spark_schema.fields, set_exprs), *carry_id(p.lineage)
     )
     return _commit_dv(
-        spark, path, meta, snap, ice_schema, part_fields, entries, mark,
-        added_files=staged, operation="overwrite",
+        path, p, mark, added_files=_stage_plan_rows(path, p, updated),
+        operation="overwrite",
         summary_extra={
             "predicate": predicate or "true",
             "mode": "deletion-vectors",
@@ -521,103 +429,64 @@ def merge_iceberg_dv(
     when_matched: str = "update",
     insert_not_matched: bool = True,
     summary_extra: dict[str, str] | None = None,
-    max_matched_rows: int = _DV_MAX_ROWS,
 ) -> int:
     """MERGE INTO table USING source ON equality of ``keys`` —
     merge-on-read: matched target rows DV-mark deleted (their
     replacement values — for when_matched='update' — and the
     not-matched inserts stage as new data files in the same commit).
-    Semantics match the CoW :func:`iceberg.merge_iceberg` exactly:
-    'update' is a full-row upsert from the source row, 'delete'
-    removes matched rows, 'none' leaves them; source must be
-    duplicate-free on the keys. Returns the new snapshot id."""
-    if when_matched not in ("update", "delete", "none"):
-        raise ValueError(
-            f"when_matched must be update|delete|none: {when_matched!r}"
-        )
-    meta, snap, ice_schema, part_fields, spark_schema, entries, dels, scan = (
-        _plan(spark, path, "merge_iceberg_dv")
+    Semantics match the CoW :func:`iceberg.merge_iceberg` exactly
+    (row_dml.check_merge): 'update' is a full-row upsert from the
+    source row, 'delete' removes matched rows, 'none' leaves them.
+    Returns the new snapshot id."""
+    p = _plan(spark, path, "merge_iceberg_dv")
+    tcols = p.columns
+    source = check_merge(source, tcols, keys, when_matched)
+    hits = p.scan.join(
+        F.broadcast(source.select(*keys).distinct()), on=keys, how="leftsemi"
     )
-    tcols = [f.name for f in spark_schema.fields]
-    if sorted(source.columns) != sorted(tcols):
-        raise ValueError(
-            f"source columns {sorted(source.columns)} != table's "
-            f"{sorted(tcols)}"
-        )
-    missing = [k for k in keys if k not in tcols]
-    if missing:
-        raise ValueError(f"merge keys not in table: {missing}")
-    dup = source.groupBy(*keys).count().filter("count > 1").limit(1).collect()
-    if dup:
-        raise ValueError(
-            f"source has duplicate merge keys (e.g. "
-            f"{ {k: dup[0][k] for k in keys} }); MERGE would be ambiguous"
-        )
-    source = source.select(*tcols)
-
-    key_df = source.select(*keys).distinct()
-    hits = scan.join(F.broadcast(key_df), on=keys, how="leftsemi")
     mark = None
-    matched_keys = None
-    if entries and when_matched != "none":
-        matched = (
-            hits.select(_PATH_COL, _POS_COL)
-            .limit(max_matched_rows + 1)
-            .collect()
-        )
-        if len(matched) > max_matched_rows:
-            raise NotImplementedError(
-                f"DV merge matched more than {max_matched_rows} rows; "
-                "use copy-on-write merge_iceberg"
+    inserts = source
+    if p.entries:
+        if when_matched != "none":
+            mark = _mark_matched(
+                path, hits, p.entries, p.dels, _DV_PAIRS_DRIVER_MAX,
+                "merge_iceberg",
             )
-        mark = _mark_matched(path, matched, entries, dels, "merge")
-    if entries:
-        matched_keys = hits.select(*keys).distinct()
-
+        inserts = source.join(
+            hits.select(*keys).distinct(), on=keys, how="left_anti"
+        )
     added: list[dict] = []
     if mark is not None and when_matched == "update":
         # full-row upsert, one replacement PER MATCHED TARGET ROW (the
-        # CoW twin's semantics — duplicate target keys each update, so
-        # multiplicity is preserved): join the matched target rows to
-        # the source and take the source's values
-        src_cols = source.select(
-            *[F.col(c).alias(f"__src_{c}") for c in tcols]
-        )
+        # CoW twin's semantics — duplicate target keys each update),
+        # carrying the matched TARGET row's _row_id: an upsert updates
+        # the row's values, not its identity; inserts mint fresh ids
+        src = source.select(*[F.col(c).alias(f"__src_{c}") for c in tcols])
         joined = hits.join(
-            F.broadcast(src_cols),
-            on=[hits[k] == src_cols[f"__src_{k}"] for k in keys],
+            F.broadcast(src),
+            on=[hits[k] == src[f"__src_{k}"] for k in keys],
             how="inner",
         )
-        # replacements CARRY the matched TARGET row's _row_id (v3 row
-        # lineage, r12) — an upsert updates the row's values, not its
-        # identity; inserts below stage id-less and mint fresh ids
-        replacements = joined.select(
-            *[F.col(f"__src_{c}").alias(c) for c in tcols],
-            F.col(_ROW_ID),
-        )
-        added += _stage_data_files(
-            replacements, path, ice_schema, part_fields,
-            sort_fields=_default_sort_fields(meta, ice_schema),
+        added += _stage_plan_rows(
+            path, p,
+            joined.select(
+                *[F.col(f"__src_{c}").alias(c) for c in tcols],
+                *carry_id(p.lineage),
+            ),
         )
     if insert_not_matched:
-        inserts = source
-        if matched_keys is not None:
-            inserts = source.join(matched_keys, on=keys, how="left_anti")
-        added += _stage_data_files(
-            inserts, path, ice_schema, part_fields,
-            sort_fields=_default_sort_fields(meta, ice_schema),
-        )
+        added += _stage_plan_rows(path, p, inserts)
 
     if mark is None and not added:
-        return snap["snapshot-id"]
+        return p.snap["snapshot-id"]
     if mark is None:
         # pure insert (nothing matched, or when_matched='none'):
         # ordinary append commit, data manifests carry forward
         return _commit_snapshot(
             path,
-            meta,
-            ice_schema,
-            part_fields,
+            p.meta,
+            p.ice_schema,
+            p.part_fields,
             added_files=added,
             existing_entries=[],
             deleted_entries=[],
@@ -626,8 +495,7 @@ def merge_iceberg_dv(
             summary_extra=summary_extra,
         )
     return _commit_dv(
-        spark, path, meta, snap, ice_schema, part_fields, entries, mark,
-        added_files=added, operation="overwrite",
+        path, p, mark, added_files=added, operation="overwrite",
         summary_extra=summary_extra,
     )
 
@@ -661,13 +529,10 @@ def read_iceberg_lineage(spark: SparkSession, path: str) -> DataFrame:
     # scan files missing from the map, silently NULLing their ids);
     # _plan resolves BOTH lineage columns on the scan already, so this
     # is a projection dropping the probe pseudo-columns.
-    *_head, scan = _plan(spark, path, "read_iceberg_lineage")
-    cols = [
-        c
-        for c in scan.columns
-        if c not in (_PATH_COL, _POS_COL, _ROW_ID, _LAST_UPDATED)
-    ]
-    return scan.select(*cols, _ROW_ID, _LAST_UPDATED)
+    scan = _plan(spark, path, "read_iceberg_lineage").scan
+    lineage = (_ROW_ID_COL, _LAST_UPDATED_COL)
+    cols = [c for c in scan.columns if c not in (_PATH_COL, _POS_COL, *lineage)]
+    return scan.select(*cols, *lineage)
 
 
 # ------------------------------------------------------- DV maintenance

@@ -824,6 +824,55 @@ def test_merge_delta_dv_dead_rows_insert(spark, tmp_path):
     assert len([r for r in rows if r[0] == 4]) == 1
 
 
+def test_merge_delta_dv_when_matched_none_only_inserts(spark, tmp_path):
+    """when_matched='none' is part of the contract merge_delta_dv shares
+    with merge_delta: matched rows stay unchanged, unmatched source rows
+    insert (a key matching only a row an earlier vector deleted counts
+    as unmatched), and the commit writes no deletion vector."""
+    from sparkstreamingtwitter_presidential_spark.sources.delta_dml import (
+        delete_delta_dv,
+        merge_delta_dv,
+    )
+
+    t = str(tmp_path / "t")
+    write_delta(
+        spark.createDataFrame(
+            [(i, float(i)) for i in range(10)], "id long, v double"
+        ).repartition(1),
+        t,
+        mode="append",
+    )
+    delete_delta_dv(spark, t, "id = 4")
+    vectors = {
+        p: a["deletionVector"]
+        for p, a in _replay_log(t, None).files.items()
+        if a.get("deletionVector")
+    }
+    v = merge_delta_dv(
+        spark, t,
+        spark.createDataFrame(
+            [(3, 333.0), (4, 444.0), (42, 42.0)], "id long, v double"
+        ),
+        keys=["id"],
+        when_matched="none",
+    )
+    assert v == 2
+    rows = sorted((r.id, r.v) for r in read_delta(spark, t).collect())
+    assert rows == sorted(
+        [(i, float(i)) for i in range(10) if i != 4]
+        + [(4, 444.0), (42, 42.0)]
+    )
+    snap = _replay_log(t, None)
+    assert {
+        p: a["deletionVector"]
+        for p, a in snap.files.items()
+        if a.get("deletionVector")
+    } == vectors
+    log = os.path.join(t, "_delta_log", f"{v:020d}.json")
+    actions = [json.loads(ln) for ln in open(log).read().splitlines()]
+    assert not any("remove" in a for a in actions)
+
+
 from hypothesis import given as _given, settings as _settings
 from hypothesis import strategies as _st
 

@@ -253,6 +253,33 @@ def test_dml_on_transform_table(spark, tmp_path, docs_df):
         update_iceberg(spark, t, {"ts": "ts + interval 1 day"}, "id = 5")
 
 
+def test_dv_update_moves_row_across_transform_partitions(
+    spark, tmp_path, docs_df
+):
+    """update_iceberg_dv refuses only IDENTITY partition source columns:
+    a transform source column (``ts`` under ``day(ts)``) may be set,
+    and the updated row re-stages under the tuple its new value
+    derives, so a transform-pruned ``ts >=`` filter finds it."""
+    from sparkstreamingtwitter_presidential_spark.sources.iceberg_dv import (
+        update_iceberg_dv,
+    )
+
+    t = str(tmp_path / "t")
+    write_iceberg(docs_df, t, partition_by=["day(ts)"], format_version=3)
+    old_ts = read_iceberg(spark, t).filter("id = 5").collect()[0].ts
+    update_iceberg_dv(spark, t, {"ts": "ts + interval 30 days"}, "id = 5")
+    got = read_iceberg(spark, t)
+    assert got.count() == 100
+    assert [r.ts for r in got.filter("id = 5").collect()] == [
+        old_ts + dt.timedelta(days=30)
+    ]
+    late = read_iceberg(spark, t).filter(
+        F.col("ts") >= F.lit(dt.datetime(2024, 1, 20))
+    )
+    assert [r.id for r in late.collect()] == [5]
+    assert table_partitions(spark, t).count() == 6
+
+
 def test_append_spec_match_and_partitions_table(spark, tmp_path, docs_df):
     t = str(tmp_path / "t")
     write_iceberg(docs_df, t, partition_by=["day(ts)"])
