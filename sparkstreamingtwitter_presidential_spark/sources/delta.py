@@ -59,13 +59,19 @@ import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from functools import reduce
-from typing import Any
+from typing import Any, Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from sparkstreamingtwitter_presidential_spark.sources._fs import put_if_absent
+from sparkstreamingtwitter_presidential_spark.sources.changefeed import (
+    derive,
+    insert_rows,
+    range_union,
+    require_keys,
+)
 
 _LOG_DIR = "_delta_log"
 _LAST_CHECKPOINT = "_last_checkpoint"
@@ -989,6 +995,84 @@ def _dv_filter_for(
     return apply
 
 
+def _partition_groups(
+    path: str, snap: _Snapshot, files: dict[str, dict[str, Any]]
+) -> dict[tuple, list[str]]:
+    """Absolute paths of ``files`` (relative path -> add or cdc action)
+    grouped by the action's partition tuple. Mapped tables key
+    partitionValues by PHYSICAL name; a logical-keyed fallback accepts
+    lenient foreign writers."""
+    mapping = _column_mapping(snap)
+    phys = (lambda c: mapping[c]) if mapping else (lambda c: c)
+    groups: dict[tuple, list[str]] = {}
+    for p, a in files.items():
+        pv = a.get("partitionValues", {})
+        key = tuple(pv.get(phys(c), pv.get(c)) for c in snap.partition_columns)
+        groups.setdefault(key, []).append(
+            os.path.join(path, urllib.parse.unquote(p))
+        )
+    return groups
+
+
+def _read_adds(
+    spark: SparkSession,
+    path: str,
+    snap: _Snapshot,
+    files: dict[str, dict[str, Any]],
+    hook: Callable[[DataFrame], DataFrame] | None = None,
+    extra_phys: Sequence[StructField] = (),
+) -> DataFrame:
+    """The rows of the data (or cdc) files ``files`` (relative path ->
+    add or cdc action) under ``snap``'s LOGICAL schema: one parquet
+    scan per distinct partition tuple under the PHYSICAL column names
+    the files store, aliased back to logical, partition values injected
+    as literals cast to their declared types (the log's values are
+    authoritative; a partition filter constant-folds against them, so
+    Catalyst prunes whole branches plan-time), unioned.
+
+    ``hook`` runs on each RAW scan, while ``_metadata`` is reachable —
+    the deletion-vector filter, or tag columns (which it appends and
+    the output keeps last). ``extra_phys`` fields are read from the
+    files verbatim and kept after the table columns."""
+    schema = snap.schema
+    assert schema is not None
+    mapping = _column_mapping(snap)
+    phys = (lambda c: mapping[c]) if mapping else (lambda c: c)
+    data_fields = [f for f in schema.fields if f.name not in snap.partition_columns]
+    extra = [f.name for f in extra_phys]
+    if not files:
+        return spark.createDataFrame(
+            [], StructType(list(schema.fields) + list(extra_phys))
+        )
+    scan_schema = StructType(
+        [
+            StructField(phys(f.name), f.dataType, f.nullable)
+            for f in data_fields
+        ]
+        + list(extra_phys)
+    )
+    part_types = {
+        f.name: f.dataType for f in schema.fields if f.name in snap.partition_columns
+    }
+    parts = []
+    groups = _partition_groups(path, snap, files)
+    for key, paths in sorted(groups.items(), key=lambda kv: tuple(map(str, kv[0]))):
+        raw = spark.read.schema(scan_schema).parquet(*sorted(paths))
+        df = hook(raw) if hook is not None else raw
+        tags = [c for c in df.columns if c not in raw.columns]
+        df = df.select(
+            *[F.col(phys(f.name)).alias(f.name) for f in data_fields],
+            *extra,
+            *tags,
+        )
+        for col, val in zip(snap.partition_columns, key):
+            # Protocol: partition values serialize as strings; NULL is
+            # the JSON null. Cast back to the declared type.
+            df = df.withColumn(col, F.lit(val).cast(part_types[col]))
+        parts.append(df.select(*[f.name for f in schema.fields], *extra, *tags))
+    return reduce(DataFrame.unionByName, parts)
+
+
 def read_delta(
     spark: SparkSession,
     path: str,
@@ -1001,9 +1085,7 @@ def read_delta(
     Data columns come from the parquet files under the log's declared
     schema; partition columns are injected from the log's
     ``partitionValues`` (cast to the declared types) — one parquet read
-    per distinct partition tuple, unioned. (A filter on a partition
-    column constant-folds against those literals, so Catalyst prunes
-    whole partition branches without reading them.)
+    per distinct partition tuple, unioned (:func:`_read_adds`).
 
     ``skip_ranges`` ({col: (lo, hi)}, None = open end) prunes files by
     the log's per-file min/max `stats` BEFORE Spark ever lists them —
@@ -1041,57 +1123,8 @@ def read_delta(
         }
     schema = snap.schema
     assert schema is not None
-    data_fields = [f for f in schema.fields if f.name not in snap.partition_columns]
-    data_schema = StructType(data_fields)
-    part_types = {
-        f.name: f.dataType for f in schema.fields if f.name in snap.partition_columns
-    }
-    phys = (lambda c: mapping[c]) if mapping else (lambda c: c)
-    if mapping:
-        # scan under the PHYSICAL names (what the files store), alias
-        # back to logical after — the protocol's name/id-mode read
-        data_schema = StructType(
-            [
-                StructField(mapping[f.name], f.dataType, f.nullable)
-                for f in data_fields
-            ]
-        )
-
-    if not snap.files:
-        return spark.createDataFrame([], schema)
-
     dv_apply = _dv_filter(spark, path, snap)
-
-    def _minus_dvs(scan: DataFrame) -> DataFrame:
-        return dv_apply(scan) if dv_apply is not None else scan
-
-    def _file(p: str) -> str:
-        return os.path.join(path, urllib.parse.unquote(p))
-
-    if not snap.partition_columns:
-        df = _minus_dvs(
-            spark.read.schema(data_schema).parquet(
-                *[_file(p) for p in sorted(snap.files)]
-            )
-        )
-        if mapping:
-            df = df.select(
-                *[
-                    F.col(mapping[f.name]).alias(f.name)
-                    for f in data_fields
-                ]
-            )
-        return df
-
-    groups: dict[tuple, list[str]] = {}
-    for p, a in snap.files.items():
-        pv = a.get("partitionValues", {})
-        # mapped tables key partitionValues by PHYSICAL name; accept a
-        # logical-keyed fallback for lenient foreign writers
-        key = tuple(
-            pv.get(phys(c), pv.get(c)) for c in snap.partition_columns
-        )
-        groups.setdefault(key, []).append(_file(p))
+    groups = _partition_groups(path, snap, snap.files)
 
     # Adaptive, matching the Iceberg twin (iceberg._read_files): up to
     # 32 distinct tuples the literal union wins (Catalyst constant-
@@ -1120,8 +1153,6 @@ def read_delta(
         # every /col=val/ segment decodes to EXACTLY the log's value;
         # a foreign table whose layout disagrees with its log falls
         # back to the literal union, which reads only log values.
-        import re as _re
-
         for p, a in snap.files.items():
             pv = a.get("partitionValues", {})
             rel = "/" + urllib.parse.unquote(p)
@@ -1132,48 +1163,30 @@ def read_delta(
                     break
             if not fast_ok:
                 break
-    if fast_ok:
-        import re as _re
+    if not fast_ok:
+        return _read_adds(spark, path, snap, snap.files, hook=dv_apply)
 
-        df = _minus_dvs(
-            spark.read.schema(data_schema).parquet(
-                *sorted(p for paths in groups.values() for p in paths)
-            )
+    df = spark.read.schema(StructType(
+        [f for f in schema.fields if f.name not in snap.partition_columns]
+    )).parquet(*sorted(p for paths in groups.values() for p in paths))
+    if dv_apply is not None:
+        df = dv_apply(df)
+
+    def unesc(col):
+        # '+' is literal in both hive and URI path encoding;
+        # java URLDecoder would turn it into a space
+        return F.url_decode(F.regexp_replace(col, r"\+", "%2B"))
+
+    for col in snap.partition_columns:
+        seg = F.regexp_extract(
+            F.col("_metadata.file_path"),
+            f"/{_re.escape(col)}=([^/]+)/",
+            1,
         )
-
-        def unesc(col):
-            # '+' is literal in both hive and URI path encoding;
-            # java URLDecoder would turn it into a space
-            return F.url_decode(F.regexp_replace(col, r"\+", "%2B"))
-
-        for col in snap.partition_columns:
-            seg = F.regexp_extract(
-                F.col("_metadata.file_path"),
-                f"/{_re.escape(col)}=([^/]+)/",
-                1,
-            )
-            # file_path is a URI: hive-escaped dir name, URI-encoded
-            # on top — invert both layers
-            df = df.withColumn(col, unesc(unesc(seg)).cast(part_types[col]))
-        return df.select(*[f.name for f in schema.fields])
-
-    parts = []
-    for key, paths in sorted(groups.items(), key=lambda kv: tuple(map(str, kv[0]))):
-        df = _minus_dvs(spark.read.schema(data_schema).parquet(*sorted(paths)))
-        if mapping:
-            df = df.select(
-                *[
-                    F.col(mapping[f.name]).alias(f.name)
-                    for f in data_fields
-                ]
-            )
-        for col, val in zip(snap.partition_columns, key):
-            # Protocol: partition values serialize as strings; NULL is
-            # the JSON null. Cast back to the declared type.
-            lit = F.lit(val).cast(part_types[col])
-            df = df.withColumn(col, lit)
-        parts.append(df.select(*[f.name for f in schema.fields]))
-    return reduce(DataFrame.unionByName, parts)
+        # file_path is a URI: hive-escaped dir name, URI-encoded
+        # on top — invert both layers
+        df = df.withColumn(col, unesc(unesc(seg)).cast(schema[col].dataType))
+    return df.select(*[f.name for f in schema.fields])
 
 
 def delta_row_changes(
@@ -1184,16 +1197,10 @@ def delta_row_changes(
 ) -> DataFrame:
     """Row-level change feed for ONE commit — the CDC read-side
     complement of the DML write path (delta_dml) and the upsert sink
-    (streaming/delta_upsert): reconstructs what a commit DID to each
-    key by a keyed diff of the files it removed against the files it
-    added (both with ``dataChange: true``).
-
-    Output: the table schema + ``_change_type`` in
-    {'insert', 'delete', 'update_preimage', 'update_postimage'} +
-    ``_commit_version``. Rows copied verbatim by the rewrite (the
-    untouched majority of an affected file) emit NOTHING; a pure
-    OPTIMIZE (``dataChange: false``) emits nothing; a pure append is
-    all inserts.
+    (streaming/delta_upsert): what the commit DID to each key, stamped
+    ``_commit_version``. The key contract and output shape are
+    :mod:`changefeed`'s; a pure OPTIMIZE (``dataChange: false``) emits
+    nothing and a pure append is all inserts.
 
     Two formulations, spec-ordered (PROTOCOL.md §Change Data Files):
 
@@ -1204,13 +1211,12 @@ def delta_row_changes(
       always do). ``keys`` is not needed and not validated here, and
       live deletion vectors don't matter (cdc files are
       self-contained).
-    * Otherwise the changes are DERIVED by a keyed diff: ``keys``
-      must be a primary key — unique among the removed rows and
-      among the added rows (validated; ambiguous diffs raise, same
-      policy as MERGE's duplicate-source check). Cost scales with
-      the commit's touched files, never the table: old/new sides are
-      scans of exactly those file lists, the diff is one join keyed
-      on a (usually broadcastable) side.
+    * Otherwise the changes are DERIVED by a keyed diff of the files
+      the commit removed against the files it added (both with
+      ``dataChange: true``), each side under its own deletion-vector
+      state. Passing ``keys`` on a pure append derives too (and so
+      validates them). Cost scales with the commit's touched files,
+      never the table.
     """
     # Retention contract: row changes need the commit's own JSON
     # actions. They remain readable for ANY retained commit — including
@@ -1227,17 +1233,12 @@ def delta_row_changes(
             "per-commit actions"
         )
     cur = _replay_log(path, version)
-    schema = cur.schema
-    assert schema is not None
-    cols = [f.name for f in schema.fields]
-    # column-mapped tables (r10): data AND cdc files store PHYSICAL
-    # names (delta_dml stages them that way; foreign CDF writers do
-    # per spec) — read under them, alias back to logical.
-    mapping = _column_mapping(cur)
-    phys = (lambda c: mapping[c]) if mapping else (lambda c: c)
+    assert cur.schema is not None
+    cols = [f.name for f in cur.schema.fields]
+    stamp = F.lit(int(version)).cast("long")
     adds: dict[str, dict[str, Any]] = {}
     removed_paths: list[str] = []
-    cdc_actions: list[dict[str, Any]] = []
+    cdc_actions: dict[str, dict[str, Any]] = {}
     with open(commit_file) as f:
         for line in f:
             line = line.strip()
@@ -1249,7 +1250,7 @@ def delta_row_changes(
             elif "remove" in action and action["remove"].get("dataChange", True):
                 removed_paths.append(action["remove"]["path"])
             elif "cdc" in action:
-                cdc_actions.append(action["cdc"])
+                cdc_actions[action["cdc"]["path"]] = action["cdc"]
 
     if cdc_actions:
         # PROTOCOL.md §Change Data Files: when a version carries cdc
@@ -1257,79 +1258,17 @@ def delta_row_changes(
         # version — the writer materialized the exact change rows
         # (with `_change_type`), so no diff (and no key contract) is
         # needed, and DVs on the snapshot don't matter: the cdc files
-        # are self-contained. This covers both this engine's CDF
-        # writers (delta.enableChangeDataFeed=true DML) and foreign
-        # tables whose writers emit cdc.
-        cdc_fields = [
-            f for f in schema.fields if f.name not in cur.partition_columns
-        ]
-        cdc_data_schema = StructType(
-            [
-                StructField(phys(f.name), f.dataType, f.nullable)
-                for f in cdc_fields
-            ]
-            + [StructField("_change_type", StringType(), False)]
-        )
-        cdc_sel = [F.col(phys(f.name)).alias(f.name) for f in cdc_fields]
-        part_types_c = {
-            f.name: f.dataType
-            for f in schema.fields
-            if f.name in cur.partition_columns
-        }
-        groups: dict[tuple, list[str]] = {}
-        for a in cdc_actions:
-            pv = a.get("partitionValues", {})
-            key = tuple(
-                pv.get(phys(c), pv.get(c)) for c in cur.partition_columns
-            )
-            groups.setdefault(key, []).append(
-                os.path.join(path, urllib.parse.unquote(a["path"]))
-            )
-        parts = []
-        for key, paths in sorted(
-            groups.items(), key=lambda kv: tuple(map(str, kv[0]))
-        ):
-            df = spark.read.schema(cdc_data_schema).parquet(
-                *sorted(paths)
-            ).select(*cdc_sel, "_change_type")
-            for col, val in zip(cur.partition_columns, key):
-                df = df.withColumn(col, F.lit(val).cast(part_types_c[col]))
-            parts.append(df.select(*cols, "_change_type"))
-        return reduce(DataFrame.unionByName, parts).withColumn(
-            "_commit_version", F.lit(int(version)).cast("long")
-        )
+        # are self-contained. Column-mapped tables store cdc files
+        # under PHYSICAL names, like data files.
+        return _read_adds(
+            spark,
+            path,
+            cur,
+            cdc_actions,
+            extra_phys=[StructField("_change_type", StringType(), False)],
+        ).withColumn("_commit_version", stamp)
 
-    insert_only = not removed_paths and keys is None
-    if keys is None and not insert_only:
-        raise ValueError(
-            f"commit {version} rewrites files (removes with "
-            "dataChange) and carries no cdc actions — deriving row "
-            "changes needs a primary key; pass keys=[...]"
-        )
-    if keys is not None:
-        missing = [k for k in keys if k not in cols]
-        if missing:
-            raise ValueError(f"change keys not in table schema: {missing}")
-
-    part_types = {
-        f.name: f.dataType
-        for f in schema.fields
-        if f.name in cur.partition_columns
-    }
-    diff_fields = [
-        f for f in schema.fields if f.name not in cur.partition_columns
-    ]
-    data_schema = StructType(
-        [
-            StructField(phys(f.name), f.dataType, f.nullable)
-            for f in diff_fields
-        ]
-    )
-    data_sel = [F.col(phys(f.name)).alias(f.name) for f in diff_fields]
-
-    def _read_actions(actions: dict[str, dict[str, Any]]) -> DataFrame:
-        if not actions:
-            return spark.createDataFrame([], schema)
+    def _read(actions: dict[str, dict[str, Any]]) -> DataFrame:
         # each SIDE applies its own actions' deletion-vector state
         # (r10 late): the old side reads rows visible at v-1 (prev
         # snapshot's descriptors), the new side rows visible at v —
@@ -1344,40 +1283,23 @@ def delta_row_changes(
                 if a.get("deletionVector")
             ],
         )
-        groups: dict[tuple, list[str]] = {}
-        for p, a in actions.items():
-            pv = a.get("partitionValues", {})
-            key = tuple(
-                pv.get(phys(c), pv.get(c)) for c in cur.partition_columns
-            )
-            groups.setdefault(key, []).append(
-                os.path.join(path, urllib.parse.unquote(p))
-            )
-        parts = []
-        for key, paths in sorted(groups.items(), key=lambda kv: tuple(map(str, kv[0]))):
-            df = spark.read.schema(data_schema).parquet(*sorted(paths))
-            if dv_apply is not None:
-                df = dv_apply(df)
-            df = df.select(*data_sel)
-            for col, val in zip(cur.partition_columns, key):
-                df = df.withColumn(col, F.lit(val).cast(part_types[col]))
-            parts.append(df.select(*cols))
-        return reduce(DataFrame.unionByName, parts)
+        return _read_adds(spark, path, cur, actions, hook=dv_apply)
 
-    if insert_only:
-        # INSERT-ONLY commit (pure append): every added row is an
-        # 'insert' — no key contract needed, and snapshot-level DVs
-        # are irrelevant (a vector committed at-or-before ``version``
-        # can only reference files from EARLIER commits; a same-commit
-        # DV attach is a remove+re-add, which lands in the diff path).
+    if not removed_paths and keys is None:
+        # INSERT-ONLY commit (pure append): snapshot-level DVs are
+        # irrelevant (a vector committed at-or-before ``version`` can
+        # only reference files from EARLIER commits; a same-commit DV
+        # attach is a remove+re-add, which lands in the diff path).
         # This is how the real table_changes serves append commits
         # without cdc files.
-        return _read_actions(adds).select(
-            *cols,
-            F.lit("insert").alias("_change_type"),
-            F.lit(int(version)).cast("long").alias("_commit_version"),
-        )
-
+        return insert_rows(_read(adds), cols, "_commit_version", stamp)
+    require_keys(
+        keys,
+        cols,
+        f"commit {version} rewrites files (removes with dataChange) and "
+        "carries no cdc actions",
+    )
+    removed: dict[str, dict[str, Any]] = {}
     if removed_paths:
         prev = _replay_log(path, version - 1)
         lost = [p for p in removed_paths if p not in prev.files]
@@ -1386,47 +1308,8 @@ def delta_row_changes(
                 f"commit {version} removes files absent from version "
                 f"{version - 1}: {lost[:3]} — log is inconsistent"
             )
-        old = _read_actions({p: prev.files[p] for p in removed_paths})
-    else:
-        old = spark.createDataFrame([], schema)
-    new = _read_actions(adds)
-
-    # Both sides persist: the key-uniqueness validation job below
-    # materializes them, and the keyed diff that follows reuses the
-    # cached rows — each side's touched files are read ONCE per
-    # derivation instead of twice, and the two per-side dup-check
-    # jobs fuse into one (r15, guide §1.2 — same treatment as
-    # iceberg_row_changes).
-    old = old.persist()
-    new = new.persist()
-    dup = (
-        old.select(F.lit("removed").alias("__side"), *keys)
-        .unionByName(new.select(F.lit("added").alias("__side"), *keys))
-        .groupBy("__side", *keys)
-        .count()
-        .filter("count > 1")
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        raise ValueError(
-            f"keys {keys} are not unique among the {dup[0]['__side']} "
-            f"rows (e.g. { {k: dup[0][k] for k in keys} }) — row-level "
-            "changes need a primary key"
-        )
-
-    from sparkstreamingtwitter_presidential_spark.sources.changefeed import (
-        keyed_change_rows,
-    )
-
-    return keyed_change_rows(
-        old,
-        new,
-        keys,
-        cols,
-        "_commit_version",
-        F.lit(int(version)).cast("long"),
-    )
+        removed = {p: prev.files[p] for p in removed_paths}
+    return derive(_read(removed), _read(adds), keys, cols, "_commit_version", stamp)
 
 
 def delta_table_changes(
@@ -1439,11 +1322,9 @@ def delta_table_changes(
     """Row-level changes for every commit in ``(from_version,
     to_version]`` — the real client's ``table_changes`` TVF shape:
     the union of :func:`delta_row_changes` over the range, each row
-    stamped with its ``_commit_version``. Per commit, the source is
-    (in spec order) its cdc actions, the insert-only shortcut for
-    pure appends, or the keyed diff (which needs ``keys``; a rewrite
-    commit in the range raises without them). Pure-metadata commits
-    (SET TBLPROPERTIES, OPTIMIZE's dataChange:false rewrites) emit
+    stamped with its ``_commit_version`` (a rewrite commit in the
+    range raises without ``keys``). Pure-metadata commits (SET
+    TBLPROPERTIES, OPTIMIZE's dataChange:false rewrites) emit
     nothing. Cost ∝ the range's changed rows, never the table —
     commits are read independently, so a poll's plan width is
     O(commits in range)."""
@@ -1462,37 +1343,20 @@ def delta_table_changes(
                 "(expired by log retention) — table_changes needs the "
                 "per-commit actions for the whole range"
             )
-        has_change = False
         with open(commit_file) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "cdc" in action:
-                    has_change = True
-                    break
-                for k in ("add", "remove"):
-                    if k in action and action[k].get("dataChange", True):
-                        has_change = True
-                        break
-                if has_change:
-                    break
+            has_change = any(
+                "cdc" in a
+                or any(
+                    k in a and a[k].get("dataChange", True)
+                    for k in ("add", "remove")
+                )
+                for a in (json.loads(line) for line in f if line.strip())
+            )
         if has_change:
             frames.append(delta_row_changes(spark, path, v, keys=keys))
-    if not frames:
-        assert end.schema is not None
-        return spark.createDataFrame(
-            [],
-            StructType(
-                list(end.schema.fields)
-                + [
-                    StructField("_change_type", StringType(), False),
-                    StructField("_commit_version", LongType(), False),
-                ]
-            ),
-        )
-    return reduce(DataFrame.unionByName, frames)
+    return range_union(
+        spark, frames, lambda: end.schema, "_commit_version", LongType()
+    )
 
 
 def set_delta_properties(path: str, props: dict[str, str]) -> int:
@@ -2148,38 +2012,17 @@ def delta_changes(
     — i.e. poll within the log-retention window, the same constraint
     the real streaming source has."""
     end = _replay_log(path, to_version)  # validates to_version exists
-    # mapped tables store PHYSICAL column names in data files and key
-    # partitionValues by them — scan under the physical names and
-    # alias back to logical (r10; an r8 ADVICE refusal until the DML
-    # paths proved the mapping plumbing).
-    # DVs need no blanket refusal (r9 late): a DV attach IN RANGE is a
+    # Mapped tables read under the physical names (_read_adds). DVs
+    # need no blanket refusal (r9 late): a DV attach IN RANGE is a
     # remove+re-add and raises on the remove below; vectors on files
     # OUTSIDE the range cannot reference the range's new adds, which
     # are the only files this read scans.
-    mapping = _column_mapping(end)
-    phys = (lambda c: mapping[c]) if mapping else (lambda c: c)
     if from_version > end.version:
         raise ValueError(
             f"from_version {from_version} > table version {end.version}"
         )
     schema = end.schema
     assert schema is not None
-    data_fields = [
-        f for f in schema.fields if f.name not in end.partition_columns
-    ]
-    data_schema = StructType(
-        [
-            StructField(phys(f.name), f.dataType, f.nullable)
-            for f in data_fields
-        ]
-    )
-    data_sel = [F.col(phys(f.name)).alias(f.name) for f in data_fields]
-    part_types = {
-        f.name: f.dataType
-        for f in schema.fields
-        if f.name in end.partition_columns
-    }
-
     log_dir = _log_path(path)
     commits = {
         v: n
@@ -2187,7 +2030,7 @@ def delta_changes(
         if (v := _version_of(n, ".json")) is not None
         and from_version < v <= end.version
     }
-    new_adds: list[tuple[int, dict[str, Any]]] = []
+    new_adds: dict[int, dict[str, dict[str, Any]]] = {}
     for v in sorted(commits):
         with open(os.path.join(log_dir, commits[v])) as f:
             for line in f:
@@ -2203,7 +2046,7 @@ def delta_changes(
                             "change reads cannot represent retractions "
                             "— re-read the snapshot"
                         )
-                    new_adds.append((v, action["add"]))
+                    new_adds.setdefault(v, {})[action["add"]["path"]] = action["add"]
                 elif "remove" in action and action["remove"].get(
                     "dataChange", True
                 ):
@@ -2213,38 +2056,22 @@ def delta_changes(
                         "represent retractions — re-read the snapshot"
                     )
 
-    out_cols = [f.name for f in schema.fields] + ["_commit_version"]
     if not new_adds:
         empty = StructType(
             schema.fields + [StructField("_commit_version", LongType())]
         )
         return spark.createDataFrame([], empty)
-
-    groups: dict[tuple, list[tuple[str, int]]] = {}
-    for v, a in new_adds:
-        pv = a.get("partitionValues", {})
-        key = tuple(
-            pv.get(phys(c), pv.get(c)) for c in end.partition_columns
-        )
-        groups.setdefault(key, []).append(
-            (os.path.join(path, urllib.parse.unquote(a["path"])), v)
-        )
-    parts = []
-    for key, files in sorted(groups.items(), key=lambda kv: tuple(map(str, kv[0]))):
-        # one scan per (partition tuple, commit version): the version is
-        # log metadata, injected as a literal like partition values
-        by_v: dict[int, list[str]] = {}
-        for fp, v in files:
-            by_v.setdefault(v, []).append(fp)
-        for v, paths in sorted(by_v.items()):
-            df = spark.read.schema(data_schema).parquet(
-                *sorted(paths)
-            ).select(*data_sel)
-            for col, val in zip(end.partition_columns, key):
-                df = df.withColumn(col, F.lit(val).cast(part_types[col]))
-            df = df.withColumn("_commit_version", F.lit(v).cast("long"))
-            parts.append(df.select(*out_cols))
-    return reduce(DataFrame.unionByName, parts)
+    # one read per commit: the version is log metadata, stamped as a
+    # literal like partition values
+    return reduce(
+        DataFrame.unionByName,
+        [
+            _read_adds(spark, path, end, files).withColumn(
+                "_commit_version", F.lit(v).cast("long")
+            )
+            for v, files in sorted(new_adds.items())
+        ],
+    )
 
 
 def last_txn_version(path: str, app_id: str) -> int | None:

@@ -61,6 +61,7 @@ from sparkstreamingtwitter_presidential_spark.sources.delta import (
     _recompute_generated,
     _mapping_field_ids,
     _refuse_unenforced_writer_contracts,
+    _read_adds,
     _replay_log,
     _row_tracking_active,
     _rt_materialized_names,
@@ -252,17 +253,12 @@ def _scan_with_file(
     """Distributed scan of the snapshot's live files with one extra
     column: the file's basename (``__delta_file``). Basenames are
     unique across the table (every staged file is uuid-named), so they
-    key back to the log's relative paths driver-side. Partition columns
-    are injected from the log exactly as in read_delta.
+    key back to the log's relative paths driver-side. The read is
+    read_delta's (``delta._read_adds``: logical names over mapped
+    files, partition values injected from the log).
 
     ``with_pos`` adds ``__delta_pos`` = ``_metadata.row_index`` (the
     file-relative row ordinal deletion vectors are keyed by).
-
-    Column-mapped tables (r10): the parquet files store PHYSICAL names,
-    so the scan schema uses them and aliases back to logical in the
-    same select (predicates and SET expressions downstream see logical
-    names, exactly like read_delta); add.partitionValues are keyed by
-    physical name with a logical-keyed fallback for lenient writers.
 
     ``apply_dvs`` (r10): rows a live deletion vector marks deleted are
     REMOVED from the scan (basename-keyed anti-join) — what lets CoW
@@ -290,67 +286,25 @@ def _scan_with_file(
             how="left_anti",
         )
         return out if with_pos else out.drop(_POS_COL)
-    schema = snap.schema
-    assert schema is not None
-    mapping = _column_mapping(snap)
-    phys = (lambda c: mapping[c]) if mapping else (lambda c: c)
-    data_fields = [
-        f for f in schema.fields if f.name not in snap.partition_columns
-    ]
-    data_schema = StructType(
-        [StructField(phys(f.name), f.dataType, f.nullable) for f in data_fields]
-        + [StructField(c, LongType(), True) for c in extra_phys_cols]
-    )
-    data_sel = [F.col(phys(f.name)).alias(f.name) for f in data_fields] + [
-        F.col(c) for c in extra_phys_cols
-    ]
-    part_types = {
-        f.name: f.dataType
-        for f in schema.fields
-        if f.name in snap.partition_columns
-    }
-    extra_cols = [
-        F.element_at(
-            F.split(F.col("_metadata.file_path"), "/"), -1
-        ).alias(_FILE_COL)
-    ]
-    if with_pos:
-        extra_cols.append(F.col("_metadata.row_index").alias(_POS_COL))
-    extra_names = [_FILE_COL] + ([_POS_COL] if with_pos else [])
-
-    def _file(p: str) -> str:
-        return os.path.join(path, urllib.parse.unquote(p))
-
-    cols = [f.name for f in schema.fields]
+    extra = [StructField(c, LongType(), True) for c in extra_phys_cols]
     if not snap.files:
-        out = spark.createDataFrame([], schema)
-        for c in extra_phys_cols:
-            out = out.withColumn(c, F.lit(None).cast("long"))
+        out = _read_adds(spark, path, snap, {}, extra_phys=extra)
         out = out.withColumn(_FILE_COL, F.lit(None).cast("string"))
         if with_pos:
             out = out.withColumn(_POS_COL, F.lit(None).cast("long"))
         return out
-    if not snap.partition_columns:
-        return spark.read.schema(data_schema).parquet(
-            *[_file(p) for p in sorted(snap.files)]
-        ).select(*data_sel, *extra_cols)
 
-    groups: dict[tuple, list[str]] = {}
-    for p, a in snap.files.items():
-        pv = a.get("partitionValues", {})
-        key = tuple(
-            pv.get(phys(c), pv.get(c)) for c in snap.partition_columns
-        )
-        groups.setdefault(key, []).append(_file(p))
-    parts = []
-    for key, paths in sorted(groups.items(), key=lambda kv: tuple(map(str, kv[0]))):
-        df = spark.read.schema(data_schema).parquet(*sorted(paths)).select(
-            *data_sel, *extra_cols
-        )
-        for col, val in zip(snap.partition_columns, key):
-            df = df.withColumn(col, F.lit(val).cast(part_types[col]))
-        parts.append(df.select(*cols, *extra_phys_cols, *extra_names))
-    return reduce(DataFrame.unionByName, parts)
+    def _tag(raw: DataFrame) -> DataFrame:
+        tags = [
+            F.element_at(
+                F.split(F.col("_metadata.file_path"), "/"), -1
+            ).alias(_FILE_COL)
+        ]
+        if with_pos:
+            tags.append(F.col("_metadata.row_index").alias(_POS_COL))
+        return raw.select("*", *tags)
+
+    return _read_adds(spark, path, snap, snap.files, hook=_tag, extra_phys=extra)
 
 
 def _rel_by_base(snap: _Snapshot) -> dict[str, str]:

@@ -102,6 +102,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sparkstreamingtwitter_presidential_spark.sources._fs import put_if_absent
+from sparkstreamingtwitter_presidential_spark.sources.changefeed import (
+    derive,
+    empty_feed,
+    insert_rows,
+    range_union,
+    require_keys,
+)
 
 _HOODIE_DIR = ".hoodie"
 _PROPS = "hoodie.properties"
@@ -1110,29 +1117,25 @@ def hudi_row_changes(
     keys: list[str] | None = None,
 ) -> DataFrame:
     """Row-level change feed for ONE commit — the Hudi member of the
-    Delta/Iceberg row_changes trilogy: reconstructs what a commit DID
-    to each key by a keyed diff of the touched file groups' PREVIOUS
+    Delta/Iceberg row-change feeds: reconstructs what a commit DID to
+    each key by a keyed diff of the touched file groups' PREVIOUS
     latest slices against the slices the commit wrote. Unlike the
     incremental pull (post-images only), this surfaces UPDATE
     pre-images AND Hudi's deletes-by-absence: a key present in the old
     slice but missing from the rewrite emits a 'delete' row — the one
-    change class the commit-time filter can never see.
+    change class the commit-time filter can never see. The key
+    contract and output shape are :mod:`changefeed`'s, stamped
+    ``_commit_instant``; a pure INSERT commit (no prior slices in its
+    groups) is all inserts.
 
-    A pure INSERT commit (no prior slices in its groups) needs no
-    ``keys`` and emits 'insert' rows; rewrites derive insert/delete/
-    update_preimage/update_postimage via the full-outer key diff
-    (``keys`` validated unique per side). Copy-over rows (equal on
-    both sides) emit NOTHING. Output: data columns + ``_change_type``
-    + ``_commit_instant``.
+    Commit resolution (:func:`_change_commit`): archived instants
+    resolve from the archive's metadata, and the OLD side folds
+    archived commit metadata in (extra_metas), so pre-images stay
+    exact on archived tables; INSERT_OVERWRITE_TABLE refuses; a
+    CLUSTER commit emits nothing. Cost ∝ the commit's touched groups'
+    slices, never the table.
 
-    Archival: the commit's own metadata must be ACTIVE (an archived
-    instant refuses — permanently gone); the OLD side folds archived
-    commit metadata in (extra_metas), so pre-images stay exact on
-    archived tables. INSERT_OVERWRITE_TABLE refuses (the pre-image is
-    the whole previous table, not a per-group diff). Cost ∝ the
-    commit's touched groups' slices, never the table.
-
-    MERGE_ON_READ (r13-late, closing the trilogy): the same keyed
+    MERGE_ON_READ (r13-late): the same keyed
     diff over MERGED views — old side = touched groups merged as of
     the previous commit, new side = merged as of ``instant`` — so log
     updates emit pre/post pairs, DELETE BLOCKS emit exact 'delete'
@@ -1162,37 +1165,9 @@ def hudi_row_changes(
         )
     ):
         arch = _archived_commit_metas(path)
-    if instant not in commits and instant not in arch:
-        raise ValueError(
-            f"instant {instant!r} is not a completed commit "
-            f"(have {commits})"
-        )
-    meta = (
-        _commit_meta(path, instant) if instant in commits else arch[instant]
-    )
-    if meta.get("operationType") == "INSERT_OVERWRITE_TABLE":
-        raise ValueError(
-            f"instant {instant!r} is an overwrite — its pre-image is "
-            "the whole previous table, not a per-group diff; compare "
-            "snapshots instead"
-        )
-    if meta.get("operationType") == "CLUSTER":
-        # clustering is LAYOUT-ONLY (replace commit; rows keep their
-        # original stamps and values) — the change feed is empty by
-        # definition. Without this guard the keyed diff would see the
-        # commit's NEW file groups with no prior slices and emit every
-        # row as a phantom 'insert'.
-        files = [
-            os.path.join(path, st["path"])
-            for stats in (meta.get("partitionToWriteStats") or {}).values()
-            for st in stats
-        ]
-        base = spark.read.parquet(*files).drop(*META_COLS)
-        return base.select(
-            *base.columns,
-            F.lit("insert").alias("_change_type"),
-            F.lit(instant).alias("_commit_instant"),
-        ).limit(0)
+    meta, all_commits, empty = _change_commit(spark, path, instant, commits, arch)
+    if empty is not None:
+        return empty
     touched: set[tuple[str, str]] = set()
     new_files: list[str] = []
     for part, stats in (meta.get("partitionToWriteStats") or {}).items():
@@ -1213,7 +1188,6 @@ def hudi_row_changes(
     # the previous instant over the FULL timeline (active ∪ archived):
     # for an archived target the active-only walk would pick a LATER
     # commit (or the old max(arch) fallback, which could postdate it)
-    all_commits = sorted(set(commits) | set(arch))
     prev_commits = [c for c in all_commits if c < instant]
     prev_instant = prev_commits[-1] if prev_commits else None
     old_files: list[str] = []
@@ -1240,37 +1214,53 @@ def hudi_row_changes(
 
     new = _read(new_files)
     cols = new.columns
-    inst_col = F.lit(instant).alias("_commit_instant")
+    stamp = F.lit(instant)
     if not old_files:
-        return new.select(
-            *cols, F.lit("insert").alias("_change_type"), inst_col
-        )
-    if keys is None:
-        raise ValueError(
-            f"instant {instant!r} rewrote file groups — deriving row "
-            "changes needs a primary key; pass keys=[...]"
-        )
-    missing = [k for k in keys if k not in cols]
-    if missing:
-        raise ValueError(f"change keys not in table schema: {missing}")
-    old = _read(old_files)
-    for side, name in ((old, "removed"), (new, "added")):
-        dup = (
-            side.groupBy(*keys).count().filter("count > 1").limit(1).collect()
-        )
-        if dup:
-            raise ValueError(
-                f"keys {keys} are not unique among the {name} rows "
-                f"(e.g. { {k: dup[0][k] for k in keys} }) — row-level "
-                "changes need a primary key"
-            )
-    from sparkstreamingtwitter_presidential_spark.sources.changefeed import (
-        keyed_change_rows,
-    )
+        return insert_rows(new, cols, "_commit_instant", stamp)
+    require_keys(keys, cols, f"instant {instant!r} rewrote file groups")
+    return derive(_read(old_files), new, keys, cols, "_commit_instant", stamp)
 
-    return keyed_change_rows(
-        old, new, keys, cols, "_commit_instant", F.lit(instant)
-    )
+
+def _change_commit(
+    spark: SparkSession,
+    path: str,
+    instant: str,
+    active: list[str],
+    arch: dict[str, dict],
+) -> tuple[dict, list[str], DataFrame | None]:
+    """Resolve ``instant`` for a row-change read (CoW and MOR alike):
+    its commit metadata, the timeline it sits on (``active`` ∪
+    ``arch`` — each caller gates its own archive parse), and the feed
+    when that is empty by definition, else None. Unknown instants and
+    INSERT_OVERWRITE_TABLE refuse: an overwrite's pre-image is the
+    whole previous table, not a per-group diff."""
+    commits = sorted(set(active) | set(arch))
+    if instant not in commits:
+        raise ValueError(
+            f"instant {instant!r} is not a completed commit "
+            f"(have {commits})"
+        )
+    meta = _commit_meta(path, instant) if instant in active else arch[instant]
+    if meta.get("operationType") == "INSERT_OVERWRITE_TABLE":
+        raise ValueError(
+            f"instant {instant!r} is an overwrite — its pre-image is "
+            "the whole previous table, not a per-group diff; compare "
+            "snapshots instead"
+        )
+    if meta.get("operationType") != "CLUSTER":
+        return meta, commits, None
+    # clustering is LAYOUT-ONLY (replace commit; rows keep their
+    # original stamps and values) — the change feed is empty by
+    # definition. Without this guard the keyed diff would see the
+    # commit's NEW file groups with no prior slices and emit every row
+    # as a phantom 'insert'. Clustered files are plain parquet bases.
+    files = [
+        os.path.join(path, st["path"])
+        for stats in (meta.get("partitionToWriteStats") or {}).values()
+        for st in stats
+    ]
+    schema = spark.read.parquet(*files).drop(*META_COLS).schema
+    return meta, commits, empty_feed(spark, schema, "_commit_instant", T.StringType())
 
 
 def hudi_table_changes(
@@ -1282,7 +1272,7 @@ def hudi_table_changes(
 ) -> DataFrame:
     """Row-level changes for every commit in (``from_instant``,
     ``to_instant``] — the range composition of
-    :func:`hudi_row_changes` (the trilogy's range TVF). Per-commit
+    :func:`hudi_row_changes` (the range TVF). Per-commit
     semantics (pre/post pairs, deletes-by-absence, copy-over silence,
     overwrite refusal) apply commit-by-commit; a key changed twice in
     range emits one pre/post pair PER commit, chronologically —
@@ -1301,16 +1291,13 @@ def hudi_table_changes(
         for c in commits
         if from_instant < c <= hi
     ]
-    if not frames:
-        return (
-            read_hudi(spark, path)
-            .limit(0)
-            .withColumn("_change_type", F.lit("insert"))
-            .withColumn("_commit_instant", F.lit(""))
-        )
-    from functools import reduce
-
-    return reduce(DataFrame.unionByName, frames)
+    return range_union(
+        spark,
+        frames,
+        lambda: read_hudi(spark, path).schema,
+        "_commit_instant",
+        T.StringType(),
+    )
 
 
 def timeline_infos(path: str) -> list[dict]:

@@ -75,10 +75,16 @@ from sparkstreamingtwitter_presidential_spark.sources import hudi_log as hl
 from sparkstreamingtwitter_presidential_spark.sources.avro import (
     spark_to_avro_schema,
 )
+from sparkstreamingtwitter_presidential_spark.sources.changefeed import (
+    derive,
+    insert_rows,
+    require_keys,
+)
 from sparkstreamingtwitter_presidential_spark.sources.hudi import (
     META_COLS,
     _archived_commit_metas,
     _base_files,
+    _change_commit,
     _commit_meta,
     _complete_instant,
     _completed_commits,
@@ -1060,15 +1066,14 @@ def hudi_row_changes_mor(
 ) -> DataFrame:
     """Row-level change feed for ONE commit on a MOR table — the
     merged-view form of `hudi.hudi_row_changes` (see its docstring for
-    the shared semantics): old side = the commit's touched groups
-    MERGED as of the previous commit, new side = merged as of
-    ``instant``; the keyed full-outer diff derives insert / delete /
-    update_preimage / update_postimage, copy-overs stay silent. Log
-    updates therefore emit exact pre/post pairs, delete blocks emit
-    exact 'delete' rows (the keys are explicit — richer than CoW
-    deletes-by-absence), and a COMPACTION commit emits nothing (both
-    merged views are identical). Cost ∝ touched slices, merged twice —
-    never the table."""
+    the shared semantics; the key contract is :mod:`changefeed`'s): old
+    side = the commit's touched groups MERGED as of the previous
+    commit, new side = merged as of ``instant``. Log updates therefore
+    emit exact pre/post pairs, delete blocks emit exact 'delete' rows
+    (the keys are explicit — richer than CoW deletes-by-absence), and a
+    COMPACTION commit emits nothing (both merged views are identical).
+    Each side is merged once (the derivation persists it). Cost ∝
+    touched slices, never the table."""
     # archived instants work too (r14): the archive's public layout
     # carries the commit's full metadata, and the merged as-of views
     # already plan off the complete timeline. Demand gate (r15): the
@@ -1081,41 +1086,16 @@ def hudi_row_changes_mor(
         instant not in active or (active and instant == active[0])
     ):
         arch = _archived_commit_metas(path)
-    commits = sorted(set(active) | set(arch))
-    if instant not in commits:
-        raise ValueError(
-            f"instant {instant!r} is not a completed commit "
-            f"(have {commits})"
-        )
-    meta = arch[instant] if instant in arch else _commit_meta(path, instant)
-    if meta.get("operationType") == "INSERT_OVERWRITE_TABLE":
-        raise ValueError(
-            f"instant {instant!r} is an overwrite — its pre-image is "
-            "the whole previous table, not a per-group diff; compare "
-            "snapshots instead"
-        )
-    if meta.get("operationType") == "CLUSTER":
-        # layout-only replace commit (see hudi.hudi_row_changes): the
-        # change feed is empty by definition; clustered files are
-        # plain parquet bases
-        files = [
-            os.path.join(path, st["path"])
-            for stats in (meta.get("partitionToWriteStats") or {}).values()
-            for st in stats
-        ]
-        base = spark.read.parquet(*files).drop(*META_COLS)
-        return base.select(
-            *base.columns,
-            F.lit("insert").alias("_change_type"),
-            F.lit(instant).alias("_commit_instant"),
-        ).limit(0)
+    meta, commits, empty = _change_commit(spark, path, instant, active, arch)
+    if empty is not None:
+        return empty
     touched: set[tuple[str, str]] = set()
     for part, stats in (meta.get("partitionToWriteStats") or {}).items():
         for st in stats:
             touched.add((part, _fid_from_stat(st)))
     new = read_hudi_mor(spark, path, as_of=instant, groups=touched)
     cols = new.columns
-    inst_col = F.lit(instant).alias("_commit_instant")
+    stamp = F.lit(instant)
     prev_commits = [c for c in commits if c < instant]
     prev = prev_commits[-1] if prev_commits else None
     old = None
@@ -1129,31 +1109,6 @@ def hudi_row_changes_mor(
                 spark, path, as_of=prev, groups=live_touched
             )
     if old is None:
-        return new.select(
-            *cols, F.lit("insert").alias("_change_type"), inst_col
-        )
-    if keys is None:
-        raise ValueError(
-            f"instant {instant!r} changed existing file groups — "
-            "deriving row changes needs a primary key; pass keys=[...]"
-        )
-    missing = [k for k in keys if k not in cols]
-    if missing:
-        raise ValueError(f"change keys not in table schema: {missing}")
-    for side, name in ((old, "removed"), (new, "added")):
-        dup = (
-            side.groupBy(*keys).count().filter("count > 1").limit(1).collect()
-        )
-        if dup:
-            raise ValueError(
-                f"keys {keys} are not unique among the {name} rows "
-                f"(e.g. { {k: dup[0][k] for k in keys} }) — row-level "
-                "changes need a primary key"
-            )
-    from sparkstreamingtwitter_presidential_spark.sources.changefeed import (
-        keyed_change_rows,
-    )
-
-    return keyed_change_rows(
-        old, new, keys, cols, "_commit_instant", F.lit(instant)
-    )
+        return insert_rows(new, cols, "_commit_instant", stamp)
+    require_keys(keys, cols, f"instant {instant!r} changed existing file groups")
+    return derive(old, new, keys, cols, "_commit_instant", stamp)

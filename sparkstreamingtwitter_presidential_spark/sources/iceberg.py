@@ -88,6 +88,13 @@ from sparkstreamingtwitter_presidential_spark.sources.avro import (
     read_container,
     write_container,
 )
+from sparkstreamingtwitter_presidential_spark.sources.changefeed import (
+    derive,
+    empty_feed,
+    insert_rows,
+    range_union,
+    require_keys,
+)
 from sparkstreamingtwitter_presidential_spark.sources.row_dml import (
     affected_files,
     check_merge,
@@ -2402,14 +2409,11 @@ def iceberg_row_changes(
     The two file sets come from comparing the snapshot's LIVE set with
     its PARENT's (by file_path) — robust to foreign writers that drop
     old manifests instead of retaining status=DELETED entries, which
-    an entry-status walk would silently misread as pure adds. A pure
-    append (nothing removed) needs no ``keys`` and emits 'insert'
-    rows; a ``replace`` snapshot (compaction / rewrite_manifests)
-    emits NOTHING (rows unchanged by definition); anything that
-    removed files derives insert/delete/update_preimage/
-    update_postimage via the full-outer key diff (``keys`` must be a
-    primary key on both sides — validated). Output: the table schema
-    + ``_change_type`` + ``_snapshot_id``.
+    an entry-status walk would silently misread as pure adds. A
+    ``replace`` snapshot (compaction / rewrite_manifests) emits
+    NOTHING (rows unchanged by definition); a pure append is all
+    inserts; the key contract and output shape are
+    :mod:`changefeed`'s, stamped ``_snapshot_id``.
 
     MOR snapshots (r10 late): a commit that ADDS (or drops) POSITION
     delete files — including v3 Puffin deletion vectors — derives its
@@ -2440,16 +2444,9 @@ def iceberg_row_changes(
     part_fields = _partition_fields(meta, ice_schema)
     spark_schema = _schema_to_spark(ice_schema)
     cols = [f.name for f in spark_schema.fields]
-    out_schema = T.StructType(
-        list(spark_schema.fields)
-        + [
-            T.StructField("_change_type", T.StringType(), False),
-            T.StructField("_snapshot_id", T.LongType(), False),
-        ]
-    )
     if op == "replace":
         # layout-only snapshot: same rows, different files
-        return spark.createDataFrame([], out_schema)
+        return empty_feed(spark, spark_schema, "_snapshot_id", T.LongType())
 
     cur_entries, cur_dels = _entries_and_deletes_for_snapshot(path, snap)
     parent_id = snap.get("parent-snapshot-id")
@@ -2603,47 +2600,17 @@ def iceberg_row_changes(
 
     ver = F.lit(int(sid)).cast("long")
     if not removed and not both_affected_cur:
-        return _read(added, cur_entries, cur_dels).select(
-            *cols,
-            F.lit("insert").alias("_change_type"),
-            ver.alias("_snapshot_id"),
+        return insert_rows(
+            _read(added, cur_entries, cur_dels), cols, "_snapshot_id", ver
         )
-    if keys is None:
-        raise ValueError(
-            f"snapshot {sid} removed files (or changed their delete "
-            "state) — deriving row changes needs a primary key; pass "
-            "keys=[...]"
-        )
-    missing = [k for k in keys if k not in cols]
-    if missing:
-        raise ValueError(f"change keys not in table schema: {missing}")
-    # Both sides persist: the key-uniqueness validation job below
-    # materializes them, and the full-outer diff that follows reuses
-    # the cached rows — each side's touched files are read ONCE per
-    # derivation instead of twice (r15, guide §1.2: don't recompute
-    # what the same operation needs again).
-    old = _read(removed + both_affected_par, par_entries, par_dels).persist()
-    new = _read(added + both_affected_cur, cur_entries, cur_dels).persist()
-    dup = (
-        old.select(F.lit("removed").alias("__side"), *keys)
-        .unionByName(new.select(F.lit("added").alias("__side"), *keys))
-        .groupBy("__side", *keys)
-        .count()
-        .filter("count > 1")
-        .limit(1)
-        .collect()
+    require_keys(
+        keys,
+        cols,
+        f"snapshot {sid} removed files (or changed their delete state)",
     )
-    if dup:
-        raise ValueError(
-            f"keys {keys} are not unique among the {dup[0]['__side']} "
-            f"rows (e.g. { {k: dup[0][k] for k in keys} }) — row-level "
-            "changes need a primary key"
-        )
-    from sparkstreamingtwitter_presidential_spark.sources.changefeed import (
-        keyed_change_rows,
-    )
-
-    return keyed_change_rows(old, new, keys, cols, "_snapshot_id", ver)
+    old = _read(removed + both_affected_par, par_entries, par_dels)
+    new = _read(added + both_affected_cur, cur_entries, cur_dels)
+    return derive(old, new, keys, cols, "_snapshot_id", ver)
 
 
 def _ancestor_ids(meta: dict, head_id: int) -> set[int]:
@@ -2709,21 +2676,15 @@ def iceberg_table_changes(
         for s in in_range
         if (s.get("summary") or {}).get("operation") != "replace"
     ]
-    if not frames:
-        ice_schema = _schema_for(meta, meta.get("current-schema-id", 0))
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                list(_schema_to_spark(ice_schema).fields)
-                + [
-                    T.StructField("_change_type", T.StringType(), False),
-                    T.StructField("_snapshot_id", T.LongType(), False),
-                ]
-            ),
-        )
-    from functools import reduce as _reduce
-
-    return _reduce(DataFrame.unionByName, frames)
+    return range_union(
+        spark,
+        frames,
+        lambda: _schema_to_spark(
+            _schema_for(meta, meta.get("current-schema-id", 0))
+        ),
+        "_snapshot_id",
+        T.LongType(),
+    )
 
 
 def read_iceberg_incremental(
