@@ -42,10 +42,11 @@ coordinator (documented limitation, same as open-source delta-rs).
 
 Scale notes: log replay is O(#actions since checkpoint) driver-side
 metadata work — the same cost the real Delta client pays; data stays
-distributed (one `spark.read.parquet` per partition-value group, since
-partition values are log metadata, not file content). Statistics-based
-file skipping (per-file min/max) is the one read-path optimization not
-implemented; filters still prune via parquet row-group stats.
+distributed (partition values are log metadata, not file content, and
+are injected by the shared adaptive scan in `partition_scan.py`).
+Statistics-based file skipping (per-file min/max) is the one read-path
+optimization not implemented; filters still prune via parquet
+row-group stats.
 """
 
 from __future__ import annotations
@@ -65,12 +66,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from sparkstreamingtwitter_presidential_spark.sources import partition_scan
 from sparkstreamingtwitter_presidential_spark.sources._fs import put_if_absent
 from sparkstreamingtwitter_presidential_spark.sources.changefeed import (
     derive,
     insert_rows,
     range_union,
     require_keys,
+)
+from sparkstreamingtwitter_presidential_spark.sources.partition_scan import (
+    _norm_path,
+    _norm_path_col,
 )
 
 _LOG_DIR = "_delta_log"
@@ -954,11 +960,6 @@ def _dv_filter_for(
     one for reads, a commit's own sides for change derivation)."""
     if not dv_adds:
         return None
-    from sparkstreamingtwitter_presidential_spark.sources.iceberg import (
-        _norm_path,
-        _norm_path_col,
-    )
-
     build = dv_pairs_frame(
         spark,
         path,
@@ -1023,12 +1024,10 @@ def _read_adds(
     extra_phys: Sequence[StructField] = (),
 ) -> DataFrame:
     """The rows of the data (or cdc) files ``files`` (relative path ->
-    add or cdc action) under ``snap``'s LOGICAL schema: one parquet
-    scan per distinct partition tuple under the PHYSICAL column names
-    the files store, aliased back to logical, partition values injected
-    as literals cast to their declared types (the log's values are
-    authoritative; a partition filter constant-folds against them, so
-    Catalyst prunes whole branches plan-time), unioned.
+    add or cdc action) under ``snap``'s LOGICAL schema: the files
+    grouped by partition tuple, read by :func:`partition_scan.scan`
+    under the PHYSICAL column names they store (the log's partition
+    values are authoritative), then aliased back to logical.
 
     ``hook`` runs on each RAW scan, while ``_metadata`` is reachable —
     the deletion-vector filter, or tag columns (which it appends and
@@ -1036,41 +1035,28 @@ def _read_adds(
     files verbatim and kept after the table columns."""
     schema = snap.schema
     assert schema is not None
-    mapping = _column_mapping(snap)
-    phys = (lambda c: mapping[c]) if mapping else (lambda c: c)
-    data_fields = [f for f in schema.fields if f.name not in snap.partition_columns]
-    extra = [f.name for f in extra_phys]
     if not files:
         return spark.createDataFrame(
             [], StructType(list(schema.fields) + list(extra_phys))
         )
-    scan_schema = StructType(
-        [
-            StructField(phys(f.name), f.dataType, f.nullable)
-            for f in data_fields
-        ]
-        + list(extra_phys)
+    mapping = _column_mapping(snap)
+    phys = (lambda c: mapping[c]) if mapping else (lambda c: c)
+    df = partition_scan.scan(
+        spark,
+        _partition_groups(path, snap, files),
+        StructType(
+            [StructField(phys(f.name), f.dataType, f.nullable) for f in schema.fields]
+            + list(extra_phys)
+        ),
+        [phys(c) for c in snap.partition_columns],
+        hook,
     )
-    part_types = {
-        f.name: f.dataType for f in schema.fields if f.name in snap.partition_columns
-    }
-    parts = []
-    groups = _partition_groups(path, snap, files)
-    for key, paths in sorted(groups.items(), key=lambda kv: tuple(map(str, kv[0]))):
-        raw = spark.read.schema(scan_schema).parquet(*sorted(paths))
-        df = hook(raw) if hook is not None else raw
-        tags = [c for c in df.columns if c not in raw.columns]
-        df = df.select(
-            *[F.col(phys(f.name)).alias(f.name) for f in data_fields],
-            *extra,
-            *tags,
-        )
-        for col, val in zip(snap.partition_columns, key):
-            # Protocol: partition values serialize as strings; NULL is
-            # the JSON null. Cast back to the declared type.
-            df = df.withColumn(col, F.lit(val).cast(part_types[col]))
-        parts.append(df.select(*[f.name for f in schema.fields], *extra, *tags))
-    return reduce(DataFrame.unionByName, parts)
+    if not mapping:
+        return df
+    return df.select(
+        *[F.col(phys(f.name)).alias(f.name) for f in schema.fields],
+        *df.columns[len(schema.fields):],
+    )
 
 
 def read_delta(
@@ -1083,9 +1069,9 @@ def read_delta(
     """Snapshot read of a Delta table (optionally a past ``version``).
 
     Data columns come from the parquet files under the log's declared
-    schema; partition columns are injected from the log's
-    ``partitionValues`` (cast to the declared types) — one parquet read
-    per distinct partition tuple, unioned (:func:`_read_adds`).
+    schema; partition columns come from the log's ``partitionValues``
+    (cast to the declared types) through the adaptive partitioned scan
+    (:func:`_read_adds`, :mod:`partition_scan`).
 
     ``skip_ranges`` ({col: (lo, hi)}, None = open end) prunes files by
     the log's per-file min/max `stats` BEFORE Spark ever lists them —
@@ -1104,89 +1090,22 @@ def read_delta(
             raise ValueError("pass either version or timestamp, not both")
         version = version_at_timestamp(path, timestamp)
     snap = _replay_log(path, version)
-    mapping = _column_mapping(snap)
     if skip_ranges:
         # mapped tables store stats under PHYSICAL names — translate
         # the user's logical-keyed ranges through the mapping before
         # comparing (r9; previously mapped tables skipped skipping
         # entirely). Unknown logical names pass through unchanged and
         # prove nothing, same as any unknown column.
-        eff_ranges = (
-            {mapping.get(c, c): rng for c, rng in skip_ranges.items()}
-            if mapping
-            else skip_ranges
-        )
+        mapping = _column_mapping(snap) or {}
+        eff_ranges = {mapping.get(c, c): rng for c, rng in skip_ranges.items()}
         snap.files = {
             p: a
             for p, a in snap.files.items()
             if not file_skips(a, eff_ranges)
         }
-    schema = snap.schema
-    assert schema is not None
-    dv_apply = _dv_filter(spark, path, snap)
-    groups = _partition_groups(path, snap, snap.files)
-
-    # Adaptive, matching the Iceberg twin (iceberg._read_files): up to
-    # 32 distinct tuples the literal union wins (Catalyst constant-
-    # folds partition filters against the literals, pruning branches
-    # plan-time); above it plan WIDTH is the enemy — reconstruct the
-    # partition values JVM-side from _metadata.file_path (the hive
-    # col=val layout _stage_files produces) in ONE scan, so a
-    # 1000-partition full scan is a single scan node. Null partition
-    # values or layout-less paths (foreign writers) keep the union.
-    fast_ok = (
-        mapping is None
-        and len(groups) > 32
-        and all(v is not None for key in groups for v in key)
-        and all(
-            f"/{c}=" in p
-            for paths in groups.values()
-            for p in paths
-            for c in snap.partition_columns
-        )
+    return _read_adds(
+        spark, path, snap, snap.files, hook=_dv_filter(spark, path, snap)
     )
-    if fast_ok:
-        # The log's partitionValues are AUTHORITATIVE (Delta spec:
-        # readers must not infer values from paths — dir names are not
-        # required to agree). Before trusting the path-derived fast
-        # read, verify driver-side (one string compare per file) that
-        # every /col=val/ segment decodes to EXACTLY the log's value;
-        # a foreign table whose layout disagrees with its log falls
-        # back to the literal union, which reads only log values.
-        for p, a in snap.files.items():
-            pv = a.get("partitionValues", {})
-            rel = "/" + urllib.parse.unquote(p)
-            for c in snap.partition_columns:
-                m = _re.search(f"/{_re.escape(c)}=([^/]+)/", rel)
-                if m is None or urllib.parse.unquote(m.group(1)) != pv.get(c):
-                    fast_ok = False
-                    break
-            if not fast_ok:
-                break
-    if not fast_ok:
-        return _read_adds(spark, path, snap, snap.files, hook=dv_apply)
-
-    df = spark.read.schema(StructType(
-        [f for f in schema.fields if f.name not in snap.partition_columns]
-    )).parquet(*sorted(p for paths in groups.values() for p in paths))
-    if dv_apply is not None:
-        df = dv_apply(df)
-
-    def unesc(col):
-        # '+' is literal in both hive and URI path encoding;
-        # java URLDecoder would turn it into a space
-        return F.url_decode(F.regexp_replace(col, r"\+", "%2B"))
-
-    for col in snap.partition_columns:
-        seg = F.regexp_extract(
-            F.col("_metadata.file_path"),
-            f"/{_re.escape(col)}=([^/]+)/",
-            1,
-        )
-        # file_path is a URI: hive-escaped dir name, URI-encoded
-        # on top — invert both layers
-        df = df.withColumn(col, unesc(unesc(seg)).cast(schema[col].dataType))
-    return df.select(*[f.name for f in schema.fields])
 
 
 def delta_row_changes(

@@ -77,6 +77,7 @@ import re as _re_mod
 import time
 import urllib.parse
 import uuid
+from functools import reduce
 from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -94,6 +95,11 @@ from sparkstreamingtwitter_presidential_spark.sources.changefeed import (
     insert_rows,
     range_union,
     require_keys,
+)
+from sparkstreamingtwitter_presidential_spark.sources import partition_scan
+from sparkstreamingtwitter_presidential_spark.sources.partition_scan import (
+    _norm_path,
+    _norm_path_col,
 )
 from sparkstreamingtwitter_presidential_spark.sources.row_dml import (
     affected_files,
@@ -113,10 +119,6 @@ _POS_COL = "__dv_pos"
 _VERSION_HINT = "version-hint.text"
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 _FILE_COL = "__iceberg_file"
-# partitioned reads: literal-union (plan-time pruning) up to this many
-# distinct partition tuples, single path-derived scan above (plan
-# width independent of partition count) — see _read_files
-_UNION_MAX_GROUPS = 32
 
 
 class IcebergCommitConflict(RuntimeError):
@@ -1374,26 +1376,6 @@ def _resolve_lineage(
     )
 
 
-_FILE_SCHEME_RE = _re_mod.compile(r"^file:/*")
-
-
-def _norm_path(p: str) -> str:
-    """Normalize a file path for position-delete matching: strip the
-    file: scheme (any slash count) and undo URI %-encoding. Driver-side
-    twin of _norm_path_col — both sides of the (path, pos) join must
-    agree byte-for-byte. Hot on the driver pair-build loop (once per
-    delete row): precompiled pattern, no per-call imports."""
-    return urllib.parse.unquote(_FILE_SCHEME_RE.sub("/", p))
-
-
-def _norm_path_col(col):
-    """Column twin of _norm_path (for `_metadata.file_path` and the
-    file_path column inside position-delete files). '+' is literal in
-    paths; java URLDecoder would eat it — pre-escape."""
-    stripped = F.regexp_replace(col, r"^file:/*", "/")
-    return F.url_decode(F.regexp_replace(stripped, r"\+", "%2B"))
-
-
 _PAIRS_DRIVER_MAX = 100_000  # rows; above this the pair build distributes
 
 
@@ -1850,55 +1832,30 @@ def _read_files(
     scan_filter: Any | None = None,
     with_path_pos: bool = False,
 ) -> DataFrame:
-    """Distributed scan of ``files`` (data_file dicts) under the TABLE
-    schema. Unpartitioned: one parquet scan over the file list.
-    Partitioned, ADAPTIVE by distinct-tuple count: up to
-    _UNION_MAX_GROUPS the scan is a group-by-tuple union with typed
-    literals (`delta_dml._scan_with_file`'s shape — Catalyst constant-
-    folds partition filters against the literals and prunes whole
-    branches plan-time; post-skip_ranges reads land here); above it
-    the FAST path reconstructs partition values JVM-side from
-    `_metadata.file_path` (the hive `col=val` staging layout) in ONE
-    scan — plan width independent of partition count, so a
-    1000-partition full-table scan is a single scan node, not a
-    1000-branch union. Files whose paths lack the layout (foreign
-    tables) or tables with REQUIRED partition columns (path parsing
-    analyzes nullable) always take the union. ``with_file`` adds the
-    file's basename column for DML's affected-file probe;
-    ``with_path_pos`` (r11) adds the NORMALIZED full path and in-file
-    row position (the DV DML / row-lineage probe shape) — riding the
-    same adaptive machinery, so a 1000-partition DV delete's probe
-    stays one scan node too.
-    ``scan_filter`` (a DataFrame->DataFrame closure built by
-    _row_delete_filter) applies v2 row-level deletes to each RAW scan
-    — per branch, because the `_metadata` pseudo-columns it joins on
-    are only reachable on the direct file scan.
+    """Distributed scan of ``files`` (data_file dicts, all written under
+    the spec ``part_fields`` resolves) under ``spark_schema``: the
+    adaptive :func:`partition_scan.scan` over the files grouped by
+    IDENTITY partition tuple, manifest values converted to Python
+    literals. The spec requires data files to carry the source columns
+    of every non-identity transform, so those read like plain data
+    columns (a purely transform-partitioned table is one flat scan —
+    transform tuples matter to PRUNING, not reconstruction).
 
-    Only IDENTITY partition values are injected: the spec requires
-    data files to carry the source columns of every non-identity
-    transform, so transform-partitioned branches read them like plain
-    data columns (a purely transform-partitioned table is one flat
-    scan — transform tuples matter to PRUNING, not reconstruction)."""
-
-    def _minus_deletes(scan: DataFrame) -> DataFrame:
-        return scan_filter(scan) if scan_filter is not None else scan
-
-    cols = [f.name for f in spark_schema.fields]
-    base_col = F.element_at(
-        F.split(F.col("_metadata.file_path"), "/"), -1
-    ).alias(_FILE_COL)
-    pp_cols = [
-        _norm_path_col(F.col("_metadata.file_path")).alias(_ABS_PATH_COL),
-        F.col("_metadata.row_index").cast("long").alias(_POS_COL),
-    ]
-    extra = ([base_col] if with_file else []) + (
-        pp_cols if with_path_pos else []
-    )
-    out_cols = (
-        cols
-        + ([_FILE_COL] if with_file else [])
-        + ([_ABS_PATH_COL, _POS_COL] if with_path_pos else [])
-    )
+    ``with_file`` adds the file's basename column for DML's
+    affected-file probe; ``with_path_pos`` adds the NORMALIZED full
+    path and in-file row position (the DV DML / row-lineage probe
+    shape). ``scan_filter`` (a DataFrame->DataFrame closure built by
+    _row_delete_filter) applies v2 row-level deletes to each RAW scan,
+    where the `_metadata` pseudo-columns it joins on are reachable."""
+    path = F.col("_metadata.file_path")
+    tags = []
+    if with_file:
+        tags.append(F.element_at(F.split(path, "/"), -1).alias(_FILE_COL))
+    if with_path_pos:
+        tags += [
+            _norm_path_col(path).alias(_ABS_PATH_COL),
+            F.col("_metadata.row_index").cast("long").alias(_POS_COL),
+        ]
     if not files:
         df = spark.createDataFrame([], spark_schema)
         if with_file:
@@ -1908,152 +1865,23 @@ def _read_files(
                 _ABS_PATH_COL, F.lit(None).cast("string")
             ).withColumn(_POS_COL, F.lit(None).cast("long"))
         return df
-    part_fields = _identity_fields(part_fields)
-    if not part_fields:
-        df = _minus_deletes(
-            spark.read.schema(spark_schema).parquet(
-                *[f["file_path"] for f in files]
-            )
-        )
-        return df.select(*cols, *extra).select(*out_cols) if extra else df.select(*cols)
-    pnames = {pf["source_name"] for pf in part_fields}
-    data_schema = T.StructType(
-        [f for f in spark_schema.fields if f.name not in pnames]
-    )
-
-    n_groups = len(
-        {
-            tuple((f.get("partition") or {}).get(pf["name"]) for pf in part_fields)
-            for f in files
-        }
-    )
-    fields_by_name = {f.name: f for f in spark_schema.fields}
-    # adaptive: up to _UNION_MAX_GROUPS distinct tuples the literal
-    # union wins (Catalyst constant-folds partition filters against
-    # the literals, pruning whole branches plan-time — and narrow
-    # unions are cheap); above it, plan WIDTH is the enemy and pruning
-    # belongs to skip_ranges (metadata-side, strictly better), so the
-    # single path-derived scan takes over
-    hive_ok = (
-        n_groups > _UNION_MAX_GROUPS
-        and all(
-            fields_by_name[pf["source_name"]].nullable for pf in part_fields
-        )
-        and all(
-            f"/{pf['source_name']}=" in f["file_path"]
-            for f in files
-            for pf in part_fields
-        )
-    )
-    if hive_ok:
-        # The manifest's partition tuples are AUTHORITATIVE (the spec's
-        # identity allowance) — dir names are not required to agree.
-        # Before trusting the path-derived fast read, verify driver-
-        # side (one string compare per file) that every /col=val/
-        # segment decodes to EXACTLY the manifest value; any
-        # disagreement (foreign layouts, null values, types whose
-        # string form differs) falls back to the literal union, which
-        # reads only manifest values.
-        import re as _vre
-        import urllib.parse as _vup
-
-        for f in files:
-            part = f.get("partition") or {}
-            for pf in part_fields:
-                m = _vre.search(
-                    f"/{_vre.escape(pf['source_name'])}=([^/]+)/",
-                    f["file_path"],
-                )
-                want = _avro_partition_to_python(
-                    pf["type"], part.get(pf["name"])
-                )
-                if (
-                    m is None
-                    or want is None
-                    or _vup.unquote(m.group(1)) != str(want)
-                ):
-                    hive_ok = False
-                    break
-            if not hive_ok:
-                break
-    if hive_ok:
-        df = spark.read.schema(data_schema).parquet(
-            *sorted(f["file_path"] for f in files)
-        )
-        if extra:
-            df = df.select("*", *extra)
-        import re as _re
-
-        def unesc(col):
-            # url_decode with '+' treated as a LITERAL (hive and URI
-            # path encoding both leave '+' unescaped; java URLDecoder
-            # would turn it into a space) — pre-escape it to %2B
-            return F.url_decode(F.regexp_replace(col, r"\+", "%2B"))
-
-        for pf in part_fields:
-            seg = F.regexp_extract(
-                F.col("_metadata.file_path"),
-                f"/{_re.escape(pf['source_name'])}=([^/]+)/",
-                1,
-            )
-            # _metadata.file_path is a URI: the dir name is
-            # hive-ESCAPED at write, then URI-ENCODED by the path —
-            # invert both layers (URI first, then hive's %XX)
-            raw = unesc(unesc(seg))
-            df = df.withColumn(
-                pf["source_name"],
-                raw.cast(fields_by_name[pf["source_name"]].dataType),
-            )
-        # delete filter LAST: its joins leave `_metadata` ambiguous,
-        # so every _metadata-derived column must exist already
-        df = _minus_deletes(df)
-        return df.select(*out_cols)
-
+    idf = _identity_fields(part_fields)
     groups: dict[tuple, list[str]] = {}
     for f in files:
         part = f.get("partition") or {}
-        key = tuple(part.get(pf["name"]) for pf in part_fields)
+        key = tuple(
+            _avro_partition_to_python(pf["type"], part.get(pf["name"]))
+            for pf in idf
+        )
         groups.setdefault(key, []).append(f["file_path"])
-    parts = []
-    for key, paths in sorted(
-        groups.items(), key=lambda kv: tuple(map(str, kv[0]))
-    ):
-        df = _minus_deletes(
-            spark.read.schema(data_schema).parquet(*sorted(paths))
-        )
-        if extra:
-            df = df.select("*", *extra)
-        for pf, av in zip(part_fields, key):
-            fld = next(
-                f for f in spark_schema.fields if f.name == pf["source_name"]
-            )
-            df = df.withColumn(
-                pf["source_name"],
-                F.lit(_avro_partition_to_python(pf["type"], av)).cast(
-                    fld.dataType
-                ),
-            )
-        parts.append(df.select(*out_cols))
-    from functools import reduce
 
-    # injected literals analyze non-nullable; prepending a zero-row
-    # frame with the TABLE schema restores its nullability (union
-    # nullability is the OR of the branches) so partitioned reads stay
-    # schema-stable like read_delta — an empty LocalRelation, no cost
-    target = T.StructType(
-        list(spark_schema.fields)
-        + ([T.StructField(_FILE_COL, T.StringType())] if with_file else [])
-        + (
-            [
-                T.StructField(_ABS_PATH_COL, T.StringType()),
-                T.StructField(_POS_COL, T.LongType()),
-            ]
-            if with_path_pos
-            else []
-        )
+    def hook(raw: DataFrame) -> DataFrame:
+        out = raw.select("*", *tags) if tags else raw
+        return scan_filter(out) if scan_filter is not None else out
+
+    return partition_scan.scan(
+        spark, groups, spark_schema, [pf["source_name"] for pf in idf], hook
     )
-    empty = spark.createDataFrame([], target)
-    return reduce(DataFrame.unionByName, [empty] + parts)
 
 
 def snapshot_at_timestamp(path: str, ts: Any) -> int:
@@ -2171,8 +1999,7 @@ def read_iceberg(
         else None
     )
     return _read_entries_projected(
-        spark, meta, entries, ice_schema, spark_schema, part_fields,
-        scan_filter=flt,
+        spark, meta, entries, ice_schema, spark_schema, scan_filter=flt
     )
 
 
@@ -2193,7 +2020,6 @@ def _read_entries_projected(
     entries: list[dict],
     ice_schema: dict,
     spark_schema: T.StructType,
-    part_fields: list[dict],
     scan_filter: Any | None = None,
 ) -> DataFrame:
     """Field-id-based column projection (spec §Column Projection): a
@@ -2206,28 +2032,17 @@ def _read_entries_projected(
     (a field-id the writing schema lacks scans as NULL — the spec's
     added-column rule). Top-level fields only; a same-id TYPE change
     widens through the spec's safe promotions and refuses otherwise.
-    Partitioned tables (r8) take the SAME per-writing-schema grouping:
-    each renamed group scans under its OWN names with partition values
-    injected under the writing schema's source name (field-id keyed —
-    `source_id` resolves the spec field against the writing schema),
-    then aliases every column to the read schema's names — lifting the
-    r7 refusal (rename_column_iceberg still refuses WRITING a
-    partition-source rename; this path is for foreign tables)."""
-    files = [e["data_file"] for e in entries]
-    if not entries:
-        return _read_files(
-            spark, files, spark_schema, part_fields, scan_filter=scan_filter
-        )
+    Every group reads each file under its own writing spec
+    (:func:`_spec_groups`); a renamed group injects partition values
+    under the writing schema's source name (``source_id`` resolves the
+    spec field against the writing schema), then aliases every column
+    to the read schema's names."""
     read_sid = ice_schema.get("schema-id", 0)
-    default_spec_id = meta.get("default-spec-id", 0)
     defaulted = {
         f["id"] for f in ice_schema["fields"] if "initial-default" in f
     }
     known_snaps = {s["snapshot-id"] for s in meta.get("snapshots", [])}
-    # group by (writing schema, writing PARTITION SPEC) — after spec
-    # evolution (r12-late) each group injects/reads partition values
-    # under the spec its manifests were written with
-    by_sid: dict[tuple[int, int], list[dict]] = {}
+    by_sid: dict[int, list[dict]] = {}
     for e in entries:
         if defaulted and e["snapshot_id"] not in known_snaps:
             # the adding snapshot expired: the writing schema is
@@ -2241,25 +2056,7 @@ def _read_entries_projected(
                 "expired snapshot — its writing schema is unknowable, "
                 "so the default-vs-NULL decision would be a guess"
             )
-        sid = _writing_schema_id(meta, e, read_sid)
-        spec_sid = e.get("spec_id", default_spec_id)
-        by_sid.setdefault((sid, spec_sid), []).append(e["data_file"])
-
-    spec_pf: dict[int, list[dict]] = {default_spec_id: part_fields}
-
-    def _pf_for(spec_sid: int) -> list[dict]:
-        if spec_sid not in spec_pf:
-            spec_pf[spec_sid] = _partition_fields(
-                meta, ice_schema, spec_sid
-            )
-        return spec_pf[spec_sid]
-
-    mixed_specs = any(
-        spec_sid != default_spec_id
-        and _spec_fields_by_id(meta, spec_sid)
-        != _default_spec_fields(meta)
-        for _s, spec_sid in by_sid
-    )
+        by_sid.setdefault(_writing_schema_id(meta, e, read_sid), []).append(e)
 
     def needs_remap(w_ice: dict) -> bool:
         w_by_id = {f["id"]: f for f in w_ice["fields"]}
@@ -2275,113 +2072,109 @@ def _read_entries_projected(
 
     schemas = {
         sid: (_schema_for(meta, sid) if sid != read_sid else ice_schema)
-        for sid, _spec in by_sid
+        for sid in by_sid
     }
-    if not mixed_specs and not any(
-        needs_remap(w) for w in schemas.values()
-    ):
-        return _read_files(
-            spark, files, spark_schema, part_fields, scan_filter=scan_filter
+    if not any(needs_remap(w) for w in schemas.values()):
+        return _read_entries(
+            spark, meta, ice_schema, entries, spark_schema,
+            scan_filter=scan_filter,
         )
 
     parts = []
-    for (sid, spec_sid), group in sorted(by_sid.items()):
-        grp_pf = _pf_for(spec_sid)
-        psrc_ids = {pf["source_id"] for pf in grp_pf}
+    for sid, group in sorted(by_sid.items()):
         w_ice = schemas[sid]
         if not needs_remap(w_ice):
             parts.append(
-                _read_files(
-                    spark, group, spark_schema, grp_pf,
+                _read_entries(
+                    spark, meta, ice_schema, group, spark_schema,
                     scan_filter=scan_filter,
                 )
             )
             continue
         w_by_id = {f["id"]: f for f in w_ice["fields"]}
-        scan_fields, sel = [], []
-        for f in ice_schema["fields"]:
-            wf = w_by_id.get(f["id"])
-            if wf is None and f["id"] not in psrc_ids:
-                # column added after these files were written: the
-                # field's initial-default when declared (v3, r11 —
-                # injected as a typed constant, the same mechanism as
-                # partition values), else NULL (the spec's
-                # added-column rule)
-                if "initial-default" in f:
-                    lit = _default_literal(
-                        f["type"], f["initial-default"], f["name"]
+        for _spec, grp_pf, grp in _spec_groups(meta, ice_schema, group):
+            psrc_ids = {pf["source_id"] for pf in grp_pf}
+            scan_fields, sel = [], []
+            for f in ice_schema["fields"]:
+                wf = w_by_id.get(f["id"])
+                if wf is None and f["id"] not in psrc_ids:
+                    # column added after these files were written: the
+                    # field's initial-default when declared (v3, r11 —
+                    # injected as a typed constant, the same mechanism
+                    # as partition values), else NULL (the spec's
+                    # added-column rule)
+                    if "initial-default" in f:
+                        lit = _default_literal(
+                            f["type"], f["initial-default"], f["name"]
+                        )
+                    else:
+                        lit = F.lit(None)
+                    sel.append(
+                        lit.cast(_iceberg_to_spark_type(f["type"]))
+                        .alias(f["name"])
                     )
-                else:
-                    lit = F.lit(None)
-                sel.append(
-                    lit.cast(_iceberg_to_spark_type(f["type"]))
-                    .alias(f["name"])
-                )
-                continue
-            if wf is None:
-                # a partition SOURCE added later: inject-only — keep it
-                # in the scan schema (absent from the files) so
-                # _read_files' manifest injection survives the select
+                    continue
+                if wf is None:
+                    # a partition SOURCE added later: inject-only — keep
+                    # it in the scan schema (absent from the files) so
+                    # _read_files' manifest injection survives the select
+                    scan_fields.append(
+                        T.StructField(
+                            f["name"], _iceberg_to_spark_type(f["type"]), True
+                        )
+                    )
+                    sel.append(F.col(f["name"]))
+                    continue
+                if wf["type"] != f["type"] and not _safe_promotion(
+                    wf["type"], f["type"]
+                ):
+                    raise NotImplementedError(
+                        f"field {f['id']} changed type "
+                        f"{wf['type']!r} -> {f['type']!r}; only the spec's "
+                        "safe promotions (int->long, float->double, "
+                        "decimal precision widening at equal scale) are "
+                        "supported by this native reader"
+                    )
                 scan_fields.append(
                     T.StructField(
-                        f["name"], _iceberg_to_spark_type(f["type"]), True
+                        wf["name"],
+                        _iceberg_to_spark_type(wf["type"]),
+                        nullable=not wf.get("required", False),
                     )
                 )
-                sel.append(F.col(f["name"]))
-                continue
-            if wf["type"] != f["type"] and not _safe_promotion(
-                wf["type"], f["type"]
-            ):
+                col = F.col(wf["name"])
+                if wf["type"] != f["type"]:
+                    # spec-safe promotion: scan under the WRITING type,
+                    # widen to the read type (lossless by construction)
+                    col = col.cast(_iceberg_to_spark_type(f["type"]))
+                sel.append(col.alias(f["name"]))
+            names = [sf.name for sf in scan_fields]
+            if len(names) != len(set(names)):
                 raise NotImplementedError(
-                    f"field {f['id']} changed type "
-                    f"{wf['type']!r} -> {f['type']!r}; only the spec's "
-                    "safe promotions (int->long, float->double, decimal "
-                    "precision widening at equal scale) are supported "
-                    "by this native reader"
+                    "field-id projection hit a writing-name/current-name "
+                    "collision (a column was renamed and its old name "
+                    "reused); refusing rather than scanning ambiguously"
                 )
-            scan_fields.append(
-                T.StructField(
-                    wf["name"],
-                    _iceberg_to_spark_type(wf["type"]),
-                    nullable=not wf.get("required", False),
-                )
+            # partition values inject under the WRITING schema's source
+            # names and types (field-id keyed); the select then aliases
+            # them to the read schema
+            w_pf = [
+                {
+                    **pf,
+                    "source_name": (
+                        w_by_id.get(pf["source_id"]) or {"name": pf["source_name"]}
+                    )["name"],
+                    "type": (
+                        w_by_id.get(pf["source_id"]) or {"type": pf["type"]}
+                    )["type"],
+                }
+                for pf in grp_pf
+            ]
+            df = _read_files(
+                spark, [e["data_file"] for e in grp],
+                T.StructType(scan_fields), w_pf, scan_filter=scan_filter,
             )
-            col = F.col(wf["name"])
-            if wf["type"] != f["type"]:
-                # spec-safe promotion: scan under the WRITING type,
-                # widen to the read type (lossless by construction)
-                col = col.cast(_iceberg_to_spark_type(f["type"]))
-            sel.append(col.alias(f["name"]))
-        names = [sf.name for sf in scan_fields]
-        if len(names) != len(set(names)):
-            raise NotImplementedError(
-                "field-id projection hit a writing-name/current-name "
-                "collision (a column was renamed and its old name "
-                "reused); refusing rather than scanning ambiguously"
-            )
-        # partition values inject under the WRITING schema's source
-        # names and types (field-id keyed); the select then aliases
-        # them to the read schema — what lifts the r7 partitioned-
-        # rename refusal
-        w_pf = [
-            {
-                **pf,
-                "source_name": (
-                    w_by_id.get(pf["source_id"]) or {"name": pf["source_name"]}
-                )["name"],
-                "type": (
-                    w_by_id.get(pf["source_id"]) or {"type": pf["type"]}
-                )["type"],
-            }
-            for pf in grp_pf
-        ]
-        df = _read_files(
-            spark, group, T.StructType(scan_fields), w_pf,
-            scan_filter=scan_filter,
-        )
-        parts.append(df.select(*sel))
-    from functools import reduce
-
+            parts.append(df.select(*sel))
     empty = spark.createDataFrame([], spark_schema)
     return reduce(DataFrame.unionByName, [empty] + parts)
 
@@ -2441,7 +2234,6 @@ def iceberg_row_changes(
     ice_schema = _schema_for(
         meta, snap.get("schema-id", meta.get("current-schema-id", 0))
     )
-    part_fields = _partition_fields(meta, ice_schema)
     spark_schema = _schema_to_spark(ice_schema)
     cols = [f.name for f in spark_schema.fields]
     if op == "replace":
@@ -2590,12 +2382,8 @@ def iceberg_row_changes(
             if side_dels
             else None
         )
-        return _read_files(
-            spark,
-            [r["data_file"] for r in recs],
-            spark_schema,
-            part_fields,
-            scan_filter=flt,
+        return _read_entries(
+            spark, meta, ice_schema, recs, spark_schema, scan_filter=flt
         )
 
     ver = F.lit(int(sid)).cast("long")
@@ -2739,8 +2527,6 @@ def read_iceberg_incremental(
                 "full snapshots across it instead"
             )
     ice_schema = _schema_for(meta, meta.get("current-schema-id", 0))
-    part_fields = _partition_fields(meta, ice_schema)
-    spark_schema = _schema_to_spark(ice_schema)
     _, _, manifests = read_container(hi["manifest-list"])
     files: list[dict] = []
     for m in manifests:
@@ -2779,34 +2565,9 @@ def read_iceberg_incremental(
     # incremental scans project by name; refuse pre-rename files
     # rather than reading NULLs for a renamed column
     _refuse_renamed_files(meta, files, ice_schema, "incremental scan")
-    # a range crossing a partition-spec evolution scans per spec
-    # generation (identity injection keys on each file's OWN spec —
-    # the snapshot-read rule, r12-late), unioned back together
-    default_spec = meta.get("default-spec-id", 0)
-    by_spec: dict[int, list[dict]] = {}
-    for f in files:
-        by_spec.setdefault(f.get("spec_id", default_spec), []).append(
-            f["data_file"]
-        )
-    if set(by_spec) <= {default_spec}:
-        return _read_files(
-            spark, by_spec.get(default_spec, []), spark_schema, part_fields
-        )
-    from functools import reduce
-
-    parts = [
-        _read_files(
-            spark,
-            grp,
-            spark_schema,
-            part_fields
-            if sid == default_spec
-            else _partition_fields(meta, ice_schema, sid),
-        )
-        for sid, grp in sorted(by_spec.items())
-    ]
-    empty = spark.createDataFrame([], spark_schema)
-    return reduce(DataFrame.unionByName, [empty] + parts)
+    # a range crossing a partition-spec evolution reads each file under
+    # its own spec (the snapshot-read rule)
+    return _read_entries(spark, meta, ice_schema, files, _schema_to_spark(ice_schema))
 
 
 def snapshot_infos(path: str) -> list[dict]:
@@ -4501,52 +4262,41 @@ def _group_entries_by_spec(
     return out
 
 
-def _scan_entries_mixed_spec(
+def _spec_groups(
+    meta: dict, ice_schema: dict, entries: list[dict]
+) -> list[tuple[int, list[dict], list[dict]]]:
+    """``entries`` by effective writing spec (:func:`_group_entries_by_spec`),
+    in spec-id order: (spec id, that spec's partition fields resolved
+    against ``ice_schema``, its entries). After partition evolution old
+    files carry old-shaped tuples, so every read, DML scan and
+    row-change side reads each file under its OWN spec."""
+    return [
+        (sid, _partition_fields(meta, ice_schema, sid), grp)
+        for sid, grp in sorted(_group_entries_by_spec(meta, entries).items())
+    ]
+
+
+def _read_entries(
     spark: SparkSession,
     meta: dict,
     ice_schema: dict,
     entries: list[dict],
     scan_schema: T.StructType,
-    part_fields: list[dict],
-    with_file: bool = False,
-    scan_filter: Any | None = None,
-    with_path_pos: bool = False,
+    **kw: Any,
 ) -> DataFrame:
-    """`_read_files` generalized to a spec-evolved live set: one
-    branch per spec GENERATION (identity injection keyed on each
-    group's own writing spec — the snapshot-read rule), unioned back
-    under the one table schema. Single-spec tables pass straight
-    through to the one-scan path; plan width is bounded by the number
-    of spec generations, never by file count."""
-    by_spec = _group_entries_by_spec(meta, entries)
-    default_sid = meta.get("default-spec-id", 0)
-    if set(by_spec) <= {default_sid}:
-        return _read_files(
-            spark,
-            [e["data_file"] for e in entries],
-            scan_schema,
-            part_fields,
-            with_file=with_file,
-            scan_filter=scan_filter,
-            with_path_pos=with_path_pos,
-        )
-    from functools import reduce
-
-    parts = [
-        _read_files(
-            spark,
-            [e["data_file"] for e in grp],
-            scan_schema,
-            part_fields
-            if sid == default_sid
-            else _partition_fields(meta, ice_schema, sid),
-            with_file=with_file,
-            scan_filter=scan_filter,
-            with_path_pos=with_path_pos,
-        )
-        for sid, grp in sorted(by_spec.items())
-    ]
-    return reduce(DataFrame.unionByName, parts)
+    """:func:`_read_files` over resolved ``entries``, each file read
+    under its own writing spec: one branch per spec generation (never
+    per file), unioned under the one table schema. ``kw`` passes
+    through to _read_files."""
+    if not entries:
+        return _read_files(spark, [], scan_schema, [], **kw)
+    return reduce(
+        DataFrame.unionByName,
+        [
+            _read_files(spark, [e["data_file"] for e in grp], scan_schema, pf, **kw)
+            for _sid, pf, grp in _spec_groups(meta, ice_schema, entries)
+        ],
+    )
 
 
 class _DmlPlan(NamedTuple):
@@ -4620,13 +4370,12 @@ def _dml_plan(
     # spec (the real engines' row-level-operation contract), and
     # _commit_snapshot serializes carried old-spec entries into
     # per-spec manifests, so partition records never cross specs.
-    scan = _scan_entries_mixed_spec(
+    scan = _read_entries(
         spark,
         meta,
         ice_schema,
         entries,
         scan_schema,
-        part_fields,
         with_file=with_file,
         scan_filter=scan_filter,
         with_path_pos=fv3,
@@ -4809,21 +4558,19 @@ def delete_iceberg_positional(
     _refuse_renamed_files(meta, entries, ice_schema, "positional delete")
     if not entries:
         return snap["snapshot-id"]
-    # MIXED-SPEC tables (r14 — lifts the r12 _refuse_spec_evolution
-    # guard's last caller): groups key on (effective writing spec,
-    # partition tuple UNDER that spec) so identity injection follows
-    # each file's own layout, the emitted delete files are partition-
-    # scoped under the spec that scopes their referenced data files,
-    # and _commit_snapshot serializes them into per-spec delete
-    # manifests. Plan width stays the number of live (spec, partition)
-    # pairs, never file count.
+    # delete files are partition-scoped under the spec that scopes
+    # their referenced data files: groups key on (effective writing
+    # spec, partition tuple under that spec), and _commit_snapshot
+    # serializes them into per-spec delete manifests. ONE adaptive scan
+    # (one branch per spec generation, each read by partition_scan) does
+    # the matching, so a 1,000-partition point delete plans a handful
+    # of scan nodes; matched pairs route to their delete-file group by
+    # a BROADCAST map on file path, which is driver-known log metadata.
     default_sid = meta.get("default-spec-id", 0)
-    spec_pf: dict[int, list[dict]] = {default_sid: part_fields}
+    spec_pf: dict[int, list[dict]] = {}
     groups: dict[tuple, list[dict]] = {}
-    for sid, grp in _group_entries_by_spec(meta, entries).items():
-        if sid not in spec_pf:
-            spec_pf[sid] = _partition_fields(meta, ice_schema, sid)
-        pf_s = spec_pf[sid]
+    for sid, pf_s, grp in _spec_groups(meta, ice_schema, entries):
+        spec_pf[sid] = pf_s
         for e in grp:
             part = e["data_file"].get("partition") or {}
             key = (sid, tuple(part.get(pf["name"]) for pf in pf_s))
@@ -4831,23 +4578,8 @@ def delete_iceberg_positional(
     group_keys = sorted(
         groups, key=lambda k: (k[0], tuple(map(str, k[1])))
     )
-    # ONE adaptive scan does the matching (r14): _scan_entries_mixed_
-    # spec branches per SPEC GENERATION — inside each, the shared
-    # reader injects identity values by typed-literal union up to 32
-    # tuples and by path parsing above (plan width independent of
-    # partition count) — so a 1,000-partition point delete plans a
-    # handful of scan nodes, not one branch per tuple (the pre-r14
-    # shape, measured minutes of Catalyst time at 400 tuples). Matched
-    # pairs then route to their delete-file group by a BROADCAST map
-    # on file path, which is driver-known log metadata.
-    scan = _scan_entries_mixed_spec(
-        spark,
-        meta,
-        ice_schema,
-        entries,
-        spark_schema,
-        part_fields,
-        with_path_pos=True,
+    scan = _read_entries(
+        spark, meta, ice_schema, entries, spark_schema, with_path_pos=True
     )
     grp_map = spark.createDataFrame(
         [
@@ -4997,13 +4729,12 @@ def rewrite_position_deletes(spark: SparkSession, path: str) -> int:
         # injection under each file's own writing spec); the rewritten
         # survivors re-stage under the DEFAULT spec below, and the
         # untouched keep-entries serialize per-spec in _commit_snapshot
-        remaining = _scan_entries_mixed_spec(
+        remaining = _read_entries(
             spark,
             meta,
             ice_schema,
             hit,
             _lineage_scan_schema(spark_schema) if fv3 else spark_schema,
-            part_fields,
             scan_filter=flt,
             with_path_pos=fv3,
         )

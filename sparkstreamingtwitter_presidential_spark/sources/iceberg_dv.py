@@ -66,12 +66,14 @@ from sparkstreamingtwitter_presidential_spark.sources.iceberg import (
     _entries_and_deletes_for_snapshot,
     _identity_fields,
     _load_metadata,
-    _norm_path,
     _partition_fields,
     _POS_COL,
     _schema_for,
     _snapshot,
     _stage_plan_rows,
+)
+from sparkstreamingtwitter_presidential_spark.sources.partition_scan import (
+    _norm_path,
 )
 from sparkstreamingtwitter_presidential_spark.sources.puffin import (
     deserialize_dv_blob,

@@ -740,6 +740,42 @@ def test_read_delta_many_partitions_single_scan(spark, tmp_path):
     assert "Union" in plan2
 
 
+def test_read_delta_partitioned_schema_keeps_nullability(spark, tmp_path):
+    """The read schema is the written frame's at any tuple count: the
+    literal union (3 tuples) starts from an empty branch typed with the
+    table schema, so an injected partition literal does not turn a
+    nullable column non-nullable; the path-derived scan (40 tuples)
+    agrees. A REQUIRED partition column takes the union above 32 tuples
+    too (the path-derived column analyzes nullable) and stays
+    non-nullable — the Iceberg reader's rule, from the same scan."""
+    df = spark.createDataFrame(
+        [(i, f"p{i:02d}", float(i)) for i in range(40)],
+        "id long, part string, v double",
+    )
+    want = [(f.name, f.dataType, f.nullable) for f in df.schema.fields]
+    for n in (3, 40):
+        t = str(tmp_path / f"t{n}")
+        write_delta(df.filter(f"id < {n}"), t, partition_by=["part"])
+        back = read_delta(spark, t)
+        assert [(f.name, f.dataType, f.nullable) for f in back.schema.fields] == want, n
+        assert back.count() == n
+
+    req = spark.sql(
+        "SELECT id, concat('p', lpad(CAST(id AS STRING), 2, '0')) AS part "
+        "FROM range(40)"
+    )
+    assert not req.schema["part"].nullable
+    t = str(tmp_path / "req")
+    write_delta(req, t, partition_by=["part"])
+    back = read_delta(spark, t)
+    assert not back.schema["part"].nullable
+    plan = back._jdf.queryExecution().optimizedPlan().toString()
+    assert "Union" in plan  # the required column refused the single scan
+    assert sorted((r.id, r.part) for r in back.collect()) == sorted(
+        (r.id, r.part) for r in req.collect()
+    )
+
+
 def test_read_delta_path_layout_disagreeing_with_log_uses_log_values(
     spark, tmp_path
 ):

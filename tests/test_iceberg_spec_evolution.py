@@ -573,3 +573,30 @@ def test_positional_delete_across_mixed_specs(spark, tmp_path):
     assert not [m for m in manifests if m["content"] == 1]
     got = sorted((r.id, r.s, r.v) for r in read_iceberg(spark, t).collect())
     assert got == [(2, "b", 2.0), (3, "a", 3.0)]
+
+
+def test_row_changes_read_each_file_under_its_own_spec(spark, tmp_path):
+    """A delete after un-partitioning: the removed file was written
+    under the old identity spec (its `s` lives only in the manifest
+    tuple) and its rewrite under the new flat one. Each side reads
+    every file under its OWN spec, so the feed is the one delete — not
+    NULL `s` values and a spurious update pair for the carried rows."""
+    from sparkstreamingtwitter_presidential_spark.sources.iceberg import (
+        delete_iceberg,
+        iceberg_row_changes,
+    )
+
+    t = str(tmp_path / "t")
+    write_iceberg(
+        _df(spark, [(i, f"s{i % 2}", float(i)) for i in range(6)]),
+        t,
+        partition_by=["s"],
+    )
+    update_partition_spec(t, [])
+    write_iceberg(_df(spark, [(10, "s9", 10.0)]), t, mode="append")
+    sid = delete_iceberg(spark, t, "id = 3")
+    got = [
+        tuple(r)
+        for r in iceberg_row_changes(spark, t, sid, keys=["id"]).collect()
+    ]
+    assert got == [(3, "s1", 3.0, "delete", sid)]
